@@ -3,7 +3,7 @@ package graft.streaming
 import graft.Det
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY.md §2.7 flags streaming as absent
@@ -35,6 +35,78 @@ object StreamOps {
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "4")
     ss
+  }
+
+  /** Drains a bounded stream: AvailableNow runs the whole source as one
+    * bounded run and stops the query itself — no idle micro-batch
+    * polling after the data. Returns the stopped query, whose progress
+    * history stays readable.
+    */
+  private def drain(w: DataStreamWriter[_]): StreamingQuery = {
+    val q = w.trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+    q
+  }
+
+  /** How long a protocol-driven stream may take to flush its timer and
+    * timeout emissions after the last feed (see [[pollUntil]]).
+    */
+  private val PollBudgetMs = 120000L
+
+  /** Polls `q` until `done` holds. Timer and timeout flushes ride no-data
+    * micro-batches that processAllAvailable does not always wait for, so
+    * the protocol-driven streams re-poll until their sink accounts for
+    * everything fed. Past `budgetMs` this throws, naming the sink and the
+    * progress it reached — a partly flushed sink must never pass for a
+    * complete one.
+    */
+  private[graft] def pollUntil(q: StreamingQuery, sink: String,
+      budgetMs: Long = PollBudgetMs)(done: => Boolean): Unit = {
+    val deadline = System.currentTimeMillis() + budgetMs
+    while (!done) {
+      if (System.currentTimeMillis() >= deadline) {
+        val batch = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
+        throw new IllegalStateException(s"stream sink $sink not flushed " +
+          s"after $budgetMs ms: ${q.sparkSession.table(sink).count()} rows, " +
+          s"last batch $batch")
+      }
+      q.processAllAvailable(); Thread.sleep(50L)
+    }
+  }
+
+  /** A file-source feed for the protocol-driven streams, which ship their
+    * input in waves while the query runs (see [[withFeed]]).
+    */
+  private final class Feed(tag: String) {
+    val dir: java.nio.file.Path =
+      java.nio.file.Files.createTempDirectory(s"graft_${tag}feed")
+
+    /** Writes `df` as ONE parquet file into a private stage and moves it
+      * into the feed as `name`, so the source never lists a half-written
+      * file; the stage (with its _SUCCESS and .crc leftovers) is deleted
+      * right after. Returns the shipped file.
+      */
+    def ship(df: DataFrame, name: String): java.nio.file.Path = {
+      val stage = java.nio.file.Files.createTempDirectory(s"graft_${tag}stage")
+      try {
+        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+        val part = java.nio.file.Files.list(stage)
+        val src = try part.filter(p => p.getFileName.toString.endsWith(".parquet"))
+          .findFirst().get() finally part.close()
+        java.nio.file.Files.move(src, dir.resolve(name))
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
+    }
+  }
+
+  /** Runs `body` over a fresh [[Feed]] and deletes the feed tree after it
+    * returns. `body` stops its query before returning, and the memory
+    * sinks those queries drain into hold their rows in memory, so nothing
+    * reads the directory afterwards.
+    */
+  private def withFeed[T](tag: String)(body: Feed => T): T = {
+    val feed = new Feed(tag)
+    try body(feed)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(feed.dir.toFile)
   }
 
   /** Raw events schema as stored, parameterized on the physical type the
@@ -74,18 +146,13 @@ object StreamOps {
     */
   def tumblingStream(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    val q = eventsStream(ss, d)
+    drain(eventsStream(ss, d)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), Det.dsum(col("value")).as("sum_value"))
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n_events"), col("sum_value"))
       .writeStream.outputMode(OutputMode.Complete())
-      // AvailableNow drains the whole source as one bounded run and stops
-      // the query itself — no idle micro-batch polling after the data.
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_tumbling")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_tumbling"))
     ss.table("graft_stream_tumbling")
       .orderBy(col("hour_start"), col("event_type"))
   }
@@ -124,43 +191,35 @@ object StreamOps {
     val late = ev.filter(col("event_id") % 97 === 0)
       .filter(unix_micros(col("ts")) > wm1 ||
         expr(s"((unix_micros(ts) div $hourUs) + 1) * $hourUs") < wm1)
-    val feed = java.nio.file.Files.createTempDirectory("graft_latefeed")
-    def shipOne(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("graft_latestage")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage)
-      val src = try {
-        part.filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-      } finally part.close()
-      val dst = feed.resolve(name)
-      java.nio.file.Files.move(src, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
+    // the protocol pins file order by mtime
+    def shipAt(feed: Feed, df: DataFrame, name: String, mtimeMs: Long): Unit =
+      java.nio.file.Files.setLastModifiedTime(feed.ship(df, name),
         java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-    }
     val t0 = System.currentTimeMillis() - 600000L
-    shipOne(onTime, "00_ontime.parquet", t0)
-    // the late file ships only AFTER the on-time batch commits: under
-    // Trigger.AvailableNow every queued file batch runs back-to-back and
-    // the interleaved no-data micro-batches that ADVANCE the watermark
-    // never fire (measured: watermark displayed but 0 rows dropped), so
-    // the protocol needs real arrival separation + the default trigger
-    val q = ss.readStream.schema(StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", TimestampType),
-        StructField("value", DoubleType))))
-      .parquet(feed.toString)
-      .withWatermark("ts", "61 minutes")
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n_events"), Det.dsum(col("value")).as("sum_value"))
-      .select(col("window.start").as("hour_start"), col("n_events"),
-        col("sum_value"))
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("graft_stream_latedrop").start()
-    try {
-      q.processAllAvailable() // drain batch 0 + the wm-advancing no-data batch
-      shipOne(late, "01_late.parquet", t0 + 120000L)
-      q.processAllAvailable() // late batch under watermark₁, then finalize
-    } finally q.stop()
+    withFeed("late") { feed =>
+      shipAt(feed, onTime, "00_ontime.parquet", t0)
+      // the late file ships only AFTER the on-time batch commits: under
+      // Trigger.AvailableNow every queued file batch runs back-to-back and
+      // the interleaved no-data micro-batches that ADVANCE the watermark
+      // never fire (measured: watermark displayed but 0 rows dropped), so
+      // the protocol needs real arrival separation + the default trigger
+      val q = ss.readStream.schema(StructType(Seq(
+          StructField("event_id", LongType), StructField("ts", TimestampType),
+          StructField("value", DoubleType))))
+        .parquet(feed.dir.toString)
+        .withWatermark("ts", "61 minutes")
+        .groupBy(window(col("ts"), "1 hour"))
+        .agg(count(lit(1)).as("n_events"), Det.dsum(col("value")).as("sum_value"))
+        .select(col("window.start").as("hour_start"), col("n_events"),
+          col("sum_value"))
+        .writeStream.outputMode(OutputMode.Append())
+        .format("memory").queryName("graft_stream_latedrop").start()
+      try {
+        q.processAllAvailable() // drain batch 0 + the wm-advancing no-data batch
+        shipAt(feed, late, "01_late.parquet", t0 + 120000L)
+        q.processAllAvailable() // late batch under watermark₁, then finalize
+      } finally q.stop()
+    }
     ss.table("graft_stream_latedrop").orderBy(col("hour_start"))
   }
 
@@ -181,30 +240,23 @@ object StreamOps {
     val ss = tuned(s)
     val ev = graft.Tables.events(ss, d)
       .select(col("event_id"), col("ts"), col("value"))
-    val feed = java.nio.file.Files.createTempDirectory("graft_updfeed")
-    def shipOne(df: DataFrame, name: String): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("graft_updstage")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage)
-      val src = try part.filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get() finally part.close()
-      java.nio.file.Files.move(src, feed.resolve(name))
+    withFeed("upd") { feed =>
+      feed.ship(ev.filter(col("event_id") % 2 === 0), "00_even.parquet")
+      val q = ss.readStream.schema(StructType(Seq(
+          StructField("event_id", LongType), StructField("ts", TimestampType),
+          StructField("value", DoubleType))))
+        .parquet(feed.dir.toString)
+        .groupBy(window(col("ts"), "1 hour"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("window.start").as("hour_start"), col("n_events"))
+        .writeStream.outputMode(OutputMode.Update())
+        .format("memory").queryName("graft_stream_update").start()
+      try {
+        q.processAllAvailable()
+        feed.ship(ev.filter(col("event_id") % 2 === 1), "01_odd.parquet")
+        q.processAllAvailable()
+      } finally q.stop()
     }
-    shipOne(ev.filter(col("event_id") % 2 === 0), "00_even.parquet")
-    val q = ss.readStream.schema(StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", TimestampType),
-        StructField("value", DoubleType))))
-      .parquet(feed.toString)
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("hour_start"), col("n_events"))
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName("graft_stream_update").start()
-    try {
-      q.processAllAvailable()
-      shipOne(ev.filter(col("event_id") % 2 === 1), "01_odd.parquet")
-      q.processAllAvailable()
-    } finally q.stop()
     // compact the update history: the final value per window is the last
     // (= largest, counts grow monotonically) update; the update count is
     // part of the verified surface — update mode's defining observable
@@ -269,7 +321,7 @@ object StreamOps {
       .filter(col("event_type") === "click")
       .groupBy(col("user_id"))
       .agg(sort_array(collect_list(unix_micros(col("ts")))).as("click_us"))
-    val q = eventsStream(ss, d)
+    drain(eventsStream(ss, d)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id"),
         col("ts").as("purchase_ts"), unix_micros(col("ts")).as("p_us"))
@@ -278,9 +330,7 @@ object StreamOps {
         expr("timestamp_micros(try_element_at(filter(click_us, t -> t <= p_us), -1))")
           .as("last_click_ts"))
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_temporal").start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_temporal"))
     ss.table("graft_stream_temporal")
       .orderBy(col("event_id"))
   }
@@ -412,63 +462,50 @@ object StreamOps {
     val (loUs, hiUs) = (r.getLong(0), r.getLong(1))
     val splitUs = loUs + (hiUs - loUs) / 2
     val nPurchases = ev.filter(!col("is_click")).count()
-    val feed = java.nio.file.Files.createTempDirectory("graft_asoffeed")
-    def shipOne(df: DataFrame, name: String): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("graft_asofstage")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage)
-      val src = try part.filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get() finally part.close()
-      java.nio.file.Files.move(src, feed.resolve(name))
-    }
-    shipOne(ev.filter(unix_micros(col("ts")) <= splitUs), "00_wave1.parquet")
-    val plan = ss.readStream.schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("ts", TimestampType), StructField("is_click", BooleanType))))
-      .parquet(feed.toString)
-      .withWatermark("ts", "0 seconds")
-      .as[AsofRow]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AsofState, AsofOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[AsofRow], state: GroupState[AsofState]) =>
-          if (userId == -1L) Iterator.empty // the watermark sentinel
-          else {
-            val wmUs = state.getCurrentWatermarkMs() * 1000L
-            val arrivals = rows.toSeq
-            val (out, next, nEvicted) =
-              asofFoldTol(arrivals, state.getOption, wmUs, tolUs)
-            evicted.add(nEvicted)
-            next match {
-              case Some(st) =>
-                state.update(st)
-                if (st.pendUs.nonEmpty)
-                  // strictly above the watermark by construction (pending
-                  // purchases all have us > wmUs), so the set is legal and
-                  // the key re-fires on the next watermark advance
-                  state.setTimeoutTimestamp(st.pendUs.min / 1000L + 1L)
-              case None => if (state.exists) state.remove()
+    withFeed("asof") { feed =>
+      feed.ship(ev.filter(unix_micros(col("ts")) <= splitUs), "00_wave1.parquet")
+      val plan = ss.readStream.schema(StructType(Seq(
+          StructField("user_id", LongType), StructField("event_id", LongType),
+          StructField("ts", TimestampType), StructField("is_click", BooleanType))))
+        .parquet(feed.dir.toString)
+        .withWatermark("ts", "0 seconds")
+        .as[AsofRow]
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState[AsofState, AsofOut](
+          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+          (userId: Long, rows: Iterator[AsofRow], state: GroupState[AsofState]) =>
+            if (userId == -1L) Iterator.empty // the watermark sentinel
+            else {
+              val wmUs = state.getCurrentWatermarkMs() * 1000L
+              val arrivals = rows.toSeq
+              val (out, next, nEvicted) =
+                asofFoldTol(arrivals, state.getOption, wmUs, tolUs)
+              evicted.add(nEvicted)
+              next match {
+                case Some(st) =>
+                  state.update(st)
+                  if (st.pendUs.nonEmpty)
+                    // strictly above the watermark by construction (pending
+                    // purchases all have us > wmUs), so the set is legal and
+                    // the key re-fires on the next watermark advance
+                    state.setTimeoutTimestamp(st.pendUs.min / 1000L + 1L)
+                case None => if (state.exists) state.remove()
+              }
+              out.iterator.map(o => o.copy(user_id = userId))
             }
-            out.iterator.map(o => o.copy(user_id = userId))
-          }
-      }
-    val q = plan.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(sink).start()
-    try {
-      q.processAllAvailable() // wave 1 + its watermark no-data batch
-      shipOne(ev.filter(unix_micros(col("ts")) > splitUs), "01_wave2.parquet")
-      q.processAllAvailable()
-      shipOne(Seq((-1L, -1L, tsOf(hiUs + 7200L * 1000000L), false))
-        .toDF("user_id", "event_id", "ts", "is_click"), "02_sentinel.parquet")
-      q.processAllAvailable() // sentinel + the final timeout flush batch
-      // the timeout flush rides a no-data batch processAllAvailable does
-      // not always wait for: poll until every purchase has emitted
-      val deadline = System.currentTimeMillis() + 120000L
-      while (ss.table(sink).count() < nPurchases &&
-        System.currentTimeMillis() < deadline) {
-        q.processAllAvailable(); Thread.sleep(50L)
-      }
-    } finally q.stop()
+        }
+      val q = plan.writeStream.outputMode(OutputMode.Append())
+        .format("memory").queryName(sink).start()
+      try {
+        q.processAllAvailable() // wave 1 + its watermark no-data batch
+        feed.ship(ev.filter(unix_micros(col("ts")) > splitUs), "01_wave2.parquet")
+        q.processAllAvailable()
+        feed.ship(Seq((-1L, -1L, tsOf(hiUs + 7200L * 1000000L), false))
+          .toDF("user_id", "event_id", "ts", "is_click"), "02_sentinel.parquet")
+        q.processAllAvailable() // sentinel + the final timeout flush batch
+        pollUntil(q, sink)(ss.table(sink).count() >= nPurchases)
+      } finally q.stop()
+    }
     (ss.table(sink)
       .select(col("user_id"), col("event_id"), col("purchase_ts"),
         col("last_click_ts"))
@@ -596,44 +633,31 @@ object StreamOps {
     val (loUs, hiUs) = (r.getLong(0), r.getLong(1))
     val splitUs = loUs + (hiUs - loUs) / 2
     val nPurchases = ev.filter(!col("is_click")).count()
-    val feed = java.nio.file.Files.createTempDirectory("graft_asoftwsfeed")
-    def shipOne(df: DataFrame, name: String): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("graft_asoftwsstage")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage)
-      val src = try part.filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get() finally part.close()
-      java.nio.file.Files.move(src, feed.resolve(name))
-    }
-    shipOne(ev.filter(unix_micros(col("ts")) <= splitUs), "00_wave1.parquet")
     val sink = "graft_stream_asof_tws"
-    val plan = ss.readStream.schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("ts", TimestampType), StructField("is_click", BooleanType))))
-      .parquet(feed.toString)
-      .withWatermark("ts", "0 seconds")
-      .as[AsofRow]
-      .groupByKey(_.user_id)
-      .transformWithState(new AsofTwsProcessor(evicted),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
-    val q = plan.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(sink).start()
-    try {
-      q.processAllAvailable() // wave 1 + its watermark no-data batch
-      shipOne(ev.filter(unix_micros(col("ts")) > splitUs), "01_wave2.parquet")
-      q.processAllAvailable()
-      shipOne(Seq((-1L, -1L, tsOf(hiUs + 7200L * 1000000L), false))
-        .toDF("user_id", "event_id", "ts", "is_click"), "02_sentinel.parquet")
-      q.processAllAvailable() // sentinel + the final timer flush batch
-      // timer flushes ride no-data batches processAllAvailable does not
-      // always wait for: poll until every purchase has emitted
-      val deadline = System.currentTimeMillis() + 120000L
-      while (ss.table(sink).count() < nPurchases &&
-        System.currentTimeMillis() < deadline) {
-        q.processAllAvailable(); Thread.sleep(50L)
-      }
-    } finally q.stop()
+    withFeed("asoftws") { feed =>
+      feed.ship(ev.filter(unix_micros(col("ts")) <= splitUs), "00_wave1.parquet")
+      val plan = ss.readStream.schema(StructType(Seq(
+          StructField("user_id", LongType), StructField("event_id", LongType),
+          StructField("ts", TimestampType), StructField("is_click", BooleanType))))
+        .parquet(feed.dir.toString)
+        .withWatermark("ts", "0 seconds")
+        .as[AsofRow]
+        .groupByKey(_.user_id)
+        .transformWithState(new AsofTwsProcessor(evicted),
+          org.apache.spark.sql.streaming.TimeMode.EventTime(),
+          OutputMode.Append())
+      val q = plan.writeStream.outputMode(OutputMode.Append())
+        .format("memory").queryName(sink).start()
+      try {
+        q.processAllAvailable() // wave 1 + its watermark no-data batch
+        feed.ship(ev.filter(unix_micros(col("ts")) > splitUs), "01_wave2.parquet")
+        q.processAllAvailable()
+        feed.ship(Seq((-1L, -1L, tsOf(hiUs + 7200L * 1000000L), false))
+          .toDF("user_id", "event_id", "ts", "is_click"), "02_sentinel.parquet")
+        q.processAllAvailable() // sentinel + the final timer flush batch
+        pollUntil(q, sink)(ss.table(sink).count() >= nPurchases)
+      } finally q.stop()
+    }
     (ss.table(sink)
       .select(col("user_id"), col("event_id"), col("purchase_ts"),
         col("last_click_ts"))
@@ -686,86 +710,76 @@ object StreamOps {
     val (loMs, hiMs) = (r.getLong(0), r.getLong(1))
     val splitMs = loMs + (hiMs - loMs) / 2
     val expected = ev.count()
-    val feed = java.nio.file.Files.createTempDirectory("graft_polfeed")
-    def shipOne(df: DataFrame, name: String): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("graft_polstage")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage)
-      val src = try part.filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get() finally part.close()
-      java.nio.file.Files.move(src, feed.resolve(name))
-    }
-    shipOne(ev.filter(col("t") <= splitMs), "00_wave1.parquet")
-    val plan = ss.readStream.schema(StructType(Seq(
-        StructField("reg_domain", StringType), StructField("host", StringType),
-        StructField("t", LongType), StructField("ts", TimestampType))))
-      .parquet(feed.toString)
-      .withWatermark("ts", "0 seconds")
-      .as[PolRow]
-      .groupByKey(_.reg_domain)
-      .flatMapGroupsWithState[PolState, PolOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (dom: String, rows: Iterator[PolRow], state: GroupState[PolState]) =>
-          if (dom == "~sentinel") Iterator.empty
-          else {
-            val delay = 600000L * (1L + dom.filter(_.isDigit).toLong % 5L)
-            val cap = 3L * delay
-            val wmMs = state.getCurrentWatermarkMs()
-            val st0 = state.getOption.getOrElse(
-              PolState(-1L, -1L, 0L, 0L, Array.empty, -1L, -1L,
-                Array.empty, Array.empty))
-            val all = (st0.pendT.zip(st0.pendHost) ++
-              rows.map(p => (p.t, p.host))).sortBy(_._1)
-            val (ripe, wait) = all.partition(_._1 <= wmMs)
-            var (credits, last) =
-              if (st0.last < 0L && ripe.nonEmpty) (cap, ripe.head._1)
-              else (st0.credits, st0.last)
-            var viol = st0.viol; var served = st0.served
-            var hosts = st0.hosts.toSet
-            var tFirst = st0.tFirst; var tLast = st0.tLast
-            ripe.foreach { case (t, h) =>
-              val refill = math.min(cap, credits + (t - last))
-              if (refill >= delay) { credits = refill - delay; served += 1 }
-              else { credits = refill; viol += 1 }
-              last = t
-              hosts = hosts + h
-              if (tFirst < 0L) tFirst = t
-              tLast = t
+    val sink = "graft_stream_politeness"
+    withFeed("pol") { feed =>
+      feed.ship(ev.filter(col("t") <= splitMs), "00_wave1.parquet")
+      val plan = ss.readStream.schema(StructType(Seq(
+          StructField("reg_domain", StringType), StructField("host", StringType),
+          StructField("t", LongType), StructField("ts", TimestampType))))
+        .parquet(feed.dir.toString)
+        .withWatermark("ts", "0 seconds")
+        .as[PolRow]
+        .groupByKey(_.reg_domain)
+        .flatMapGroupsWithState[PolState, PolOut](
+          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+          (dom: String, rows: Iterator[PolRow], state: GroupState[PolState]) =>
+            if (dom == "~sentinel") Iterator.empty
+            else {
+              val delay = 600000L * (1L + dom.filter(_.isDigit).toLong % 5L)
+              val cap = 3L * delay
+              val wmMs = state.getCurrentWatermarkMs()
+              val st0 = state.getOption.getOrElse(
+                PolState(-1L, -1L, 0L, 0L, Array.empty, -1L, -1L,
+                  Array.empty, Array.empty))
+              val all = (st0.pendT.zip(st0.pendHost) ++
+                rows.map(p => (p.t, p.host))).sortBy(_._1)
+              val (ripe, wait) = all.partition(_._1 <= wmMs)
+              var (credits, last) =
+                if (st0.last < 0L && ripe.nonEmpty) (cap, ripe.head._1)
+                else (st0.credits, st0.last)
+              var viol = st0.viol; var served = st0.served
+              var hosts = st0.hosts.toSet
+              var tFirst = st0.tFirst; var tLast = st0.tLast
+              ripe.foreach { case (t, h) =>
+                val refill = math.min(cap, credits + (t - last))
+                if (refill >= delay) { credits = refill - delay; served += 1 }
+                else { credits = refill; viol += 1 }
+                last = t
+                hosts = hosts + h
+                if (tFirst < 0L) tFirst = t
+                tLast = t
+              }
+              val next = PolState(credits, last, viol, served,
+                hosts.toArray.sorted, tFirst, tLast,
+                wait.map(_._1), wait.map(_._2))
+              state.update(next)
+              if (wait.nonEmpty)
+                state.setTimeoutTimestamp(wait.map(_._1).min + 1L)
+              if (ripe.nonEmpty)
+                Iterator.single(PolOut(dom, delay, hosts.size.toLong,
+                  served + viol, served, viol, tLast - tFirst))
+              else Iterator.empty
             }
-            val next = PolState(credits, last, viol, served,
-              hosts.toArray.sorted, tFirst, tLast,
-              wait.map(_._1), wait.map(_._2))
-            state.update(next)
-            if (wait.nonEmpty)
-              state.setTimeoutTimestamp(wait.map(_._1).min + 1L)
-            if (ripe.nonEmpty)
-              Iterator.single(PolOut(dom, delay, hosts.size.toLong,
-                served + viol, served, viol, tLast - tFirst))
-            else Iterator.empty
-          }
-      }
-    val q = plan.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("graft_stream_politeness").start()
-    try {
-      q.processAllAvailable()
-      shipOne(ev.filter(col("t") > splitMs), "01_wave2.parquet")
-      q.processAllAvailable()
-      shipOne(Seq(("~sentinel", "~sentinel", hiMs + 7200000L,
-        new java.sql.Timestamp(hiMs + 7200000L)))
-        .toDF("reg_domain", "host", "t", "ts"), "02_sentinel.parquet")
-      q.processAllAvailable()
-      // the final timeout flush rides a no-data batch — poll until the
-      // per-domain final snapshots account for every shipped request
-      val sink = () => ss.table("graft_stream_politeness")
-        .groupBy(col("reg_domain")).agg(max(col("n_requests")).as("n"))
-        .agg(coalesce(sum(col("n")), lit(0L))).collect()(0).getLong(0)
-      val deadline = System.currentTimeMillis() + 120000L
-      while (sink() < expected && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable(); Thread.sleep(50L)
-      }
-    } finally q.stop()
+        }
+      val q = plan.writeStream.outputMode(OutputMode.Append())
+        .format("memory").queryName(sink).start()
+      try {
+        q.processAllAvailable()
+        feed.ship(ev.filter(col("t") > splitMs), "01_wave2.parquet")
+        q.processAllAvailable()
+        feed.ship(Seq(("~sentinel", "~sentinel", hiMs + 7200000L,
+          new java.sql.Timestamp(hiMs + 7200000L)))
+          .toDF("reg_domain", "host", "t", "ts"), "02_sentinel.parquet")
+        q.processAllAvailable()
+        // done once the per-domain final snapshots account for every
+        // shipped request
+        pollUntil(q, sink)(ss.table(sink)
+          .groupBy(col("reg_domain")).agg(max(col("n_requests")).as("n"))
+          .agg(coalesce(sum(col("n")), lit(0L))).collect()(0).getLong(0) >= expected)
+      } finally q.stop()
+    }
     // final snapshot per domain = the monotone max-n_requests row
-    ss.table("graft_stream_politeness")
+    ss.table(sink)
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("reg_domain"))
           .orderBy(col("n_requests").desc)))
@@ -884,13 +898,6 @@ object StreamOps {
     }
   }
 
-  /** 33rd real streaming query — [[politenessStream]] under
-    * `transformWithState`: identical final per-domain numbers (the same
-    * batch recursive-CTE oracle), emitted as per-session rows with
-    * per-key state freed at every provable session boundary. Returns the
-    * drained rollup plus the final state-store row count (0 = every key
-    * cleaned up — the spec's pin).
-    */
   /** Runs `body` with the RocksDB state-store provider set
     * (`transformWithState` requires it), restoring the previous provider
     * afterwards — without the restore, every streaming query that runs
@@ -909,6 +916,13 @@ object StreamOps {
     }
   }
 
+  /** 33rd real streaming query — [[politenessStream]] under
+    * `transformWithState`: identical final per-domain numbers (the same
+    * batch recursive-CTE oracle), emitted as per-session rows with
+    * per-key state freed at every provable session boundary. Returns the
+    * drained rollup plus the final state-store row count (0 = every key
+    * cleaned up — the spec's pin).
+    */
   def politenessTwsTelemetry(s: SparkSession, d: String): (DataFrame, Long) = {
     val ss = tuned(s)
     withRocksDb(ss)(politenessTwsRun(ss, d))
@@ -929,52 +943,41 @@ object StreamOps {
     val (loMs, hiMs) = (r.getLong(0), r.getLong(1))
     val splitMs = loMs + (hiMs - loMs) / 2
     val expected = ev.count()
-    val feed = java.nio.file.Files.createTempDirectory("graft_poltwsfeed")
-    def shipOne(df: DataFrame, name: String): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("graft_poltwsstage")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage)
-      val src = try part.filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get() finally part.close()
-      java.nio.file.Files.move(src, feed.resolve(name))
-    }
-    shipOne(ev.filter(col("t") <= splitMs), "00_wave1.parquet")
-    val plan = ss.readStream.schema(StructType(Seq(
-        StructField("reg_domain", StringType), StructField("host", StringType),
-        StructField("t", LongType), StructField("ts", TimestampType))))
-      .parquet(feed.toString)
-      .withWatermark("ts", "0 seconds")
-      .as[PolRow]
-      .groupByKey(_.reg_domain)
-      .transformWithState(new PolitenessProcessor,
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
     val sinkName = "graft_stream_politeness_tws"
-    val q = plan.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(sinkName).start()
-    var stateRows = -1L
-    try {
-      q.processAllAvailable()
-      shipOne(ev.filter(col("t") > splitMs), "01_wave2.parquet")
-      q.processAllAvailable()
-      // sentinel far enough past max(t) to cross every domain's session-
-      // close horizon (max cap = 3 × 5 × 600 s = 2.5 h): +6 h
-      shipOne(Seq(("~sentinel", "~sentinel", hiMs + 21600000L,
-        new java.sql.Timestamp(hiMs + 21600000L)))
-        .toDF("reg_domain", "host", "t", "ts"), "02_sentinel.parquet")
-      q.processAllAvailable()
-      // session-close flushes ride no-data batches: poll until every
-      // shipped request is accounted for by a CLOSED session row
-      val sink = () => ss.table(sinkName)
-        .agg(coalesce(sum(col("n_requests")), lit(0L))).collect()(0).getLong(0)
-      val deadline = System.currentTimeMillis() + 120000L
-      while (sink() < expected && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable(); Thread.sleep(50L)
-      }
-      stateRows = Option(q.lastProgress)
-        .flatMap(p => p.stateOperators.headOption)
-        .map(_.numRowsTotal).getOrElse(-1L)
-    } finally q.stop()
+    val stateRows = withFeed("poltws") { feed =>
+      feed.ship(ev.filter(col("t") <= splitMs), "00_wave1.parquet")
+      val plan = ss.readStream.schema(StructType(Seq(
+          StructField("reg_domain", StringType), StructField("host", StringType),
+          StructField("t", LongType), StructField("ts", TimestampType))))
+        .parquet(feed.dir.toString)
+        .withWatermark("ts", "0 seconds")
+        .as[PolRow]
+        .groupByKey(_.reg_domain)
+        .transformWithState(new PolitenessProcessor,
+          org.apache.spark.sql.streaming.TimeMode.EventTime(),
+          OutputMode.Append())
+      val q = plan.writeStream.outputMode(OutputMode.Append())
+        .format("memory").queryName(sinkName).start()
+      try {
+        q.processAllAvailable()
+        feed.ship(ev.filter(col("t") > splitMs), "01_wave2.parquet")
+        q.processAllAvailable()
+        // sentinel far enough past max(t) to cross every domain's session-
+        // close horizon (max cap = 3 × 5 × 600 s = 2.5 h): +6 h
+        feed.ship(Seq(("~sentinel", "~sentinel", hiMs + 21600000L,
+          new java.sql.Timestamp(hiMs + 21600000L)))
+          .toDF("reg_domain", "host", "t", "ts"), "02_sentinel.parquet")
+        q.processAllAvailable()
+        // done once every shipped request is accounted for by a CLOSED
+        // session row
+        pollUntil(q, sinkName)(ss.table(sinkName)
+          .agg(coalesce(sum(col("n_requests")), lit(0L))).collect()(0)
+          .getLong(0) >= expected)
+        Option(q.lastProgress)
+          .flatMap(p => p.stateOperators.headOption)
+          .map(_.numRowsTotal).getOrElse(-1L)
+      } finally q.stop()
+    }
     val rollup = ss.table(sinkName)
       .groupBy(col("reg_domain"))
       .agg(max(col("delay_ms")).as("delay_ms"),
@@ -1027,19 +1030,47 @@ object StreamOps {
       .withColumn("vm", expr(
         "CAST(CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS DECIMAL(19,0)) AS BIGINT)"))
       .withColumn("day", to_date(col("ts")))
-    val q = src.groupBy(col("event_type"), col("day"))
+    drain(src.groupBy(col("event_type"), col("day"))
       .agg(sum(col("sign")).as("n_events"),
         sum(col("sign") * col("vm")).as("rev_micro"))
       .writeStream.outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_retract").start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_retract"))
     ss.table("graft_stream_retract")
       .filter(col("n_events") > 0)
       .select(col("event_type"), col("day"), col("n_events"),
         col("rev_micro"))
       .orderBy(col("event_type"), col("day"))
   }
+
+  /** The watermarked click and purchase sides shared by every
+    * stream-stream interval join ([[intervalJoinStream]]), joined with
+    * `joinType`. `clickUser` names the click side's user column — the
+    * right and full outer joins keep it apart from `p_user` as `c_user`.
+    */
+  private def clickPurchaseJoin(s: SparkSession, d: String, joinType: String,
+      clickUser: String = "user_id"): DataFrame = {
+    val clicks = eventsStream(s, d)
+      .filter(col("event_type") === "click")
+      .select(col("user_id").as(clickUser), col("ts").as("click_ts"),
+        col("event_id").as("click_id"))
+      .withWatermark("click_ts", "1 hour")
+    val purchases = eventsStream(s, d)
+      .filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+        col("event_id").as("purchase_id"))
+      .withWatermark("p_ts", "1 hour")
+    clicks.join(purchases,
+        expr(s"$clickUser = p_user AND p_ts >= click_ts " +
+          "AND p_ts <= click_ts + INTERVAL 1 HOUR"), joinType)
+  }
+
+  /** The unstarted streaming interval-join plan (shared by the drained
+    * memory-sink query below and the checkpoint-restart spec).
+    */
+  def intervalJoinPlan(s: SparkSession, d: String): DataFrame =
+    clickPurchaseJoin(s, d, "inner")
+      .select(col("user_id"), col("click_id"), col("purchase_id"),
+        (unix_micros(col("p_ts")) - unix_micros(col("click_ts"))).as("lag_us"))
 
   /** Watermarked stream-stream interval join: click and purchase streams
     * (two readStream scans of the events source) joined on user within
@@ -1050,35 +1081,11 @@ object StreamOps {
     * drained memory-sink table equals the batch twin and is
     * DuckDB-oracle-verified like any batch operator.
     */
-  /** The unstarted streaming interval-join plan (shared by the drained
-    * memory-sink query below and the checkpoint-restart spec).
-    */
-  def intervalJoinPlan(s: SparkSession, d: String): DataFrame = {
-    val clicks = eventsStream(s, d)
-      .filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = eventsStream(s, d)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", "1 hour")
-    clicks.join(purchases,
-        expr("user_id = p_user AND p_ts >= click_ts " +
-          "AND p_ts <= click_ts + INTERVAL 1 HOUR"))
-      .select(col("user_id"), col("click_id"), col("purchase_id"),
-        (unix_micros(col("p_ts")) - unix_micros(col("click_ts"))).as("lag_us"))
-  }
-
   def intervalJoinStream(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    val q = intervalJoinPlan(ss, d)
+    drain(intervalJoinPlan(ss, d)
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_interval_join")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_interval_join"))
     ss.table("graft_stream_interval_join")
       .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
   }
@@ -1100,26 +1107,11 @@ object StreamOps {
     */
   def leftOuterJoinStream(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    val clicks = eventsStream(ss, d)
-      .filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = eventsStream(ss, d)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", "1 hour")
-    val q = clicks.join(purchases,
-        expr("user_id = p_user AND p_ts >= click_ts " +
-          "AND p_ts <= click_ts + INTERVAL 1 HOUR"), "left_outer")
+    drain(clickPurchaseJoin(ss, d, "left_outer")
       .select(col("user_id"), col("click_id"), col("purchase_id"),
         (unix_micros(col("p_ts")) - unix_micros(col("click_ts"))).as("lag_us"))
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_left_outer")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_left_outer"))
     ss.table("graft_stream_left_outer")
       .orderBy(col("user_id"), col("click_id"),
         col("purchase_id").asc_nulls_first)
@@ -1149,27 +1141,12 @@ object StreamOps {
     */
   def fullOuterJoinStream(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    val clicks = eventsStream(ss, d)
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = eventsStream(ss, d)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", "1 hour")
-    val q = clicks.join(purchases,
-        expr("c_user = p_user AND p_ts >= click_ts " +
-          "AND p_ts <= click_ts + INTERVAL 1 HOUR"), "full_outer")
+    drain(clickPurchaseJoin(ss, d, "full_outer", clickUser = "c_user")
       .select(coalesce(col("c_user"), col("p_user")).as("user_id"),
         col("click_id"), col("purchase_id"),
         (unix_micros(col("p_ts")) - unix_micros(col("click_ts"))).as("lag_us"))
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_full_outer")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_full_outer"))
     ss.table("graft_stream_full_outer")
       .orderBy(col("user_id"), col("click_id").asc_nulls_first,
         col("purchase_id").asc_nulls_first)
@@ -1219,27 +1196,12 @@ object StreamOps {
     */
   def rightOuterJoinStream(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    val clicks = eventsStream(ss, d)
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = eventsStream(ss, d)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", "1 hour")
-    val q = clicks.join(purchases,
-        expr("c_user = p_user AND p_ts >= click_ts " +
-          "AND p_ts <= click_ts + INTERVAL 1 HOUR"), "right_outer")
+    drain(clickPurchaseJoin(ss, d, "right_outer", clickUser = "c_user")
       .select(col("p_user").as("user_id"), col("purchase_id"),
         col("click_id"),
         (unix_micros(col("p_ts")) - unix_micros(col("click_ts"))).as("lag_us"))
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_right_outer")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_right_outer"))
     ss.table("graft_stream_right_outer")
       .orderBy(col("user_id"), col("purchase_id"),
         col("click_id").asc_nulls_first)
@@ -1296,26 +1258,11 @@ object StreamOps {
     */
   def antiJoinStream(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    val clicks = eventsStream(ss, d)
-      .filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = eventsStream(ss, d)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", "1 hour")
-    val q = clicks.join(purchases,
-        expr("user_id = p_user AND p_ts >= click_ts " +
-          "AND p_ts <= click_ts + INTERVAL 1 HOUR"), "left_outer")
+    drain(clickPurchaseJoin(ss, d, "left_outer")
       .filter(col("purchase_id").isNull)
       .select(col("user_id"), col("click_ts"), col("click_id"))
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_anti")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_anti"))
     ss.table("graft_stream_anti")
       .select(col("user_id"), col("click_id"),
         unix_micros(col("click_ts")).as("click_us"))
@@ -1357,24 +1304,9 @@ object StreamOps {
     */
   def semiJoinStream(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    val clicks = eventsStream(ss, d)
-      .filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = eventsStream(ss, d)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", "1 hour")
-    val q = clicks.join(purchases,
-        expr("user_id = p_user AND p_ts >= click_ts " +
-          "AND p_ts <= click_ts + INTERVAL 1 HOUR"), "left_semi")
+    drain(clickPurchaseJoin(ss, d, "left_semi")
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_semi")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_semi"))
     ss.table("graft_stream_semi")
       .select(col("user_id"), col("click_id"),
         unix_micros(col("click_ts")).as("click_us"))
@@ -1409,7 +1341,7 @@ object StreamOps {
     */
   def sessionBuiltinStream(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    val q = eventsStream(ss, d)
+    drain(eventsStream(ss, d)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"), Det.dsum(col("value")).as("sum_value"))
@@ -1417,10 +1349,7 @@ object StreamOps {
         col("session_window.start").as("session_start"),
         col("n_events"), col("sum_value"))
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_session_builtin")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_session_builtin"))
     ss.table("graft_stream_session_builtin")
       .orderBy(col("user_id"), col("session_start"))
   }
@@ -1462,7 +1391,7 @@ object StreamOps {
     */
   def sessionDynamicStream(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    val q = eventsStream(ss, d)
+    drain(eventsStream(ss, d)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"),
         when(col("event_type") === "click", "20 minutes")
@@ -1475,10 +1404,7 @@ object StreamOps {
         col("session_window.start").as("session_start"),
         col("n_events"), col("n_clicks"), col("sum_value"))
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_session_dynamic")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_session_dynamic"))
     ss.table("graft_stream_session_dynamic")
       .orderBy(col("user_id"), col("session_start"))
   }
@@ -1537,15 +1463,12 @@ object StreamOps {
       .withColumn("category",
         when(col("event_type").isin("purchase", "signup"), "conversion")
           .otherwise("engagement"))
-    val q = eventsStream(ss, d)
+    drain(eventsStream(ss, d)
       .join(broadcast(dim), Seq("event_type"))
       .groupBy(col("category"))
       .agg(count(lit(1)).as("n_events"), Det.dsum(col("value")).as("sum_value"))
       .writeStream.outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_static_enrich")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_static_enrich"))
     ss.table("graft_stream_static_enrich").orderBy(col("category"))
   }
 
@@ -1614,7 +1537,7 @@ object StreamOps {
       .select(col("doc_id"), col("text"))
     val newSig = Dedup.signaturesOf(Dedup.shingledOf(stream))
     val newBands = Dedup.bandsCarrying(newSig, "shashes")
-    val q = newBands.as("a")
+    drain(newBands.as("a")
       .join(bands.as("b"), col("a.band") === col("b.band")
         && col("a.bh") === col("b.bh"))
       .select(col("a.doc_id").as("nid"), col("a.shashes").as("sha"),
@@ -1628,10 +1551,7 @@ object StreamOps {
       .groupBy(col("nid").as("doc_id"))
       .agg(min(col("sid")).as("near_dup_of"))
       .writeStream.outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_inc_probe")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_inc_probe"))
     ss.table("graft_stream_inc_probe").orderBy(col("doc_id"))
   }
 
@@ -1763,14 +1683,11 @@ object StreamOps {
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .as[Ev]
-    val q = evs.groupByKey(_.user_id)
+    drain(evs.groupByKey(_.user_id)
       .transformWithState(new SessionizeProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_sessionize_tws")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_sessionize_tws"))
     ss.table("graft_stream_sessionize_tws")
       .orderBy(col("user_id"), col("session_id"))
   }
@@ -1882,12 +1799,9 @@ object StreamOps {
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .as[Ev]
-    val q = gapsStateful(evs)
+    drain(gapsStateful(evs)
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_regularity")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_regularity"))
     ss.table("graft_stream_regularity")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_gaps"),
@@ -1921,12 +1835,9 @@ object StreamOps {
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .as[Ev]
-    val q = transitions(evs)
+    drain(transitions(evs)
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_transitions")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_transitions"))
     val wFrom = org.apache.spark.sql.expressions.Window
       .partitionBy(col("from_type"))
     ss.table("graft_stream_transitions")
@@ -2010,12 +1921,9 @@ object StreamOps {
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .as[Ev]
-    val q = sessionize(evs)
+    drain(sessionize(evs)
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_sessionize")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_sessionize"))
     ss.table("graft_stream_sessionize")
       .orderBy(col("user_id"), col("session_id"))
   }
@@ -2060,14 +1968,11 @@ object StreamOps {
     */
   def dedupStream(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    val q = eventsStream(ss, d)
+    drain(eventsStream(ss, d)
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_dedup")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_dedup"))
     ss.table("graft_stream_dedup")
       .orderBy(col("user_id"), col("event_type"))
   }
@@ -2076,19 +1981,6 @@ object StreamOps {
     """SELECT DISTINCT user_id, event_type FROM events
       |ORDER BY user_id, event_type""".stripMargin
 
-  /** foreachBatch exactly-once file sink — the production pattern for
-    * targets Spark has no native streaming connector for (JDBC, object
-    * stores with custom layouts): each micro-batch of the complete-mode
-    * aggregate lands as a parquet directory keyed by its BATCH ID in
-    * overwrite mode, so a replayed batch (checkpoint recovery re-delivers
-    * the same id) overwrites its own output instead of appending
-    * duplicates — idempotence from (deterministic id × overwrite), the
-    * documented exactly-once recipe. The returned frame RE-READS what
-    * landed on disk (latest batch wins; complete mode rewrites the full
-    * aggregate each batch), so the DuckDB oracle verifies the actual
-    * file contents, not an in-memory stream. StreamingSpec replays the
-    * query over the same checkpoint to prove no duplicate rows land.
-    */
   /** STREAMING WRITE-AUDIT-PUBLISH — the composition of the streaming
     * ingest path with [[graft.sources.KvSink]]'s WAP branches: every
     * micro-batch appends to the `ingest` BRANCH (invisible to main),
@@ -2135,14 +2027,11 @@ object StreamOps {
         KvSink.publish(tbl, "ingest"): Unit
       }
     }: Unit
-    val q = eventsStream(ss, d)
+    drain(eventsStream(ss, d)
       .select(col("event_id"), col("event_type"))
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$root/_checkpoint")
-      .foreachBatch(writer)
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .foreachBatch(writer))
     readPaths(KvSink.committedPaths(tbl))
       .groupBy(col("val"))
       .agg(count(lit(1)).as("n_rows"), sum(col("key")).as("key_sum"))
@@ -2154,6 +2043,19 @@ object StreamOps {
       |       CAST(SUM(event_id) AS BIGINT) AS key_sum
       |FROM events GROUP BY 1 ORDER BY val""".stripMargin
 
+  /** foreachBatch exactly-once file sink — the production pattern for
+    * targets Spark has no native streaming connector for (JDBC, object
+    * stores with custom layouts): each micro-batch of the complete-mode
+    * aggregate lands as a parquet directory keyed by its BATCH ID in
+    * overwrite mode, so a replayed batch (checkpoint recovery re-delivers
+    * the same id) overwrites its own output instead of appending
+    * duplicates — idempotence from (deterministic id × overwrite), the
+    * documented exactly-once recipe. The returned frame RE-READS what
+    * landed on disk (latest batch wins; complete mode rewrites the full
+    * aggregate each batch), so the DuckDB oracle verifies the actual
+    * file contents, not an in-memory stream. StreamingSpec replays the
+    * query over the same checkpoint to prove no duplicate rows land.
+    */
   def foreachBatchSink(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
     // one REUSED sink root per dataset (keyed by source path) instead of a
@@ -2175,15 +2077,12 @@ object StreamOps {
     val writer = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
         batchId: Long) =>
       batch.write.mode("overwrite").parquet(s"$out/data/batch_id=$batchId")
-    val q = eventsStream(ss, d)
+    drain(eventsStream(ss, d)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), Det.dsum(col("value")).as("sum_value"))
       .writeStream.outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$out/_checkpoint")
-      .foreachBatch(writer)
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .foreachBatch(writer))
     // zero-batch drain (empty source) → nothing landed: return the empty
     // result frame instead of crashing on a missing directory/null max
     if (!new java.io.File(s"$out/data").exists())
@@ -2214,16 +2113,13 @@ object StreamOps {
     */
   def checksumStream(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    val q = eventsStream(ss, d)
+    drain(eventsStream(ss, d)
       .select(expr(graft.ext.Hashing.sparkHash(
         "concat_ws('|', event_id, user_id, event_type)")).as("h"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("h").cast("decimal(30,0)")).cast("string").as("checksum"))
       .writeStream.outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_checksum")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_checksum"))
     ss.table("graft_stream_checksum")
   }
 
@@ -2245,14 +2141,11 @@ object StreamOps {
   def hllStream(s: SparkSession, d: String): DataFrame = {
     import graft.ext.{Hashing, HyperLogLog}
     val ss = tuned(s)
-    val q = HyperLogLog.regsOf(
+    drain(HyperLogLog.regsOf(
       eventsStream(ss, d)
         .select(expr(Hashing.sparkHash("CAST(user_id AS STRING)")).as("h")))
       .writeStream.outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_hll")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_hll"))
     val est = HyperLogLog.estOf(ss, ss.table("graft_stream_hll"), "est_distinct")
     val exact = graft.Tables.events(ss, d)
       .agg(graft.Det.exactDistinct(col("user_id")).as("true_distinct"))
@@ -2281,17 +2174,14 @@ object StreamOps {
     val W = CountMinAgg.W
     val M40 = 1099511627776L // 2^40
     def bucketExpr = s"((2 * i + 1) * (h % ${M40}L) + i * 2654435761L) % ${M40}L % $W"
-    val q = eventsStream(ss, d)
+    drain(eventsStream(ss, d)
       .select(expr(Hashing.sparkHash("CAST(user_id AS STRING)")).as("h"))
       .select(col("h"), explode(expr(s"sequence(0, ${D - 1})")).as("i"))
       .withColumn("b", expr(bucketExpr))
       .groupBy(col("i"), col("b"))
       .agg(count(lit(1)).as("c"))
       .writeStream.outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_cms")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_cms"))
     val counters = ss.table("graft_stream_cms")
     val probes = ss.range(1, 26).select(col("id").as("user_id"))
       .withColumn("h", expr(Hashing.sparkHash("CAST(user_id AS STRING)")))
@@ -2354,14 +2244,11 @@ object StreamOps {
   def quantileStream(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ss = tuned(s)
-    val q = eventsStream(ss, d)
+    drain(eventsStream(ss, d)
       .select(floor(col("value")).cast("long").as("b"))
       .groupBy(col("b")).agg(count(lit(1)).as("cnt"))
       .writeStream.outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_quantile")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_quantile"))
     val hist = ss.table("graft_stream_quantile")
     val wCum = org.apache.spark.sql.expressions.Window.orderBy(col("b"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -2424,16 +2311,13 @@ object StreamOps {
     */
   def topkStream(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    val q = eventsStream(ss, d)
+    drain(eventsStream(ss, d)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n_events"))
       .writeStream.outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_topk")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_topk"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("hour_start"))
       .orderBy(desc("n_events"), col("event_type"))
@@ -2493,15 +2377,12 @@ object StreamOps {
     */
   def observabilityFrame(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    val q = eventsStream(ss, d)
+    val q = drain(eventsStream(ss, d)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_obs")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_obs"))
     def iso(v: String): Long =
       if (v == null) 0L else java.time.Instant.parse(v).toEpochMilli
     val rows = q.recentProgress.toSeq.map { p =>
@@ -2535,15 +2416,12 @@ object StreamOps {
     */
   def dsv2Stream(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    val q = ss.readStream.format("graft.sources.SeqSource")
+    drain(ss.readStream.format("graft.sources.SeqSource")
       .option("rows", 100000).option("slices", 8).load()
       .groupBy(col("mod7"))
       .agg(count(lit(1)).as("n"), sum(col("sq")).as("sum_sq"))
       .writeStream.outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_stream_dsv2")
-      .start()
-    try q.awaitTermination() finally q.stop()
+      .format("memory").queryName("graft_stream_dsv2"))
     ss.table("graft_stream_dsv2").orderBy(col("mod7"))
   }
 
@@ -2586,13 +2464,12 @@ object StreamOps {
       "(user_id BIGINT, last_type STRING, n_events BIGINT)")
     ss.sql(s"CREATE TABLE IF NOT EXISTS graft_cat.ns.${table}_foldlog " +
       "(batch_id BIGINT)")
-    val q = ss.readStream.format("graft.sources.SeqSource")
+    drain(ss.readStream.format("graft.sources.SeqSource")
       .option("rows", 10000).option("slices", 8).load()
       .select(col("id"), (col("id") % 50).as("user_id"),
         expr("CASE CAST(id % 3 AS INT) WHEN 0 THEN 'click' " +
           "WHEN 1 THEN 'view' ELSE 'purchase' END").as("et"))
       .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val bs = b.sparkSession
         val replayed = bs.table(s"graft_cat.ns.${table}_foldlog")
@@ -2613,9 +2490,7 @@ object StreamOps {
         }
         afterFold(id, bs)
         ()
-      }
-      .start()
-    try q.awaitTermination() finally q.stop()
+      })
     ss.table(s"graft_cat.ns.$table").orderBy(col("user_id"))
   }
 }

@@ -938,6 +938,31 @@ class StreamingSpec extends AnyFunSuite {
       s"$stateRows state rows survived the final watermark — timer-driven " +
         "cleanup must clear every closed session's key")
   }
+
+  test("poll-until-flushed fails loudly, naming the sink, once its budget runs out") {
+    import spark.implicits._
+    val input = MemoryStream[Int](spark)
+    val sink = "graft_poll_budget_test"
+    val q = input.toDS().writeStream.format("memory").queryName(sink).start()
+    try {
+      input.addData(1, 2, 3)
+      val e = intercept[IllegalStateException](
+        graft.streaming.StreamOps.pollUntil(q, sink, budgetMs = 300L)(false))
+      assert(e.getMessage.contains(sink), e.getMessage)
+    } finally q.stop()
+  }
+
+  test("file-fed streams delete their feed and stage directories") {
+    // by name prefix, so temp dirs other suites create cannot disturb it
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def feedDirs(): Set[String] = tmp.list().toSet
+      .filter(n => n.startsWith("graft_updfeed") || n.startsWith("graft_updstage"))
+    val before = feedDirs()
+    val rows = graft.streaming.StreamOps.updateModeStream(spark, sf).collect()
+    assert(rows.nonEmpty, "the drained result must outlive its feed")
+    val leaked = feedDirs() -- before
+    assert(leaked.isEmpty, s"left in ${tmp}: $leaked")
+  }
 }
 
 /** Per-key running-count state for the repartition-handoff spec (top
