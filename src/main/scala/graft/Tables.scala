@@ -6,20 +6,68 @@ import org.apache.spark.sql.types._
 
 /** Table loaders for the driver test data (TESTDATA.md).
   *
-  * All tables are parquet; schema comes from the files (the reference reads
-  * parquet the same way, `etl.py:49-59`). Loaders are thin on purpose so
-  * Catalyst sees a plain `LogicalRelation` and can push filters/projections
-  * into the vectorized parquet reader.
+  * All tables are parquet, read with a declared schema: without one,
+  * every `spark.read.parquet` runs a Spark job to infer the schema from
+  * the footer, the largest fixed cost of building a small query. The nine
+  * fixed tables are declared below with exactly the types inference gives
+  * (`TablesSpec` checks them against the footers); only `events.ts` has
+  * more than one shape on disk, so its type is read from the footer
+  * in-process, which runs no job. Loaders are thin on purpose so Catalyst
+  * sees a plain `LogicalRelation` and can push filters/projections into
+  * the vectorized parquet reader.
   */
 object Tables {
+  private def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t) })
+
+  /** Declared schemas of the nine tables whose shape is fixed. The two
+    * date columns are TIMESTAMP_NTZ: the files store them as
+    * TIMESTAMP_MICROS with isAdjustedToUTC=false.
+    */
+  private val fixedSchemas: Map[String, StructType] = Map(
+    "region" -> struct("r_regionkey" -> IntegerType, "r_name" -> StringType),
+    "nation" -> struct("n_nationkey" -> IntegerType, "n_name" -> StringType,
+      "n_regionkey" -> IntegerType),
+    "customer" -> struct("c_custkey" -> LongType, "c_name" -> StringType,
+      "c_nationkey" -> IntegerType, "c_acctbal" -> DoubleType,
+      "c_mktsegment" -> StringType),
+    "supplier" -> struct("s_suppkey" -> LongType, "s_name" -> StringType,
+      "s_nationkey" -> IntegerType, "s_acctbal" -> DoubleType),
+    "part" -> struct("p_partkey" -> LongType, "p_name" -> StringType,
+      "p_brand" -> StringType, "p_type" -> StringType, "p_size" -> IntegerType,
+      "p_retailprice" -> DoubleType),
+    "orders" -> struct("o_orderkey" -> LongType, "o_custkey" -> LongType,
+      "o_orderstatus" -> StringType, "o_totalprice" -> DoubleType,
+      "o_orderdate" -> TimestampNTZType, "o_orderpriority" -> StringType),
+    "lineitem" -> struct("l_orderkey" -> LongType, "l_partkey" -> LongType,
+      "l_suppkey" -> LongType, "l_linenumber" -> IntegerType,
+      "l_quantity" -> DoubleType, "l_extendedprice" -> DoubleType,
+      "l_discount" -> DoubleType, "l_tax" -> DoubleType,
+      "l_returnflag" -> StringType, "l_linestatus" -> StringType,
+      "l_shipdate" -> TimestampNTZType),
+    "documents" -> struct("doc_id" -> LongType, "text" -> StringType,
+      "lang" -> StringType, "source" -> StringType, "n_chars" -> LongType),
+    "embeddings" -> struct("vec_id" -> LongType,
+      "embedding" -> ArrayType(FloatType), "label" -> IntegerType))
+
+  /** The reader schema of table `name` in `dir`: declared for the fixed
+    * tables; for events, declared except for `ts`, whose type is read
+    * from the footer ([[eventsTsType]]).
+    */
+  def schemaOf(s: SparkSession, dir: String, name: String): StructType =
+    if (name == "events") struct("event_id" -> LongType,
+      "ts" -> eventsTsType(s, dir), "user_id" -> LongType,
+      "event_type" -> StringType, "value" -> DoubleType, "props" -> StringType)
+    else fixedSchemas(name)
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.schema(schemaOf(spark, dir, name)).parquet(s"$dir/$name.parquet")
 
   /** Multi-path scan (reference `readMultipleParquet`, etl.py:49-59): N
-    * parquet paths unioned at the file level into one DataFrame.
+    * lineitem paths unioned at the file level into one DataFrame.
     */
   def loadMulti(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.parquet(paths: _*)
+    spark.read.schema(fixedSchemas("lineitem")).parquet(paths: _*)
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
@@ -37,10 +85,8 @@ object Tables {
     * hard-coding one; any third shape is a loud failure, never a silent
     * unit reinterpretation.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeEventTs(load(s, d, "events"))
-  }
 
   /** Normalize the `ts` column to a session-zoned TIMESTAMP regardless of
     * how the parquet files encoded it:
@@ -63,12 +109,30 @@ object Tables {
           "TIMESTAMP_NTZ, or TIMESTAMP — refusing to guess a time unit")
     }
 
-  /** The physical type `ts` reads as from the footer (nanosAsLong enabled),
-    * used by the streaming loader to build a matching reader schema.
+  /** The type `ts` reads as, taken from the footer of `events.parquet`
+    * (of its first data file when it is a directory, skipping names that
+    * start with `_` or `.`) in-process: no Spark job. Spark's own
+    * footer converter under the session conf, with nanosAsLong enabled,
+    * gives exactly the type schema inference would. Read on every call.
     */
   private[graft] def eventsTsType(s: SparkSession, d: String): DataType = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    load(s, d, "events").schema("ts").dataType
+    val hadoopConf = s.sessionState.newHadoopConf()
+    val path = new Path(s"$d/events.parquet")
+    val fs = path.getFileSystem(hadoopConf)
+    val file = if (!fs.getFileStatus(path).isDirectory) path else
+      fs.listStatus(path).map(_.getPath)
+        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .sortBy(_.getName).headOption
+        .getOrElse(throw new IllegalStateException(s"$path holds no data file"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, hadoopConf))
+    val footer = try reader.getFooter finally reader.close()
+    new ParquetToSparkSchemaConverter(s.sessionState.conf)
+      .convert(footer.getFileMetaData.getSchema)("ts").dataType
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")

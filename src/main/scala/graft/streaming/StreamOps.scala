@@ -109,35 +109,21 @@ object StreamOps {
     finally org.apache.commons.io.FileUtils.deleteQuietly(feed.dir.toFile)
   }
 
-  /** Raw events schema as stored, parameterized on the physical type the
-    * files actually carry for `ts` (TIMESTAMP(NANOS)-era data reads as
-    * long; TIMESTAMP_MICROS data reads as NTZ/LTZ timestamps). The file
-    * streaming source requires a user schema, and a schema that disagrees
-    * with the footer silently reinterprets the stored unit — the r9
-    * failure mode — so the type is sniffed from the batch footer, never
-    * assumed.
-    */
-  def eventsRawSchema(tsType: DataType): StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", tsType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
   /** Streaming scan of the events table (file source), `ts` normalized to
-    * a session-zoned TIMESTAMP exactly like the batch loader: the reader
-    * schema is built from the batch footer's `ts` type (one cheap footer
-    * read), then [[graft.Tables.normalizeEventTs]] applies the identical
+    * a session-zoned TIMESTAMP exactly like the batch loader: the stream
+    * reads with the batch loader's schema ([[graft.Tables.schemaOf]], `ts`
+    * typed from the footer, never assumed — a schema that disagrees with
+    * the footer silently reinterprets the stored unit, the r9 failure
+    * mode), then [[graft.Tables.normalizeEventTs]] applies the identical
     * ns→µs truncation / NTZ cast. Batch and stream therefore always agree
     * on the time unit, whichever generation of testdata is on disk.
     */
-  def eventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = graft.Tables.eventsTsType(s, d)
+  def eventsStream(s: SparkSession, d: String): DataFrame =
     // the file streaming source needs a directory/glob, not a bare file
     graft.Tables.normalizeEventTs(
-      s.readStream.schema(eventsRawSchema(tsType))
+      s.readStream.schema(graft.Tables.schemaOf(s, d, "events"))
         .option("basePath", d)
         .parquet(s"$d/{events}.parquet"))
-  }
 
   /** Tumbling 1-hour streaming aggregation, complete mode into a memory
     * sink, drained synchronously. Returns the final static result — which
@@ -1504,12 +1490,6 @@ object StreamOps {
       |WHERE purchase_id IS NOT NULL OR click_ts + INTERVAL 1 HOUR < w
       |ORDER BY user_id, click_id, purchase_id ASC NULLS FIRST""".stripMargin
 
-  /** Raw documents schema as stored. */
-  val documentsRawSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** Streaming incremental dedup probe: the held-out batch of documents
     * arrives as a STREAM and is probed against the static persisted LSH
     * stores of the seen corpus ([[graft.ext.Dedup.sketchStore]]) — two
@@ -1531,7 +1511,7 @@ object StreamOps {
       .select(col("doc_id"), col("text"))
       .filter(col("doc_id") % Dedup.SEEN_MOD =!= 0)
     val (_, sketches, bands) = Dedup.sketchStore(seen)
-    val stream = ss.readStream.schema(documentsRawSchema)
+    val stream = ss.readStream.schema(graft.Tables.schemaOf(ss, d, "documents"))
       .parquet(s"$d/{documents}.parquet")
       .filter(col("doc_id") % Dedup.SEEN_MOD === 0)
       .select(col("doc_id"), col("text"))

@@ -59,7 +59,7 @@ object ScanCount {
   /** Block until the shared async listener bus is empty.
     * (listenerBus is private[spark] in source but public in bytecode.)
     */
-  private def drainListenerBus(spark: SparkSession): Unit = {
+  private[graft] def drainListenerBus(spark: SparkSession): Unit = {
     val lb = spark.sparkContext.getClass.getMethod("listenerBus")
       .invoke(spark.sparkContext)
     lb.getClass.getMethods
