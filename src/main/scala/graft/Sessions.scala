@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-builder helpers shared by the entry-point mains.
+/** Session helpers: the object-store conf passthrough the entry-point
+  * mains build their root session with, and [[child]], the one
+  * constructor for the engine's per-call child sessions.
   *
   * Object-store passthrough (SURVEY.md §2.1 / S4): the reference reads and
   * writes s3a:// URIs (reference etl.py:15-18,30-39 with credentials from
@@ -27,4 +29,19 @@ object Sessions {
           k.stripPrefix("GRAFT_HADOOP_CONF_").replace("__", "."), v)
       case (acc, _) => acc
     }
+
+  /** A `newSession()` child of `s` with artifact isolation off, so it and
+    * every session a stream clones from it run their tasks under the one
+    * application class loader. Spark 4.1 keys its codegen cache by class
+    * loader, so an isolated child (its own executor class loader) would
+    * recompile every generated class on each call. The engine adds no
+    * session-scoped artifacts, so this changes which loader runs the code,
+    * not what the code can see. The conf is read once, on the child's
+    * first use, so it is set before the child runs anything.
+    */
+  def child(s: SparkSession): SparkSession = {
+    val c = s.newSession()
+    c.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    c
+  }
 }

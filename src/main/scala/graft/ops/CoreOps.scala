@@ -3,6 +3,7 @@ package graft.ops
 import graft.{Det, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Core relational surface of the reference (SURVEY.md §2.1, §2.2, §2.6):
   * scans, projection, filter, row-level cleaning, dedup, sorts, limits.
@@ -492,14 +493,20 @@ object CoreOps {
     * the DPP spec covers the runtime-pruned variant of the same
     * layout). The oracle recomputes from the unpartitioned original,
     * so the partition round-trip is verified lossless including the
-    * partition column's value restoration from directory names.
+    * partition column's value restoration from directory names. The
+    * read-back declares its schema (the data columns' declared types, then
+    * `event_type` as the string partition column), so reading it lists the
+    * directory and runs no footer-inference job.
     */
   def partitionedSink(s: SparkSession, d: String): DataFrame = {
     val out = java.nio.file.Files.createTempDirectory("graft_part").toString
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .write.mode("overwrite").partitionBy("event_type").parquet(out)
-    s.read.parquet(out)
+    val ev = Tables.schemaOf(s, d, "events")
+    val readSchema = StructType(
+      Seq("event_id", "user_id", "value").map(ev(_)) :+ StructField("event_type", StringType))
+    s.read.schema(readSchema).parquet(out)
       .filter(col("event_type") === "purchase") // static partition pruning
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_purch"),

@@ -29,10 +29,13 @@ object StreamOps {
     * at a fraction of the fixed cost; on a real cluster you would size
     * this to the stream's key cardinality instead. A child session scopes
     * the override (and the memory-sink registration) away from the
-    * caller's session.
+    * caller's session. It comes from [[graft.Sessions.child]], with
+    * artifact isolation off: Spark 4.1 keys its codegen cache by class
+    * loader, so an isolated child would recompile the stream's code on
+    * every run.
     */
   private def tuned(s: SparkSession): SparkSession = {
-    val ss = s.newSession()
+    val ss = graft.Sessions.child(s)
     ss.conf.set("spark.sql.shuffle.partitions", "4")
     ss
   }

@@ -62,7 +62,10 @@ object GraftSqlShim {
     * planner/optimizer registrations — the scoped home for engine
     * extensions a caller doesn't want visible session-wide (models a
     * deployment that opts in via `spark.sql.extensions` on one session).
+    * Built by [[_root_.graft.Sessions.child]], with artifact isolation off:
+    * Spark 4.1 keys its codegen cache by class loader, so an isolated
+    * sibling would recompile its generated classes on every call.
     */
   def scopedSession(spark: SparkSession): SparkSession =
-    spark.asInstanceOf[classic.SparkSession].newSession()
+    _root_.graft.Sessions.child(spark)
 }

@@ -49,6 +49,12 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  for (name <- Seq("st_tumbling_stream", "st_interval_join"))
+    test(s"$name: a warm re-run compiles no generated classes") {
+      val n = Recompiles.onThirdRun(name)
+      assert(n == 0, s"$name compiled $n classes on its third run")
+    }
+
   test("stream and batch loaders agree on the events time unit (data-shape guard)") {
     // The r9 regression: testdata regenerated with ts as TIMESTAMP_MICROS
     // while the stream loader forced a nanos-as-long schema — every

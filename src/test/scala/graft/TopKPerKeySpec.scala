@@ -92,6 +92,11 @@ class TopKPerKeySpec extends AnyFunSuite {
       "rule leaked into the parent session")
   }
 
+  test("rewrite rule: a warm re-run compiles no generated classes") {
+    val n = Recompiles.onThirdRun("x_topk_per_key_rule")
+    assert(n == 0, s"x_topk_per_key_rule compiled $n classes on its third run")
+  }
+
   test("rewrite rule declines rank-kept, rank()-based, and unpartitioned shapes") {
     val scoped = org.apache.spark.sql.graft.GraftSqlShim.scopedSession(spark)
     org.apache.spark.sql.graft.GraftSqlShim.registerStrategy(scoped, graft.plans.TopKPerKeyStrategy)
