@@ -2,7 +2,6 @@ package graft.expr
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Standard `SparkSessionExtensions` entry point: lets any deployment get
   * the engine's native functions at session-build time via
@@ -30,32 +29,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // opt-in accuracy-for-speed switch: COUNT(DISTINCT x) → HLL++ sketch
     // when spark.graft.approx.distinct=true (default off — see the rule)
     ext.injectOptimizerRule(_ => graft.plans.RewriteExactDistinctToApprox)
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),
-      (exprs: Seq[Expression]) => {
-        // fail analysis on wrong arity: exprs(1) on a 1-arg call would be
-        // an opaque IndexOutOfBounds, and a 3-arg call would otherwise
-        // silently compute cosine of the first two
-        require(exprs.length == 2,
-          s"graft_cosine requires exactly 2 arguments, got ${exprs.length}")
-        CosineSim(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_int_l2"),
-      new ExpressionInfo(classOf[IntL2].getName, "graft_int_l2"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"graft_int_l2 requires exactly 2 arguments, got ${exprs.length}")
-        IntL2(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"graft_minhash requires exactly 1 argument, got ${exprs.length}")
-        MinHashSig(exprs.head, MinHashSig.K, MinHashSig.M)
-      }))
+    // the as-of merge join operator, planned 1:1 (the Scala API
+    // self-registers the same object on first use too)
+    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    VectorExprs.functions.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder)))
   }
 }

@@ -1,8 +1,9 @@
 package graft.expr
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
@@ -150,9 +151,39 @@ case class IntL2(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** One of graft's native SQL functions: its name, implementing class and
+  * argument count, and how to build it from checked arguments.
+  */
+final case class NativeFunction(name: String, cls: Class[_ <: Expression],
+    arity: Int, make: Seq[Expression] => Expression) {
+  def info: ExpressionInfo = new ExpressionInfo(cls.getName, name)
+
+  /** Fails analysis on a wrong argument count: `exprs(1)` on a 1-arg call
+    * would be an opaque IndexOutOfBounds, and a 3-arg call would
+    * otherwise silently build from the first two.
+    */
+  val builder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == arity, s"$name requires exactly $arity " +
+      s"argument${if (arity == 1) "" else "s"}, got ${exprs.length}")
+    make(exprs)
+  }
+}
+
 object VectorExprs {
-  /** Registers graft_cosine(a, b) in the session's function registry so it
-    * is usable from SQL text and expr(...) — the Spark-4-clean way to
+  /** The one function table both registration paths read:
+    * [[GraftExtensions]] injects it at session build, [[register]]
+    * installs it per session.
+    */
+  val functions: Seq[NativeFunction] = Seq(
+    NativeFunction("graft_cosine", classOf[CosineSim], 2,
+      e => CosineSim(e(0), e(1))),
+    NativeFunction("graft_int_l2", classOf[IntL2], 2,
+      e => IntL2(e(0), e(1))),
+    NativeFunction("graft_minhash", classOf[MinHashSig], 1,
+      e => MinHashSig(e.head, MinHashSig.K, MinHashSig.M)))
+
+  /** Registers [[functions]] in the session's function registry so they
+    * are usable from SQL text and expr(...) — the Spark-4-clean way to
     * expose a custom Expression without internal Column constructors.
     */
   def register(s: SparkSession): Unit = {
@@ -164,21 +195,11 @@ object VectorExprs {
     // implementing class in ExpressionInfo — skip only when the existing
     // entry is provably ours, otherwise (re)register and own the name for
     // graft's frames (documented override).
-    ensure(s, "graft_cosine", classOf[CosineSim].getName,
-      exprs => CosineSim(exprs(0), exprs(1)))
-    ensure(s, "graft_minhash", classOf[MinHashSig].getName,
-      exprs => MinHashSig(exprs.head, MinHashSig.K, MinHashSig.M))
-    ensure(s, "graft_int_l2", classOf[IntL2].getName,
-      exprs => IntL2(exprs(0), exprs(1)))
-  }
-
-  private def ensure(s: SparkSession, name: String, className: String,
-      builder: Seq[Expression] => Expression): Unit = {
     val reg = s.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-    val ours = reg.lookupFunction(id).exists(_.getClassName == className)
-    if (!ours) reg.registerFunction(id,
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        className, name), builder)
+    functions.foreach { f =>
+      val id = FunctionIdentifier(f.name)
+      if (!reg.lookupFunction(id).exists(_.getClassName == f.cls.getName))
+        reg.registerFunction(id, f.info, f.builder)
+    }
   }
 }

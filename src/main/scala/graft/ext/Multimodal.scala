@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,13 +9,15 @@ import org.apache.spark.sql.functions._
   * `binary` payload columns plus typed metadata, processed by batched
   * per-partition decoders.
   *
-  * Two decode paths: [[bmpDecodeRaw]] is a GENUINE one — real 24-bit BMP
-  * container bytes parsed by the JDK's ImageIO BMP codec (header dims +
-  * full-raster channel means), oracle-verified via the deterministic
-  * fixture formulas. [[decodeFeaturesRaw]] keeps the honestly-stubbed
-  * shape for codecs the sandbox lacks (JPEG/FFmpeg): sha-256-derived
-  * fake features behind the same batched mapPartitions contract a JNI
-  * decoder would plug into.
+  * Two decode paths. The GENUINE one is [[decodeImages]]: real
+  * BMP/JPEG/PNG/GIF/TIFF container bytes (and MJPEG-in-AVI frames)
+  * parsed by the JDK's ImageIO codecs (header dims + full-raster channel
+  * means), oracle-verified via the deterministic fixture formulas; WAV,
+  * MP4, AVI and EXIF containers are walked byte by byte here.
+  * [[decodeFeaturesRaw]] keeps the honestly-stubbed shape for media the
+  * JDK has no codec for (compressed video and audio, e.g. H.264 or AAC
+  * via FFmpeg): sha-256-derived fake features behind the same batched
+  * mapPartitions contract a JNI decoder would plug into.
   *
   * Scale notes: payloads never pass through a shuffle (decode is a narrow
   * map over the scan); batching amortizes per-call setup the way Arrow
@@ -34,9 +36,11 @@ object Multimodal {
     */
   private def docIds(s: SparkSession, d: String): Dataset[Long] = {
     import s.implicits._
-    Tables.documents(s, d).select(col("doc_id")).as[Long]
-      .repartition(s.sparkContext.defaultParallelism)
+    spread(Tables.documents(s, d).select(col("doc_id")).as[Long])
   }
+
+  private def spread(ids: Dataset[Long]): Dataset[Long] =
+    ids.repartition(ids.sparkSession.sparkContext.defaultParallelism)
 
   /** Binary payload + metadata extraction, all builtins (oracle-verified):
     * byte length, sha2-256 digest, base64 prefix. The payload here is the
@@ -98,7 +102,6 @@ object Multimodal {
           .as("feat_sig"))
       .orderBy(col("doc_id"))
 
-  // ---- Real-container fixture: 24-bit BMP, decoded by the JDK's real
   /** ImageIO's default stream wrappers are DISK-backed: with
     * `getUseCache()` true (the JDK default), `createImageInputStream`
     * over a ByteArrayInputStream returns a FileCacheImageInputStream and
@@ -115,13 +118,89 @@ object Multimodal {
   private lazy val imageIoNoDiskCache: Unit =
     javax.imageio.ImageIO.setUseCache(false)
 
-  // ---- ImageIO BMP plugin (the one genuine media codec in this sandbox).
+  private def imageWriter(format: String): javax.imageio.ImageWriter = {
+    imageIoNoDiskCache
+    javax.imageio.ImageIO.getImageWritersByFormatName(format).next()
+  }
 
-  /** Serialize a solid-color 24-bit BMP — BITMAPFILEHEADER (14 bytes) +
-    * BITMAPINFOHEADER (40 bytes) + bottom-up BGR rows padded to 4-byte
-    * boundaries. This is a REAL container file: any BMP reader decodes it.
+  /** One batch's ImageIO handles for one format. The reader is made once
+    * per batch: plugin lookup + reader construction are the per-image
+    * fixed costs `ImageIO.read` would re-pay for every image, and only
+    * setInput varies per payload. The writer is made on first use (the
+    * hand-assembled BMP payloads never need one).
     */
-  def bmpBytes(w: Int, h: Int, r: Int, g: Int, b: Int): Array[Byte] = {
+  private final class ImageCodec(format: String) {
+    imageIoNoDiskCache
+    private val reader =
+      javax.imageio.ImageIO.getImageReadersByFormatName(format).next()
+    private var madeWriter: javax.imageio.ImageWriter = null
+
+    def writer: javax.imageio.ImageWriter = {
+      if (madeWriter == null) madeWriter = imageWriter(format)
+      madeWriter
+    }
+
+    /** Decodes `len` bytes of `bytes` at `off`; refuses an undecodable
+      * payload, naming it by `what`.
+      */
+    def read(bytes: Array[Byte], what: => String, off: Int = 0,
+        len: Int = -1): java.awt.image.BufferedImage = {
+      val iis = javax.imageio.ImageIO.createImageInputStream(
+        new java.io.ByteArrayInputStream(bytes, off,
+          if (len < 0) bytes.length - off else len))
+      reader.setInput(iis)
+      val img = try reader.read(0) finally iis.close()
+      require(img != null, s"undecodable $what")
+      img
+    }
+
+    def dispose(): Unit = {
+      reader.dispose()
+      if (madeWriter != null) madeWriter.dispose()
+    }
+  }
+
+  /** The batched ImageIO decode behind every image leg — the
+    * mapPartitions contract a JNI decoder would plug into: `ids` (already
+    * spread over the cores) are cut into batches of `batch`, each batch
+    * gets ONE [[ImageCodec]] for `format`, and `perDoc` builds a doc's
+    * payload (through `codec.writer` if it needs an encoder) and turns
+    * each image it decodes with `codec.read` into rows. The batch is
+    * mapped strictly, so the codec is disposed after its last row.
+    */
+  private def decodeImages[A: Encoder](ids: Dataset[Long], format: String,
+      batch: Int)(perDoc: (ImageCodec, Long) => Seq[A]): Dataset[A] =
+    ids.mapPartitions(_.grouped(batch).flatMap { docs =>
+      val codec = new ImageCodec(format)
+      try docs.flatMap(perDoc(codec, _)) finally codec.dispose()
+    })
+
+  /** Integer (floor) channel means over every pixel, from one bulk
+    * raster grab instead of w×h `getRGB` calls.
+    */
+  private def meanRgb(img: java.awt.image.BufferedImage): (Int, Int, Int) = {
+    val px = img.getRGB(0, 0, img.getWidth, img.getHeight,
+      null, 0, img.getWidth)
+    var (sr, sg, sb) = (0L, 0L, 0L)
+    var i = 0
+    while (i < px.length) {
+      val p = px(i)
+      sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
+      i += 1
+    }
+    val n = px.length.toLong
+    ((sr / n).toInt, (sg / n).toInt, (sb / n).toInt)
+  }
+
+  private def packRgb(r: Int, g: Int, b: Int): Int =
+    ((r & 0xff) << 16) | ((g & 0xff) << 8) | (b & 0xff)
+
+  /** Serialize a 24-bit BMP — BITMAPFILEHEADER (14 bytes) +
+    * BITMAPINFOHEADER (40 bytes) + bottom-up BGR rows padded to 4-byte
+    * boundaries. `rgb(x, row)` is the packed 0xRRGGBB pixel at column x
+    * of stored row `row` (row 0 is the image's bottom row).
+    */
+  private def bmp24(w: Int, h: Int)(rgb: (Int, Int) => Int): Array[Byte] = {
     val rowSize = ((3 * w + 3) / 4) * 4
     val dataSize = rowSize * h
     val buf = java.nio.ByteBuffer.allocate(54 + dataSize)
@@ -133,97 +212,64 @@ object Multimodal {
     var y = 0
     while (y < h) {
       var x = 0
-      while (x < w) { buf.put(b.toByte).put(g.toByte).put(r.toByte); x += 1 }
-      var p = 3 * w
-      while (p < rowSize) { buf.put(0.toByte); p += 1 }
+      while (x < w) {
+        val p = rgb(x, y)
+        buf.put(p.toByte).put((p >> 8).toByte).put((p >> 16).toByte)
+        x += 1
+      }
+      buf.position(buf.position() + rowSize - 3 * w) // zero row padding
       y += 1
     }
     buf.array()
+  }
+
+  /** Solid-color 24-bit BMP ([[bmp24]]). This is a REAL container file:
+    * any BMP reader decodes it. It is hand-assembled rather than encoded
+    * by the JDK so that its byte size is a closed form the oracle checks.
+    */
+  def bmpBytes(w: Int, h: Int, r: Int, g: Int, b: Int): Array[Byte] = {
+    val rgb = packRgb(r, g, b)
+    bmp24(w, h)((_, _) => rgb)
+  }
+
+  /** Solid-color image payload in `format` ("jpeg", "png", "gif" or
+    * "tiff") — a REAL container from the JDK encoder, not a synthetic
+    * byte layout like [[bmpBytes]]: JPEG's entropy coding, PNG's zlib
+    * scanlines, GIF's LZW raster and TIFF's IFD/strips can't be
+    * hand-assembled deterministically the way BMP's raster can. GIF is
+    * PALETTIZED — normally a lossy quantization — but a solid frame maps
+    * to a palette holding exactly that color, so GIF round-trips
+    * losslessly like PNG and TIFF; only JPEG is lossy ([[JPEG_TOL]]).
+    */
+  def solidImageBytes(format: String, w: Int, h: Int,
+      r: Int, g: Int, b: Int): Array[Byte] = {
+    val writer = imageWriter(format)
+    try encodeSolid(writer, w, h, r, g, b) finally writer.dispose()
+  }
+
+  /** [[solidImageBytes]] through a caller's writer — the registry lookup
+    * + codec setup dominates tiny-image encodes, so batch callers reuse
+    * one writer per batch ([[ImageCodec]]).
+    */
+  private def encodeSolid(writer: javax.imageio.ImageWriter,
+      w: Int, h: Int, r: Int, g: Int, b: Int): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(
+      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    // TYPE_INT_RGB is int-buffer backed: one bulk fill, no per-pixel calls
+    java.util.Arrays.fill(img.getRaster.getDataBuffer
+      .asInstanceOf[java.awt.image.DataBufferInt].getData, packRgb(r, g, b))
+    imageIoNoDiskCache
+    val baos = new java.io.ByteArrayOutputStream()
+    val ios = javax.imageio.ImageIO.createImageOutputStream(baos)
+    writer.setOutput(ios)
+    try writer.write(img) finally ios.close()
+    baos.toByteArray
   }
 
   /** Deterministic fixture dims/color per doc (replayable in the oracle). */
   def bmpFixtureParams(docId: Long): (Int, Int, Int, Int, Int) = (
     16 + ((docId * 31) % 64).toInt, 16 + ((docId * 17) % 48).toInt,
     (docId % 256).toInt, ((docId * 7) % 256).toInt, ((docId * 13) % 256).toInt)
-
-  case class BmpFeature(doc_id: Long, n_bytes: Int, width: Int, height: Int,
-      mean_r: Int, mean_g: Int, mean_b: Int)
-
-  /** GENUINE decode path: per-partition batched ImageIO decode of real
-    * BMP payloads — width/height come from parsing the container header
-    * and the channel means from rasterizing every pixel, NOT from any
-    * closed form (the fixture's dims being formula-derived is what lets
-    * the ORACLE check the decoder's output; the Spark side never looks at
-    * the formula after payload construction). Same decoder-handle +
-    * batch shape as [[decodeFeaturesRaw]]; a JPEG/PNG pipeline is this
-    * exact code with a different ImageIO plugin.
-    */
-  def bmpDecodeRaw(s: SparkSession, d: String): Dataset[BmpFeature] = {
-    import s.implicits._
-    docIds(s, d).mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        // The batched-decoder contract made real: ONE ImageReader is
-        // allocated per batch (plugin lookup + reader construction are
-        // the per-image fixed costs ImageIO.read would re-pay 64×); only
-        // setInput varies per payload. Disposed after the strict map.
-        imageIoNoDiskCache
-        val reader =
-          javax.imageio.ImageIO.getImageReadersByFormatName("bmp").next()
-        try batch.map { id =>
-          val (w0, h0, r0, g0, b0) = bmpFixtureParams(id)
-          val payload = bmpBytes(w0, h0, r0, g0, b0)
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          reader.setInput(iis)
-          val img = try reader.read(0) finally iis.close()
-          require(img != null, s"undecodable BMP payload for doc $id")
-          val (w, h) = (img.getWidth, img.getHeight)
-          var (sr, sg, sb) = (0L, 0L, 0L)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val px = img.getRGB(x, y)
-              sr += (px >> 16) & 0xff; sg += (px >> 8) & 0xff; sb += px & 0xff
-              x += 1
-            }
-            y += 1
-          }
-          val n = w.toLong * h
-          BmpFeature(id, payload.length, w, h,
-            (sr / n).toInt, (sg / n).toInt, (sb / n).toInt)
-        } finally reader.dispose()
-      }
-    }
-  }
-
-  /** Declared scalar form of [[bmpDecodeRaw]] — every column here was
-    * produced by a real codec parsing real container bytes; the oracle
-    * replays the fixture formulas (dims, byte size incl. row padding,
-    * solid-color means) to certify the decoder end-to-end.
-    */
-  def bmpDecode(s: SparkSession, d: String): DataFrame =
-    bmpDecodeRaw(s, d).toDF()
-      .select(col("doc_id"), col("n_bytes"), col("width"), col("height"),
-        col("mean_r"), col("mean_g"), col("mean_b"))
-      .orderBy(col("doc_id"))
-
-  /** Resize planning over GENUINELY DECODED dimensions: fit each media
-    * item into a 224×224 model input box preserving aspect ratio (the
-    * standard vision-model preprocessing contract) — scale =
-    * 224/max(w,h), target dims rounded. width/height are parsed out of
-    * the real BMP container by [[bmpDecodeRaw]]'s ImageIO pass; the
-    * geometry itself stays closed-form arithmetic, so the whole path —
-    * decode included — is oracle-verified.
-    */
-  def resizePlan(s: SparkSession, d: String): DataFrame =
-    bmpDecodeRaw(s, d).toDF()
-      .withColumn("scale",
-        lit(224.0) / greatest(col("width"), col("height")).cast("double"))
-      .select(col("doc_id"), col("width"), col("height"),
-        expr("CAST(round(width * scale) AS INT)").as("tgt_w"),
-        expr("CAST(round(height * scale) AS INT)").as("tgt_h"))
-      .orderBy(col("doc_id"))
 
   /** Deterministic JPEG fixture dims/color per doc (replayable in the
     * oracle). Distinct formula family from the BMP fixture so a cross-
@@ -233,29 +279,78 @@ object Multimodal {
     16 + ((docId * 29) % 48).toInt, 16 + ((docId * 19) % 40).toInt,
     (docId % 256).toInt, ((docId * 7) % 256).toInt, ((docId * 13) % 256).toInt)
 
-  /** Solid-color JPEG payload — a REAL container produced by the JDK
-    * encoder (SOI/DHT/DQT/SOS markers, entropy-coded), not a synthetic
-    * byte layout like [[bmpBytes]]: JPEG's entropy coding can't be
-    * hand-assembled deterministically the way BMP's raster can.
+  /** Deterministic PNG fixture dims/color per doc — third distinct
+    * formula family (multipliers 23/11 for dims, 5/11 for color) so no
+    * cross-wired codec path can accidentally verify.
     */
-  def jpegBytes(w: Int, h: Int, r: Int, g: Int, b: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val rgb = (r << 16) | (g << 8) | b
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) { img.setRGB(x, y, rgb); x += 1 }
-      y += 1
+  def pngFixtureParams(docId: Long): (Int, Int, Int, Int, Int) = (
+    16 + ((docId * 23) % 56).toInt, 16 + ((docId * 11) % 44).toInt,
+    (docId % 256).toInt, ((docId * 5) % 256).toInt, ((docId * 11) % 256).toInt)
+
+  /** Deterministic GIF fixture dims/color per doc — fourth distinct
+    * formula family (29/13 dims, 7/13/3 color) so no cross-wired codec
+    * path can accidentally verify.
+    */
+  def gifFixtureParams(docId: Long): (Int, Int, Int, Int, Int) = (
+    16 + ((docId * 29) % 48).toInt, 16 + ((docId * 13) % 40).toInt,
+    ((docId * 7) % 256).toInt, ((docId * 13) % 256).toInt,
+    ((docId * 3) % 256).toInt)
+
+  /** Deterministic TIFF fixture dims/color per doc — fifth distinct
+    * formula family (31/17 dims, 11/17/5 color).
+    */
+  def tiffFixtureParams(docId: Long): (Int, Int, Int, Int, Int) = (
+    16 + ((docId * 31) % 52).toInt, 16 + ((docId * 17) % 36).toInt,
+    ((docId * 11) % 256).toInt, ((docId * 17) % 256).toInt,
+    ((docId * 5) % 256).toInt)
+
+  /** The solid-color fixture codecs: ImageIO format name → that format's
+    * own fixture formula family.
+    */
+  private val solidFixtures: Map[String, Long => (Int, Int, Int, Int, Int)] =
+    Map("bmp" -> bmpFixtureParams, "jpeg" -> jpegFixtureParams,
+      "png" -> pngFixtureParams, "gif" -> gifFixtureParams,
+      "tiff" -> tiffFixtureParams)
+
+  case class ImageFeature(doc_id: Long, n_bytes: Int, width: Int, height: Int,
+      mean_r: Int, mean_g: Int, mean_b: Int)
+
+  /** GENUINE decode path: per-partition batched ImageIO decode
+    * ([[decodeImages]]) of real `format` payloads, one of the
+    * [[solidFixtures]] formats — width/height come from parsing the
+    * container header and the channel means from rasterizing every
+    * pixel, NOT from any closed form (the fixture's formulas are what let
+    * the ORACLE check the decoder's output; the Spark side never looks at
+    * them after payload construction). The formats exercise different
+    * legs of the decode matrix: BMP raw raster, JPEG DCT, PNG zlib, GIF
+    * palette + LZW, TIFF IFD/strips.
+    */
+  def imageDecodeRaw(s: SparkSession, d: String,
+      format: String): Dataset[ImageFeature] = {
+    import s.implicits._
+    val fixture = solidFixtures(format)
+    decodeImages(docIds(s, d), format, 64) { (codec, id) =>
+      val (w, h, r, g, b) = fixture(id)
+      val payload = if (format == "bmp") bmpBytes(w, h, r, g, b)
+        else encodeSolid(codec.writer, w, h, r, g, b)
+      val img = codec.read(payload, s"$format payload for doc $id")
+      val (mr, mg, mb) = meanRgb(img)
+      Seq(ImageFeature(id, payload.length, img.getWidth, img.getHeight,
+        mr, mg, mb))
     }
-    imageIoNoDiskCache
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", baos)
-    baos.toByteArray
   }
 
-  case class JpegFeature(doc_id: Long, width: Int, height: Int,
-      color_ok: Boolean)
+  /** Declared scalar form of [[imageDecodeRaw]] for a lossless format —
+    * every column here was produced by a real codec parsing real
+    * container bytes; the oracle replays the fixture formulas (dims,
+    * solid-color means) to certify the decoder end-to-end. `n_bytes` is
+    * declared for BMP only: its size (row padding included) is a closed
+    * form, while the JDK encoders' sizes depend on their compression.
+    */
+  private def imageDecode(format: String)(s: SparkSession, d: String): DataFrame = {
+    val df = imageDecodeRaw(s, d, format).toDF()
+    (if (format == "bmp") df else df.drop("n_bytes")).orderBy(col("doc_id"))
+  }
 
   /** JPEG decoded-mean tolerance: lossy round-trip of a SOLID color moves
     * the integer channel mean by at most 3 across the full fixture
@@ -273,55 +368,44 @@ object Multimodal {
     */
   private[graft] val JPEG_TOL = 4
 
-  /** Second REAL codec after [[bmpDecodeRaw]]: per-partition batched
-    * ImageIO decode of genuine JPEG payloads. Dims are hash-verified
-    * exactly (lossless in JPEG); channel means can't be — encoding is
-    * lossy — so the decode is certified by `color_ok`: decoded means
-    * within [[JPEG_TOL]] of the fixture color, TRUE for every row in the
-    * oracle. The means themselves still come from rasterizing every
-    * pixel; ExtensionSpec additionally pins the raw deviation and the
-    * corrupt-magic refusal.
+  /** Every decoded channel mean within [[JPEG_TOL]] of the encoded color. */
+  private def jpegColorOk(mean: (Int, Int, Int), color: (Int, Int, Int)): Boolean =
+    math.abs(mean._1 - color._1) <= JPEG_TOL &&
+      math.abs(mean._2 - color._2) <= JPEG_TOL &&
+      math.abs(mean._3 - color._3) <= JPEG_TOL
+
+  /** Declared form of the JPEG decode. Dims are hash-verified exactly
+    * (lossless in JPEG); channel means can't be — encoding is lossy — so
+    * the decode is certified by `color_ok`: decoded means within
+    * [[JPEG_TOL]] of the fixture color, TRUE for every row in the oracle.
+    * ExtensionSpec additionally pins the raw means and the corrupt-magic
+    * refusal.
     */
-  def jpegDecodeRaw(s: SparkSession, d: String): Dataset[JpegFeature] = {
+  def jpegDecode(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    docIds(s, d).mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        imageIoNoDiskCache
-        val reader =
-          javax.imageio.ImageIO.getImageReadersByFormatName("jpeg").next()
-        try batch.map { id =>
-          val (w0, h0, r0, g0, b0) = jpegFixtureParams(id)
-          val payload = jpegBytes(w0, h0, r0, g0, b0)
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          reader.setInput(iis)
-          val img = try reader.read(0) finally iis.close()
-          require(img != null, s"undecodable JPEG payload for doc $id")
-          val (w, h) = (img.getWidth, img.getHeight)
-          var (sr, sg, sb) = (0L, 0L, 0L)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val px = img.getRGB(x, y)
-              sr += (px >> 16) & 0xff; sg += (px >> 8) & 0xff; sb += px & 0xff
-              x += 1
-            }
-            y += 1
-          }
-          val n = w.toLong * h
-          val ok = math.abs(sr / n - r0) <= JPEG_TOL &&
-            math.abs(sg / n - g0) <= JPEG_TOL && math.abs(sb / n - b0) <= JPEG_TOL
-          JpegFeature(id, w, h, ok)
-        } finally reader.dispose()
-      }
-    }
+    imageDecodeRaw(s, d, "jpeg").map { f =>
+      val (_, _, r, g, b) = jpegFixtureParams(f.doc_id)
+      (f.doc_id, f.width, f.height,
+        jpegColorOk((f.mean_r, f.mean_g, f.mean_b), (r, g, b)))
+    }.toDF("doc_id", "width", "height", "color_ok")
+      .orderBy(col("doc_id"))
   }
 
-  /** Declared form of [[jpegDecodeRaw]] for the verification registry. */
-  def jpegDecode(s: SparkSession, d: String): DataFrame =
-    jpegDecodeRaw(s, d).toDF()
-      .select(col("doc_id"), col("width"), col("height"), col("color_ok"))
+  /** Resize planning over GENUINELY DECODED dimensions: fit each media
+    * item into a 224×224 model input box preserving aspect ratio (the
+    * standard vision-model preprocessing contract) — scale =
+    * 224/max(w,h), target dims rounded. width/height are parsed out of
+    * the real BMP container by [[imageDecodeRaw]]'s ImageIO pass; the
+    * geometry itself stays closed-form arithmetic, so the whole path —
+    * decode included — is oracle-verified.
+    */
+  def resizePlan(s: SparkSession, d: String): DataFrame =
+    imageDecodeRaw(s, d, "bmp").toDF()
+      .withColumn("scale",
+        lit(224.0) / greatest(col("width"), col("height")).cast("double"))
+      .select(col("doc_id"), col("width"), col("height"),
+        expr("CAST(round(width * scale) AS INT)").as("tgt_w"),
+        expr("CAST(round(height * scale) AS INT)").as("tgt_h"))
       .orderBy(col("doc_id"))
 
   /** Gradient BMP fixture params per doc: dims are multiples of 8 so the
@@ -335,34 +419,13 @@ object Multimodal {
     8 * (2 + (docId % 5)).toInt, 8 * (2 + ((docId / 5) % 5)).toInt,
     ((docId % 7) * 31).toInt)
 
-  /** Serialize a patterned 24-bit BMP (r = (x·13 + phase) mod 256,
-    * g ramps along y, b = (x+y) mod 256) — same container layout as
-    * [[bmpBytes]] but non-constant content, which is what a perceptual
-    * hash needs.
+  /** Patterned 24-bit BMP ([[bmp24]]): r = (x·13 + phase) mod 256, g
+    * ramps along the stored rows, b = (x+y) mod 256 — non-constant
+    * content, which is what a perceptual hash needs.
     */
-  def bmpGradientBytes(w: Int, h: Int, ph: Int): Array[Byte] = {
-    val rowSize = ((3 * w + 3) / 4) * 4
-    val dataSize = rowSize * h
-    val buf = java.nio.ByteBuffer.allocate(54 + dataSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.put('B'.toByte).put('M'.toByte).putInt(54 + dataSize)
-      .putShort(0).putShort(0).putInt(54)
-    buf.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24)
-      .putInt(0).putInt(dataSize).putInt(2835).putInt(2835).putInt(0).putInt(0)
-    var y = 0
-    while (y < h) { // bottom-up rows, like bmpBytes
-      var x = 0
-      while (x < w) {
-        val r = (x * 13 + ph) % 256; val g = y * 255 / (h - 1)
-        buf.put(((x + y) % 256).toByte).put(g.toByte).put(r.toByte)
-        x += 1
-      }
-      var p = 3 * w
-      while (p < rowSize) { buf.put(0.toByte); p += 1 }
-      y += 1
-    }
-    buf.array()
-  }
+  def bmpGradientBytes(w: Int, h: Int, ph: Int): Array[Byte] =
+    bmp24(w, h)((x, y) =>
+      packRgb((x * 13 + ph) % 256, y * 255 / (h - 1), (x + y) % 256))
 
   case class PhashFeature(doc_id: Long, width: Int, height: Int,
       ahash: String)
@@ -387,51 +450,40 @@ object Multimodal {
     */
   def phashDecodeOf(ids: Dataset[Long]): Dataset[PhashFeature] = {
     import ids.sparkSession.implicits._
-    // same parallelism rescue as [[docIds]] — the caller's id frame is
-    // usually a 1-2 partition scan or checkpoint slice
-    ids.repartition(ids.sparkSession.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        imageIoNoDiskCache
-        val reader =
-          javax.imageio.ImageIO.getImageReadersByFormatName("bmp").next()
-        try batch.map { id =>
-          val (w, h, ph) = gradFixtureParams(id)
-          val payload = bmpGradientBytes(w, h, ph)
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          reader.setInput(iis)
-          val img = try reader.read(0) finally iis.close()
-          require(img != null, s"undecodable gradient BMP for doc $id")
-          require(img.getWidth == w && img.getHeight == h,
-            s"decoded dims mismatch for doc $id")
-          val (bw, bh) = (w / 8, h / 8)
-          val means = new Array[Long](64)
-          var by = 0
-          while (by < 8) {
-            var bx = 0
-            while (bx < 8) {
-              var sum = 0L
-              var y = by * bh
-              while (y < (by + 1) * bh) {
-                var x = bx * bw
-                while (x < (bx + 1) * bw) {
-                  sum += (img.getRGB(x, y) >> 16) & 0xff
-                  x += 1
-                }
-                y += 1
-              }
-              means(by * 8 + bx) = sum / (bw.toLong * bh)
-              bx += 1
+    // the caller's id frame is usually a 1-2 partition scan or
+    // checkpoint slice: spread it like [[docIds]]
+    decodeImages(spread(ids), "bmp", 64) { (codec, id) =>
+      val (w, h, ph) = gradFixtureParams(id)
+      val img = codec.read(bmpGradientBytes(w, h, ph),
+        s"gradient BMP for doc $id")
+      require(img.getWidth == w && img.getHeight == h,
+        s"decoded dims mismatch for doc $id")
+      val px = img.getRGB(0, 0, w, h, null, 0, w)
+      val (bw, bh) = (w / 8, h / 8)
+      val means = new Array[Long](64)
+      var by = 0
+      while (by < 8) {
+        var bx = 0
+        while (bx < 8) {
+          var sum = 0L
+          var y = by * bh
+          while (y < (by + 1) * bh) {
+            var x = bx * bw
+            while (x < (bx + 1) * bw) {
+              sum += (px(y * w + x) >> 16) & 0xff
+              x += 1
             }
-            by += 1
+            y += 1
           }
-          val gmean = means.sum / 64
-          val sb = new StringBuilder(64)
-          means.foreach(m => sb.append(if (m > gmean) '1' else '0'))
-          PhashFeature(id, w, h, sb.toString)
-        } finally reader.dispose()
+          means(by * 8 + bx) = sum / (bw.toLong * bh)
+          bx += 1
+        }
+        by += 1
       }
+      val gmean = means.sum / 64
+      val sb = new StringBuilder(64)
+      means.foreach(m => sb.append(if (m > gmean) '1' else '0'))
+      Seq(PhashFeature(id, w, h, sb.toString))
     }
   }
 
@@ -440,7 +492,7 @@ object Multimodal {
     * 64-bit signature, and identical signatures bucket together with the
     * keep-smallest-id canonical rule ([[graft.ext.Dedup]]'s convention).
     * At 100 TB: decode+hash is one mapPartitions pass (per-partition
-    * batched reader, the [[bmpDecodeRaw]] contract), the ONLY shuffle
+    * batched reader, the [[decodeImages]] contract), the ONLY shuffle
     * carries (doc_id, 64-char hash) — never pixels — and near-dup
     * banding generalizes by bucketing hash SUBSTRINGS (the MinHash band
     * trick) for Hamming-distance tolerance instead of exact equality.
@@ -500,244 +552,6 @@ object Multimodal {
       .orderBy(col("hamming"))
   }
 
-  /** Deterministic PNG fixture dims/color per doc — third distinct
-    * formula family (multipliers 23/11 for dims, 5/11 for color) so no
-    * cross-wired codec path can accidentally verify.
-    */
-  def pngFixtureParams(docId: Long): (Int, Int, Int, Int, Int) = (
-    16 + ((docId * 23) % 56).toInt, 16 + ((docId * 11) % 44).toInt,
-    (docId % 256).toInt, ((docId * 5) % 256).toInt, ((docId * 11) % 256).toInt)
-
-  /** Solid-color PNG payload — a REAL container from the JDK encoder
-    * (signature, IHDR/IDAT/IEND chunks, zlib-compressed scanlines).
-    */
-  def pngBytes(w: Int, h: Int, r: Int, g: Int, b: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val rgb = (r << 16) | (g << 8) | b
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) { img.setRGB(x, y, rgb); x += 1 }
-      y += 1
-    }
-    val baos = new java.io.ByteArrayOutputStream()
-    imageIoNoDiskCache
-    javax.imageio.ImageIO.write(img, "png", baos)
-    baos.toByteArray
-  }
-
-  case class PngFeature(doc_id: Long, width: Int, height: Int,
-      mean_r: Int, mean_g: Int, mean_b: Int)
-
-  /** Third REAL image codec: per-partition batched ImageIO decode of
-    * genuine PNG payloads (same one-reader-per-batch shape as
-    * [[bmpDecodeRaw]]). PNG is LOSSLESS, so unlike JPEG the rasterized
-    * channel means hash-verify exactly against the fixture color — only
-    * the container byte size is compression-dependent and therefore not
-    * in the verified output.
-    */
-  def pngDecodeRaw(s: SparkSession, d: String): Dataset[PngFeature] = {
-    import s.implicits._
-    docIds(s, d).mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        imageIoNoDiskCache
-        val reader =
-          javax.imageio.ImageIO.getImageReadersByFormatName("png").next()
-        try batch.map { id =>
-          val (w0, h0, r0, g0, b0) = pngFixtureParams(id)
-          val payload = pngBytes(w0, h0, r0, g0, b0)
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          reader.setInput(iis)
-          val img = try reader.read(0) finally iis.close()
-          require(img != null, s"undecodable PNG payload for doc $id")
-          val (w, h) = (img.getWidth, img.getHeight)
-          var (sr, sg, sb) = (0L, 0L, 0L)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val px = img.getRGB(x, y)
-              sr += (px >> 16) & 0xff; sg += (px >> 8) & 0xff; sb += px & 0xff
-              x += 1
-            }
-            y += 1
-          }
-          val n = w.toLong * h
-          PngFeature(id, w, h, (sr / n).toInt, (sg / n).toInt, (sb / n).toInt)
-        } finally reader.dispose()
-      }
-    }
-  }
-
-  /** Declared form of [[pngDecodeRaw]] for the verification registry. */
-  def pngDecode(s: SparkSession, d: String): DataFrame =
-    pngDecodeRaw(s, d).toDF()
-      .select(col("doc_id"), col("width"), col("height"),
-        col("mean_r"), col("mean_g"), col("mean_b"))
-      .orderBy(col("doc_id"))
-
-  /** Deterministic GIF fixture dims/color per doc — fourth distinct
-    * formula family (29/13 dims, 7/13/3 color) so no cross-wired codec
-    * path can accidentally verify.
-    */
-  def gifFixtureParams(docId: Long): (Int, Int, Int, Int, Int) = (
-    16 + ((docId * 29) % 48).toInt, 16 + ((docId * 13) % 40).toInt,
-    ((docId * 7) % 256).toInt, ((docId * 13) % 256).toInt,
-    ((docId * 3) % 256).toInt)
-
-  /** Solid-color GIF payload from the JDK encoder (GIF89a header, LZW
-    * raster, global color table). GIF is PALETTIZED — normally a lossy
-    * quantization — but a solid-color frame maps to a palette containing
-    * exactly that color, so the round-trip is lossless and the decoded
-    * means hash-verify like PNG's, exercising the palette+LZW decode
-    * path the truecolor codecs never touch.
-    */
-  def gifBytes(w: Int, h: Int, r: Int, g: Int, b: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val rgb = (r << 16) | (g << 8) | b
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) { img.setRGB(x, y, rgb); x += 1 }
-      y += 1
-    }
-    val baos = new java.io.ByteArrayOutputStream()
-    imageIoNoDiskCache
-    javax.imageio.ImageIO.write(img, "gif", baos)
-    baos.toByteArray
-  }
-
-  case class GifFeature(doc_id: Long, width: Int, height: Int,
-      mean_r: Int, mean_g: Int, mean_b: Int)
-
-  /** Fourth REAL image codec: per-partition batched ImageIO decode of
-    * genuine GIF payloads (one reader per 64-doc batch, the
-    * [[bmpDecodeRaw]] shape). Exercises the palette-indexed + LZW leg of
-    * the decode matrix; exact verification per [[gifBytes]].
-    */
-  def gifDecodeRaw(s: SparkSession, d: String): Dataset[GifFeature] = {
-    import s.implicits._
-    docIds(s, d).mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        imageIoNoDiskCache
-        val reader =
-          javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-        try batch.map { id =>
-          val (w0, h0, r0, g0, b0) = gifFixtureParams(id)
-          val payload = gifBytes(w0, h0, r0, g0, b0)
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          reader.setInput(iis)
-          val img = try reader.read(0) finally iis.close()
-          require(img != null, s"undecodable GIF payload for doc $id")
-          val (w, h) = (img.getWidth, img.getHeight)
-          var (sr, sg, sb) = (0L, 0L, 0L)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val px = img.getRGB(x, y)
-              sr += (px >> 16) & 0xff; sg += (px >> 8) & 0xff; sb += px & 0xff
-              x += 1
-            }
-            y += 1
-          }
-          val n = w.toLong * h
-          GifFeature(id, w, h, (sr / n).toInt, (sg / n).toInt, (sb / n).toInt)
-        } finally reader.dispose()
-      }
-    }
-  }
-
-  /** Declared form of [[gifDecodeRaw]] for the verification registry. */
-  def gifDecode(s: SparkSession, d: String): DataFrame =
-    gifDecodeRaw(s, d).toDF()
-      .select(col("doc_id"), col("width"), col("height"),
-        col("mean_r"), col("mean_g"), col("mean_b"))
-      .orderBy(col("doc_id"))
-
-  /** Deterministic TIFF fixture dims/color per doc — fifth distinct
-    * formula family (31/17 dims, 11/17/5 color).
-    */
-  def tiffFixtureParams(docId: Long): (Int, Int, Int, Int, Int) = (
-    16 + ((docId * 31) % 52).toInt, 16 + ((docId * 17) % 36).toInt,
-    ((docId * 11) % 256).toInt, ((docId * 17) % 256).toInt,
-    ((docId * 5) % 256).toInt)
-
-  /** Solid-color TIFF payload from the JDK encoder (baseline TIFF: IFD
-    * directory, strip-organized truecolor raster — lossless, so decoded
-    * means verify exactly like PNG/GIF). TIFF is the archival/scan format
-    * a document-ingest pipeline actually meets; the JDK reader/writer
-    * ship since Java 9, no external libs.
-    */
-  def tiffBytes(w: Int, h: Int, r: Int, g: Int, b: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val rgb = (r << 16) | (g << 8) | b
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) { img.setRGB(x, y, rgb); x += 1 }
-      y += 1
-    }
-    val baos = new java.io.ByteArrayOutputStream()
-    imageIoNoDiskCache
-    javax.imageio.ImageIO.write(img, "tiff", baos)
-    baos.toByteArray
-  }
-
-  case class TiffFeature(doc_id: Long, width: Int, height: Int,
-      mean_r: Int, mean_g: Int, mean_b: Int)
-
-  /** Fifth REAL image codec: per-partition batched ImageIO decode of
-    * genuine TIFF payloads (one reader per 64-doc batch, the
-    * [[bmpDecodeRaw]] shape). Exercises the IFD/strip leg of the decode
-    * matrix; exact verification per [[tiffBytes]].
-    */
-  def tiffDecodeRaw(s: SparkSession, d: String): Dataset[TiffFeature] = {
-    import s.implicits._
-    docIds(s, d).mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        imageIoNoDiskCache
-        val reader =
-          javax.imageio.ImageIO.getImageReadersByFormatName("tiff").next()
-        try batch.map { id =>
-          val (w0, h0, r0, g0, b0) = tiffFixtureParams(id)
-          val payload = tiffBytes(w0, h0, r0, g0, b0)
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          reader.setInput(iis)
-          val img = try reader.read(0) finally iis.close()
-          require(img != null, s"undecodable TIFF payload for doc $id")
-          val (w, h) = (img.getWidth, img.getHeight)
-          var (sr, sg, sb) = (0L, 0L, 0L)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val px = img.getRGB(x, y)
-              sr += (px >> 16) & 0xff; sg += (px >> 8) & 0xff; sb += px & 0xff
-              x += 1
-            }
-            y += 1
-          }
-          val n = w.toLong * h
-          TiffFeature(id, w, h, (sr / n).toInt, (sg / n).toInt, (sb / n).toInt)
-        } finally reader.dispose()
-      }
-    }
-  }
-
-  /** Declared form of [[tiffDecodeRaw]] for the verification registry. */
-  def tiffDecode(s: SparkSession, d: String): DataFrame =
-    tiffDecodeRaw(s, d).toDF()
-      .select(col("doc_id"), col("width"), col("height"),
-        col("mean_r"), col("mean_g"), col("mean_b"))
-      .orderBy(col("doc_id"))
-
   /** Deterministic WAV fixture (sample rate, sample count, amplitude) per
     * doc. The payload is a ±amp square wave, chosen because its RMS is
     * EXACTLY amp in integer arithmetic — which is what lets the decoded
@@ -748,11 +562,12 @@ object Multimodal {
     400 + ((docId * 37) % 2000).toInt,
     1000 + ((docId * 13) % 20000).toInt)
 
-  /** Mono 16-bit PCM WAV container: RIFF header, fmt chunk, data chunk of
-    * an alternating ±amp square wave. A real, byte-exact WAV any audio
-    * tool opens.
+  /** Mono 16-bit PCM WAV container: RIFF header, 16-byte `fmt ` chunk and
+    * a data chunk whose sample i is `sample(i)`. A real, byte-exact WAV
+    * any audio tool opens.
     */
-  def wavBytes(sampleRate: Int, nSamples: Int, amp: Int): Array[Byte] = {
+  private def pcm16Wav(sampleRate: Int, nSamples: Int)(
+      sample: Int => Int): Array[Byte] = {
     val dataSize = nSamples * 2
     val buf = java.nio.ByteBuffer.allocate(44 + dataSize)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -761,11 +576,13 @@ object Multimodal {
       .putInt(sampleRate).putInt(sampleRate * 2).putShort(2).putShort(16)
     buf.put("data".getBytes).putInt(dataSize)
     var i = 0
-    while (i < nSamples) {
-      buf.putShort((if (i % 2 == 0) amp else -amp).toShort); i += 1
-    }
+    while (i < nSamples) { buf.putShort(sample(i).toShort); i += 1 }
     buf.array()
   }
+
+  /** [[pcm16Wav]] of an alternating ±amp square wave. */
+  def wavBytes(sampleRate: Int, nSamples: Int, amp: Int): Array[Byte] =
+    pcm16Wav(sampleRate, nSamples)(i => if (i % 2 == 0) amp else -amp)
 
   /** VAD fixture: 10 segments × 400 samples at 8 kHz — segment s is
     * voiced (±amp square) iff (docId + s) % 3 ≠ 0, silent (zeros)
@@ -774,22 +591,60 @@ object Multimodal {
     */
   def wavVadBytes(docId: Long): Array[Byte] = {
     val amp = (1000 + docId % 100).toInt
-    val nSamples = 4000
-    val dataSize = nSamples * 2
-    val buf = java.nio.ByteBuffer.allocate(44 + dataSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.put("RIFF".getBytes).putInt(36 + dataSize).put("WAVE".getBytes)
-    buf.put("fmt ".getBytes).putInt(16).putShort(1).putShort(1)
-      .putInt(8000).putInt(16000).putShort(2).putShort(16)
-    buf.put("data".getBytes).putInt(dataSize)
-    var i = 0
-    while (i < nSamples) {
-      val seg = i / 400
-      val v = if ((docId + seg) % 3 != 0) { if (i % 2 == 0) amp else -amp }
+    pcm16Wav(8000, 4000) { i =>
+      if ((docId + i / 400) % 3 != 0) { if (i % 2 == 0) amp else -amp }
       else 0
-      buf.putShort(v.toShort); i += 1
     }
-    buf.array()
+  }
+
+  /** The RIFF/WAVE chunk walk behind every audio leg: checks the
+    * 'RIFF'/'WAVE' magic, refuses a negative or overrunning chunk size
+    * (a payload-supplied negative size would move the walk BACKWARDS —
+    * an infinite loop), requires a PCM, mono, 16-bit `fmt ` chunk before
+    * the data, and hands every data-chunk sample, in order, to `sample`.
+    * RIFF chunks are word-aligned: an odd-sized chunk is followed by one
+    * pad byte that is NOT counted in its size, and skipping it is what
+    * keeps an odd-sized LIST/INFO chunk before `data` from
+    * desynchronizing the walk. Every refusal is an
+    * IllegalArgumentException. Returns the sample rate.
+    */
+  private def walkWav(bytes: Array[Byte])(sample: Long => Unit): Int = {
+    val buf = java.nio.ByteBuffer.wrap(bytes)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    def tag4(): String = {
+      val t = new Array[Byte](4); buf.get(t); new String(t, "US-ASCII")
+    }
+    require(tag4() == "RIFF", "not a RIFF container")
+    buf.getInt // riff size
+    require(tag4() == "WAVE", "RIFF payload is not WAVE")
+    var rate = 0
+    var sawData = false
+    while (buf.remaining() >= 8) {
+      val id = tag4(); val sz = buf.getInt
+      require(sz >= 0 && sz <= buf.remaining(),
+        s"corrupt chunk size $sz for '$id'")
+      val end = buf.position() + sz
+      id match {
+        case "fmt " =>
+          require(sz >= 16, s"fmt chunk too short ($sz)")
+          val fmt = buf.getShort
+          require(fmt == 1, s"not PCM (fmt tag $fmt)")
+          val channels = buf.getShort
+          rate = buf.getInt
+          buf.getInt; buf.getShort // byte rate, block align
+          val bits = buf.getShort
+          require(channels == 1 && bits == 16 && rate > 0,
+            s"scan expects mono PCM16, got $channels ch, $bits bit, $rate Hz")
+        case "data" =>
+          require(rate > 0, "data chunk before fmt chunk")
+          while (buf.position() + 2 <= end) sample(buf.getShort.toLong)
+          sawData = true
+        case _ =>
+      }
+      buf.position(math.min(end + (sz & 1), buf.limit()))
+    }
+    require(sawData, "no data chunk")
+    rate
   }
 
   case class VadMeta(doc_id: Long, n_frames: Int, n_active: Int,
@@ -797,58 +652,43 @@ object Multimodal {
 
   /** VOICE ACTIVITY DETECTION over genuine PCM — the speech-curation
     * primitive (silence trimming, speech-ratio QC, segment extraction
-    * for ASR training): walk the RIFF container to the data chunk,
-    * frame the PCM16 stream (80 samples = 10 ms), mark frames with
-    * nonzero energy active, then run the island scan for contiguous
-    * voiced segments and the longest run. Energies are exact integer
-    * sums of squares read from decoded bytes; the oracle replays the
-    * fixture's voicing rule analytically, so the verified surface proves
-    * decode→frame→detect→segment end-to-end.
+    * for ASR training): walk the RIFF container to the data chunk
+    * ([[walkWav]]), frame the PCM16 stream (80 samples = 10 ms), mark
+    * frames with nonzero energy active, then run the island scan for
+    * contiguous voiced segments and the longest run. Energies are exact
+    * integer sums of squares read from decoded bytes; the oracle replays
+    * the fixture's voicing rule analytically, so the verified surface
+    * proves decode→frame→detect→segment end-to-end.
     *
     * Scale: one mapPartitions pass per payload (the codec contract);
     * per-doc output is five integers — audio bytes never shuffle.
     */
   def parseVad(bytes: Array[Byte], frameLen: Int): (Int, Int, Int, Long, Int) = {
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val t = new Array[Byte](4); buf.get(t)
-    require(new String(t, "US-ASCII") == "RIFF", "not a RIFF payload")
-    buf.getInt; buf.get(t)
-    require(new String(t, "US-ASCII") == "WAVE", "not a WAVE form")
-    var dataLen = -1
-    while (dataLen < 0 && buf.remaining() >= 8) {
-      buf.get(t); val len = buf.getInt
-      if (new String(t, "US-ASCII") == "data") dataLen = len
-      else buf.position(buf.position() + len)
-    }
-    require(dataLen > 0, "no data chunk")
-    val nSamples = dataLen / 2
-    val nFrames = nSamples / frameLen
-    var f = 0; var nActive = 0; var nSeg = 0; var run = 0; var best = 0
+    var nFrames = 0; var e = 0L; var i = 0
+    var nActive = 0; var nSeg = 0; var run = 0; var best = 0
     var firstActive = -1; var prevActive = false
-    while (f < nFrames) {
-      var e = 0L; var i = 0
-      while (i < frameLen) { val s = buf.getShort.toLong; e += s * s; i += 1 }
-      val active = e > 0
-      if (active) {
-        nActive += 1
-        if (firstActive < 0) firstActive = f
-        if (!prevActive) { nSeg += 1; run = 0 }
-        run += 1; if (run > best) best = run
+    walkWav(bytes) { s =>
+      e += s * s; i += 1
+      if (i == frameLen) { // a full frame; a trailing partial one is dropped
+        val active = e > 0
+        if (active) {
+          nActive += 1
+          if (firstActive < 0) firstActive = nFrames
+          if (!prevActive) { nSeg += 1; run = 0 }
+          run += 1; if (run > best) best = run
+        }
+        prevActive = active
+        nFrames += 1; e = 0L; i = 0
       }
-      prevActive = active
-      f += 1
     }
     (nFrames, nActive, nSeg, best.toLong * 10L, firstActive)
   }
 
   def audioVadRaw(s: SparkSession, d: String): Dataset[VadMeta] = {
     import s.implicits._
-    docIds(s, d).mapPartitions { it =>
-      it.map { id =>
-        val (nf, na, ns, lng, fa) = parseVad(wavVadBytes(id), 80)
-        VadMeta(id, nf, na, ns, lng, fa)
-      }
+    docIds(s, d).map { id =>
+      val (nf, na, ns, lng, fa) = parseVad(wavVadBytes(id), 80)
+      VadMeta(id, nf, na, ns, lng, fa)
     }
   }
 
@@ -859,55 +699,18 @@ object Multimodal {
   case class WavMeta(doc_id: Long, sample_rate: Int, channels: Int,
       bits: Int, n_samples: Int, duration_ms: Long, rms: Long)
 
-  /** GENUINE RIFF/WAVE chunk walk — magic check, fmt-chunk field parse
-    * (format tag, channels, rate, bits), data-chunk PCM16 scan for RMS.
-    * Every output column is read out of the container bytes (the fixture
-    * formulas appear only in payload construction and in the ORACLE);
-    * refuses non-RIFF payloads. Completes the multimodal family's third
-    * modality (image=BMP/JPEG, "video"=frame sampling, audio=WAV).
+  /** RIFF/WAVE metadata and RMS: the sample rate from the `fmt ` chunk
+    * and a PCM16 scan of the data chunk ([[walkWav]], which refuses
+    * anything but mono PCM16, so channels and bits are 1 and 16 for every
+    * payload it accepts). Every output column is read out of the
+    * container bytes (the fixture formulas appear only in payload
+    * construction and in the ORACLE). Completes the multimodal family's
+    * third modality (image=BMP/JPEG, "video"=frame sampling, audio=WAV).
     */
   def parseWav(bytes: Array[Byte]): (Int, Int, Int, Int, Long, Long) = {
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def tag4(): String = {
-      val t = new Array[Byte](4); buf.get(t); new String(t, "US-ASCII")
-    }
-    require(tag4() == "RIFF", "not a RIFF container")
-    buf.getInt // riff size
-    require(tag4() == "WAVE", "RIFF payload is not WAVE")
-    var (rate, channels, bits) = (0, 0, 0)
     var (nSamples, sumSq) = (0L, 0L)
-    while (buf.remaining() >= 8) {
-      val id = tag4(); val sz = buf.getInt
-      // A payload-supplied negative size would move the walk BACKWARDS
-      // (infinite loop) or underflow — refuse loudly like the other
-      // malformed-payload cases.
-      require(sz >= 0, s"corrupt chunk size $sz for '$id'")
-      id match {
-        case "fmt " =>
-          require(sz >= 16, s"fmt chunk too short ($sz)")
-          val fmt = buf.getShort
-          require(fmt == 1, s"not PCM (fmt tag $fmt)")
-          channels = buf.getShort.toInt
-          rate = buf.getInt
-          buf.getInt; buf.getShort // byte rate, block align
-          bits = buf.getShort.toInt
-          // RIFF chunks are word-aligned: an odd-sized chunk is followed
-          // by one pad byte that is NOT counted in sz — skip sz&1 after
-          // every chunk or an odd-sized LIST/INFO before 'data'
-          // desynchronizes the walk.
-          buf.position(buf.position() + sz - 16 + (sz & 1))
-        case "data" =>
-          require(bits == 16 && channels == 1, "scan expects mono PCM16")
-          var i = 0
-          while (i < sz / 2) {
-            val v = buf.getShort.toLong; sumSq += v * v; nSamples += 1; i += 1
-          }
-          buf.position(buf.position() + (sz & 1) * 2) // odd trailing byte + pad
-        case _ => buf.position(buf.position() + sz + (sz & 1))
-      }
-    }
-    (rate, channels, bits, nSamples.toInt,
+    val rate = walkWav(bytes) { v => sumSq += v * v; nSamples += 1 }
+    (rate, 1, 16, nSamples.toInt,
       nSamples * 1000L / rate, Math.round(Math.sqrt(sumSq.toDouble / nSamples)))
   }
 
@@ -929,7 +732,7 @@ object Multimodal {
     * dc_power = amp²·(N mod 2) are the ORACLE; the engine computes only
     * from the container bytes. tone_amp = √tone_power / N recovers the
     * amplitude (exact: amp·N < 2²⁶ so the double sqrt is integral).
-    * Refuses non-RIFF/non-PCM payloads like [[parseWav]].
+    * Refuses non-RIFF/non-PCM payloads ([[walkWav]]).
     */
   def goertzel(bytes: Array[Byte]): (Int, Int, Long, Long) = {
     val (rate, n, p) = goertzelBank(bytes)
@@ -955,54 +758,23 @@ object Multimodal {
     * driven OFF-resonance, where the marginally-stable recurrence's
     * state is bounded by ~3·amp (particular solution amp/(2+c) plus a
     * bounded homogeneous part), so their raw power forms fit trivially.
-    * Returns (rate, n_samples, powers[5]). Chunk sizes are validated
-    * (sz ≥ 0, fmt sz ≥ 16) so a corrupt payload REFUSES loudly instead
-    * of walking backwards or underflowing — same contract as
-    * [[parseWav]].
+    * Returns (rate, n_samples, powers[5]). The bank is a sample fold
+    * over [[walkWav]], so a corrupt payload REFUSES loudly instead of
+    * walking backwards or underflowing.
     */
   def goertzelBank(bytes: Array[Byte]): (Int, Int, Array[Long]) = {
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def tag4(): String = {
-      val t = new Array[Byte](4); buf.get(t); new String(t, "US-ASCII")
-    }
-    require(tag4() == "RIFF", "not a RIFF container")
-    buf.getInt
-    require(tag4() == "WAVE", "RIFF payload is not WAVE")
-    var (rate, channels, bits) = (0, 0, 0)
-    var n = 0
     val coeff = Array(2L, 1L, 0L, -1L, -2L)
     val st1 = new Array[Long](5)
     val st2 = new Array[Long](5)
-    while (buf.remaining() >= 8) {
-      val id = tag4(); val sz = buf.getInt
-      require(sz >= 0, s"corrupt chunk size $sz for '$id'")
-      id match {
-        case "fmt " =>
-          require(sz >= 16, s"fmt chunk too short ($sz)")
-          val fmt = buf.getShort
-          require(fmt == 1, s"not PCM (fmt tag $fmt)")
-          channels = buf.getShort.toInt
-          rate = buf.getInt
-          buf.getInt; buf.getShort
-          bits = buf.getShort.toInt
-          buf.position(buf.position() + sz - 16 + (sz & 1))
-        case "data" =>
-          require(bits == 16 && channels == 1, "scan expects mono PCM16")
-          var i = 0
-          while (i < sz / 2) {
-            val v = buf.getShort.toLong
-            var k = 0
-            while (k < 5) {
-              val sN = v + coeff(k) * st1(k) - st2(k)
-              st2(k) = st1(k); st1(k) = sN
-              k += 1
-            }
-            n += 1; i += 1
-          }
-          buf.position(buf.position() + (sz & 1) * 2)
-        case _ => buf.position(buf.position() + sz + (sz & 1))
+    var n = 0
+    val rate = walkWav(bytes) { v =>
+      var k = 0
+      while (k < 5) {
+        val sN = v + coeff(k) * st1(k) - st2(k)
+        st2(k) = st1(k); st1(k) = sN
+        k += 1
       }
+      n += 1
     }
     val p = new Array[Long](5)
     p(0) = (st1(0) - st2(0)) * (st1(0) - st2(0))
@@ -1017,13 +789,11 @@ object Multimodal {
 
   def wavToneRaw(s: SparkSession, d: String): Dataset[WavTone] = {
     import s.implicits._
-    docIds(s, d).mapPartitions { it =>
-      it.map { id =>
-        val (rate0, n0, amp0) = wavFixtureParams(id)
-        val (rate, n, tone, dc) = goertzel(wavBytes(rate0, n0, amp0))
-        WavTone(id, rate, n, tone, dc,
-          if (n == 0) 0L else Math.round(Math.sqrt(tone.toDouble)) / n)
-      }
+    docIds(s, d).map { id =>
+      val (rate0, n0, amp0) = wavFixtureParams(id)
+      val (rate, n, tone, dc) = goertzel(wavBytes(rate0, n0, amp0))
+      WavTone(id, rate, n, tone, dc,
+        if (n == 0) 0L else Math.round(Math.sqrt(tone.toDouble)) / n)
     }
   }
 
@@ -1052,15 +822,13 @@ object Multimodal {
     */
   def audioFpRaw(s: SparkSession, d: String): Dataset[AudioFp] = {
     import s.implicits._
-    docIds(s, d).mapPartitions { it =>
-      it.map { id =>
-        val (rate0, n0, amp0) = wavFixtureParams(id)
-        val (rate, n, p) = goertzelBank(wavBytes(rate0, n0, amp0))
-        val amp = if (n == 0) 0L else Math.round(Math.sqrt(p(4).toDouble)) / n
-        val a2 = amp * amp
-        def v(k: Int): Long = if (a2 == 0) 0L else p(k) / a2
-        AudioFp(id, rate, n, s"$rate:${v(0)}:${v(1)}:${v(2)}:${v(3)}")
-      }
+    docIds(s, d).map { id =>
+      val (rate0, n0, amp0) = wavFixtureParams(id)
+      val (rate, n, p) = goertzelBank(wavBytes(rate0, n0, amp0))
+      val amp = if (n == 0) 0L else Math.round(Math.sqrt(p(4).toDouble)) / n
+      val a2 = amp * amp
+      def v(k: Int): Long = if (a2 == 0) 0L else p(k) / a2
+      AudioFp(id, rate, n, s"$rate:${v(0)}:${v(1)}:${v(2)}:${v(3)}")
     }
   }
 
@@ -1090,12 +858,10 @@ object Multimodal {
 
   def wavMetaRaw(s: SparkSession, d: String): Dataset[WavMeta] = {
     import s.implicits._
-    docIds(s, d).mapPartitions { it =>
-      it.map { id =>
-        val (rate0, n0, amp0) = wavFixtureParams(id)
-        val (rate, ch, bits, n, durMs, rms) = parseWav(wavBytes(rate0, n0, amp0))
-        WavMeta(id, rate, ch, bits, n, durMs, rms)
-      }
+    docIds(s, d).map { id =>
+      val (rate0, n0, amp0) = wavFixtureParams(id)
+      val (rate, ch, bits, n, durMs, rms) = parseWav(wavBytes(rate0, n0, amp0))
+      WavMeta(id, rate, ch, bits, n, durMs, rms)
     }
   }
 
@@ -1274,7 +1040,8 @@ object Multimodal {
   /** Genuine MJPEG-in-AVI container: RIFF 'AVI ' with a full header
     * list (`avih` main header, `strl` with `strh` 'vids'/'MJPG' +
     * `strf` BITMAPINFOHEADER), a `movi` list of one `00dc` chunk per
-    * frame (each a REAL JDK-encoded JPEG from [[jpegBytes]],
+    * frame (each a REAL JDK-encoded JPEG from [[solidImageBytes]]'s
+    * encoder,
     * word-aligned per the RIFF rule), and a trailing `idx1` index —
     * the classic pre-OpenDML AVI layout
     * (reference repo has no video path; layout per the public
@@ -1282,38 +1049,17 @@ object Multimodal {
     * [[wavBytes]]).
     */
   def aviBytes(docId: Long): Array[Byte] = {
-    val writer =
-      javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
+    val writer = imageWriter("jpeg")
     try aviBytesWith(docId, writer) finally writer.dispose()
   }
 
-  /** [[jpegBytes]] with a caller-supplied writer — the registry lookup
-    * + codec setup dominates tiny-image encodes, so batch callers
-    * ([[aviFramesRaw]]: ~8 frames/doc) reuse one writer per partition.
-    */
-  private def jpegBytesWith(w: Int, h: Int, r: Int, g: Int, b: Int,
-      writer: javax.imageio.ImageWriter): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    // TYPE_INT_RGB is int-buffer backed: one bulk fill, no per-pixel calls
-    java.util.Arrays.fill(img.getRaster.getDataBuffer
-      .asInstanceOf[java.awt.image.DataBufferInt].getData,
-      (r << 16) | (g << 8) | b)
-    imageIoNoDiskCache
-    val baos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(baos)
-    writer.setOutput(ios)
-    try writer.write(img) finally ios.close()
-    baos.toByteArray
-  }
-
-  /** [[aviBytes]] with per-partition codec reuse. */
+  /** [[aviBytes]] through a caller's JPEG writer (per-batch reuse). */
   private def aviBytesWith(docId: Long,
       writer: javax.imageio.ImageWriter): Array[Byte] = {
     val (fps, n, w, h) = aviFixtureParams(docId)
     val frames = (0 until n).map { i =>
       val (r, g, b) = aviFrameColor(docId, i)
-      jpegBytesWith(w, h, r, g, b, writer)
+      encodeSolid(writer, w, h, r, g, b)
     }
     val framesPadded = frames.map(f => if (f.length % 2 == 0) f.length
       else f.length + 1)
@@ -1390,7 +1136,7 @@ object Multimodal {
     * `00dc` count, and the index entry count must all agree, and the
     * avih dims must match the strf BITMAPINFOHEADER. Refuses non-AVI
     * payloads and out-of-range chunk sizes loudly (the [[parseMp4]] /
-    * [[parseWav]] fail-loudly contract).
+    * [[walkWav]] fail-loudly contract).
     */
   def parseAvi(bytes: Array[Byte]): AviMeta = {
     val buf = java.nio.ByteBuffer.wrap(bytes)
@@ -1480,46 +1226,17 @@ object Multimodal {
     */
   def aviFramesRaw(s: SparkSession, d: String): Dataset[AviFrame] = {
     import s.implicits._
-    docIds(s, d).mapPartitions { it =>
-      it.grouped(32).flatMap { batch =>
-        imageIoNoDiskCache
-        val reader =
-          javax.imageio.ImageIO.getImageReadersByFormatName("jpeg").next()
-        val writer =
-          javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
-        try batch.flatMap { id =>
-          val payload = aviBytesWith(id, writer)
-          val meta = parseAvi(payload)
-          meta.frames.zipWithIndex.filter(_._2 % 2 == 0).map {
-            case ((off, len), idx) =>
-              val iis = javax.imageio.ImageIO.createImageInputStream(
-                new java.io.ByteArrayInputStream(payload, off, len))
-              reader.setInput(iis)
-              val img = try reader.read(0) finally iis.close()
-              require(img != null, s"undecodable frame $idx of doc $id")
-              require(img.getWidth == meta.width
-                  && img.getHeight == meta.height,
-                s"frame $idx dims ${img.getWidth}x${img.getHeight} " +
-                  s"disagree with header ${meta.width}x${meta.height}")
-              var (sr, sg, sb) = (0L, 0L, 0L)
-              // one bulk raster grab instead of w×h getRGB calls
-              val px = img.getRGB(0, 0, img.getWidth, img.getHeight,
-                null, 0, img.getWidth)
-              var i = 0
-              while (i < px.length) {
-                val p = px(i)
-                sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-                i += 1
-              }
-              val n = img.getWidth.toLong * img.getHeight
-              val (r0, g0, b0) = aviFrameColor(id, idx)
-              val ok = math.abs(sr / n - r0) <= JPEG_TOL &&
-                math.abs(sg / n - g0) <= JPEG_TOL &&
-                math.abs(sb / n - b0) <= JPEG_TOL
-              AviFrame(id, idx, meta.nFrames, meta.fps,
-                meta.width, meta.height, ok)
-          }
-        } finally { reader.dispose(); writer.dispose() }
+    decodeImages(docIds(s, d), "jpeg", 32) { (codec, id) =>
+      val payload = aviBytesWith(id, codec.writer)
+      val meta = parseAvi(payload)
+      meta.frames.zipWithIndex.filter(_._2 % 2 == 0).map {
+        case ((off, len), idx) =>
+          val img = codec.read(payload, s"frame $idx of doc $id", off, len)
+          require(img.getWidth == meta.width && img.getHeight == meta.height,
+            s"frame $idx dims ${img.getWidth}x${img.getHeight} " +
+              s"disagree with header ${meta.width}x${meta.height}")
+          AviFrame(id, idx, meta.nFrames, meta.fps, meta.width, meta.height,
+            jpegColorOk(meanRgb(img), aviFrameColor(id, idx)))
       }
     }
   }
@@ -1656,12 +1373,10 @@ object Multimodal {
 
   def exifMetaRaw(s: SparkSession, d: String): Dataset[ExifMeta] = {
     import s.implicits._
-    docIds(s, d).mapPartitions { it =>
-      it.map { id =>
-        val (o, mk, pw, ph) = exifFixtureParams(id)
-        val (bo, n, make, ori, w, h) = parseExif(exifJpegBytes(o, mk, pw, ph))
-        ExifMeta(id, bo, n, make, ori, w, h)
-      }
+    docIds(s, d).map { id =>
+      val (o, mk, pw, ph) = exifFixtureParams(id)
+      val (bo, n, make, ori, w, h) = parseExif(exifJpegBytes(o, mk, pw, ph))
+      ExifMeta(id, bo, n, make, ori, w, h)
     }
   }
 
@@ -1914,13 +1629,11 @@ object Multimodal {
 
   def mp4AtomsRaw(s: SparkSession, d: String): Dataset[Mp4Meta] = {
     import s.implicits._
-    docIds(s, d).mapPartitions { it =>
-      it.map { id =>
-        val (ts, secs, w0, h0, mlen) = mp4FixtureParams(id)
-        val (n, brand, tsc, durMs, w, h, mdat) =
-          parseMp4(mp4Bytes(ts, secs, w0, h0, mlen))
-        Mp4Meta(id, n, brand, tsc, durMs, w, h, mdat)
-      }
+    docIds(s, d).map { id =>
+      val (ts, secs, w0, h0, mlen) = mp4FixtureParams(id)
+      val (n, brand, tsc, durMs, w, h, mdat) =
+        parseMp4(mp4Bytes(ts, secs, w0, h0, mlen))
+      Mp4Meta(id, n, brand, tsc, durMs, w, h, mdat)
     }
   }
 
@@ -2710,11 +2423,11 @@ object Multimodal {
     "mm_mp4_atoms" -> mp4Atoms,
     "mm_binary_meta" -> binaryMeta,
     "mm_decode_features" -> decodeFeatures,
-    "mm_bmp_decode" -> bmpDecode,
+    "mm_bmp_decode" -> imageDecode("bmp"),
     "mm_jpeg_decode" -> jpegDecode,
-    "mm_png_decode" -> pngDecode,
-    "mm_gif_decode" -> gifDecode,
-    "mm_tiff_decode" -> tiffDecode,
+    "mm_png_decode" -> imageDecode("png"),
+    "mm_gif_decode" -> imageDecode("gif"),
+    "mm_tiff_decode" -> imageDecode("tiff"),
     "dd_phash_images" -> phashDedup,
     "dd_phash_banded" -> phashBanded,
     "mm_wav_meta" -> wavMeta,

@@ -1,14 +1,18 @@
 package graft
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 /** Invariants of the M4 extension operators that the DuckDB oracle can't
   * express: LSH recall vs the exact baseline, pigeonhole completeness,
   * decode-stub determinism, and streaming-vs-batch agreement.
   */
-class ExtensionSpec extends AnyFunSuite {
+class ExtensionSpec extends AnyFunSuite with TimeLimits {
   import TestSpark.{sf, spark}
 
   test("PCA projection: dominant direction beats every single axis and is a fixed point") {
@@ -496,6 +500,18 @@ class ExtensionSpec extends AnyFunSuite {
     }
   }
 
+  test("native functions fail analysis on a wrong argument count (per-session path)") {
+    import spark.implicits._
+    graft.expr.VectorExprs.register(spark)
+    val df = Seq((Array(1.0f), Array(1.0f), Array(1.0f))).toDF("a", "b", "c")
+    // selectExpr analyzes eagerly: the builder's refusal surfaces there,
+    // before any job
+    for (call <- Seq("graft_cosine(a)", "graft_cosine(a, b, c)")) {
+      val e = intercept[IllegalArgumentException](df.selectExpr(call))
+      assert(e.getMessage.contains("requires exactly 2 arguments"), call)
+    }
+  }
+
   test("GraftExtensions injects graft_cosine at session build (spark.sql.extensions path)") {
     import org.apache.spark.sql.SparkSession
     spark.version // force the shared context into existence first
@@ -623,7 +639,7 @@ class ExtensionSpec extends AnyFunSuite {
     val bad = payload.clone(); bad(0) = 'X'.toByte
     assert(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bad)) == null)
     // and the distributed decode agrees with the oracle's closed form
-    val row = ext.Multimodal.bmpDecodeRaw(spark, sf)
+    val row = ext.Multimodal.imageDecodeRaw(spark, sf, "bmp")
       .filter(col("doc_id") === 7L).collect().head
     val (w, h, r, g, b) = ext.Multimodal.bmpFixtureParams(7L)
     assert((row.width, row.height, row.mean_r, row.mean_g, row.mean_b)
@@ -682,7 +698,7 @@ class ExtensionSpec extends AnyFunSuite {
   }
 
   test("JPEG fixture is a real container: decode recovers dims exactly, color within tolerance") {
-    val payload = ext.Multimodal.jpegBytes(37, 21, 200, 100, 50)
+    val payload = ext.Multimodal.solidImageBytes("jpeg", 37, 21, 200, 100, 50)
     // real JPEG magic: SOI marker FF D8
     assert((payload(0) & 0xff) == 0xff && (payload(1) & 0xff) == 0xd8)
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
@@ -692,17 +708,22 @@ class ExtensionSpec extends AnyFunSuite {
     assert(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bad)) == null)
     // distributed decode: dims exact, decoded means within the strict
     // lossy-roundtrip bound for every doc (not just color_ok's boolean)
-    val rows = ext.Multimodal.jpegDecodeRaw(spark, sf).collect()
+    val rows = ext.Multimodal.imageDecodeRaw(spark, sf, "jpeg").collect()
     assert(rows.length == Tables.documents(spark, sf).count())
     rows.foreach { r =>
-      val (w, h, _, _, _) = ext.Multimodal.jpegFixtureParams(r.doc_id)
+      val (w, h, r0, g0, b0) = ext.Multimodal.jpegFixtureParams(r.doc_id)
       assert((r.width, r.height) == ((w, h)), s"dims for doc ${r.doc_id}")
-      assert(r.color_ok, s"decoded mean drifted past tolerance for doc ${r.doc_id}")
+      for ((got, want) <- Seq(r.mean_r -> r0, r.mean_g -> g0, r.mean_b -> b0))
+        assert(math.abs(got - want) <= ext.Multimodal.JPEG_TOL,
+          s"decoded mean $got drifted past tolerance of $want for doc ${r.doc_id}")
     }
+    // and the declared form certifies every row
+    val ok = ext.Multimodal.jpegDecode(spark, sf).collect()
+    assert(ok.length == rows.length && ok.forall(_.getAs[Boolean]("color_ok")))
   }
 
   test("PNG fixture is a real container: lossless decode round-trips dims and pixels") {
-    val payload = ext.Multimodal.pngBytes(37, 21, 200, 100, 50)
+    val payload = ext.Multimodal.solidImageBytes("png", 37, 21, 200, 100, 50)
     // real PNG signature: 89 50 4E 47
     assert((payload(0) & 0xff) == 0x89 && payload(1) == 'P'.toByte &&
       payload(2) == 'N'.toByte && payload(3) == 'G'.toByte)
@@ -715,7 +736,7 @@ class ExtensionSpec extends AnyFunSuite {
     val bad = payload.clone(); bad(0) = 'X'.toByte
     assert(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bad)) == null)
     // and the distributed decode agrees with the oracle's closed form
-    val row = ext.Multimodal.pngDecodeRaw(spark, sf)
+    val row = ext.Multimodal.imageDecodeRaw(spark, sf, "png")
       .filter(col("doc_id") === 7L).collect().head
     val (w, h, r, g, b) = ext.Multimodal.pngFixtureParams(7L)
     assert((row.width, row.height, row.mean_r, row.mean_g, row.mean_b)
@@ -836,7 +857,7 @@ class ExtensionSpec extends AnyFunSuite {
   }
 
   test("GIF fixture is a real palettized container: solid color round-trips exactly") {
-    val payload = ext.Multimodal.gifBytes(33, 19, 180, 90, 45)
+    val payload = ext.Multimodal.solidImageBytes("gif", 33, 19, 180, 90, 45)
     // real GIF89a (or 87a) signature
     assert(new String(payload.take(3), "US-ASCII") == "GIF")
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
@@ -848,7 +869,7 @@ class ExtensionSpec extends AnyFunSuite {
     val bad = payload.clone(); bad(0) = 'X'.toByte
     assert(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bad)) == null)
     // and the distributed decode agrees with the oracle's closed form
-    val row = ext.Multimodal.gifDecodeRaw(spark, sf)
+    val row = ext.Multimodal.imageDecodeRaw(spark, sf, "gif")
       .filter(col("doc_id") === 11L).collect().head
     val (w, h, r, g, b) = ext.Multimodal.gifFixtureParams(11L)
     assert((row.width, row.height, row.mean_r, row.mean_g, row.mean_b)
@@ -856,7 +877,7 @@ class ExtensionSpec extends AnyFunSuite {
   }
 
   test("TIFF fixture is a real IFD container: lossless decode round-trips exactly") {
-    val payload = ext.Multimodal.tiffBytes(29, 17, 160, 80, 40)
+    val payload = ext.Multimodal.solidImageBytes("tiff", 29, 17, 160, 80, 40)
     // real TIFF byte-order mark: II*\0 (little-endian) or MM\0* (big)
     val bom = new String(payload.take(2), "US-ASCII")
     assert(bom == "II" || bom == "MM")
@@ -868,7 +889,7 @@ class ExtensionSpec extends AnyFunSuite {
     val bad = payload.clone(); bad(0) = 'X'.toByte; bad(1) = 'Y'.toByte
     assert(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bad)) == null)
     // and the distributed decode agrees with the oracle's closed form
-    val row = ext.Multimodal.tiffDecodeRaw(spark, sf)
+    val row = ext.Multimodal.imageDecodeRaw(spark, sf, "tiff")
       .filter(col("doc_id") === 13L).collect().head
     val (w, h, r, g, b) = ext.Multimodal.tiffFixtureParams(13L)
     assert((row.width, row.height, row.mean_r, row.mean_g, row.mean_b)
@@ -1010,6 +1031,33 @@ class ExtensionSpec extends AnyFunSuite {
     }
     val bad = ext.Multimodal.wavVadBytes(3L).clone(); bad(0) = 'X'.toByte
     intercept[IllegalArgumentException](ext.Multimodal.parseVad(bad, 80))
+    // a chunk spliced in between `fmt ` and `data`, RIFF size fixed up
+    def withChunk(tag: String, size: Int, body: Array[Byte]): Array[Byte] = {
+      val wav = ext.Multimodal.wavVadBytes(4L)
+      val ck = java.nio.ByteBuffer.allocate(8 + body.length)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .put(tag.getBytes("US-ASCII")).putInt(size).put(body).array()
+      val out = wav.take(36) ++ ck ++ wav.drop(36)
+      java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .putInt(4, out.length - 8)
+      out
+    }
+    // an odd-sized LIST chunk plus its pad byte must not throw the walk
+    // off: same accounting as the plain fixture
+    val listed = withChunk("LIST", 5, "INFOx\u0000".getBytes("US-ASCII"))
+    assert(ext.Multimodal.parseVad(listed, 80)
+      == ext.Multimodal.parseVad(ext.Multimodal.wavVadBytes(4L), 80))
+    // a size of -8 would rewind the walk onto its own header forever; the
+    // walk runs on its own thread so a loop fails by timeout instead of
+    // hanging the suite
+    val rewinding = withChunk("JUNK", -8, Array.emptyByteArray)
+    implicit val signaler: Signaler = ThreadSignaler
+    intercept[IllegalArgumentException] {
+      failAfter(Span(30, Seconds)) {
+        Await.result(Future(ext.Multimodal.parseVad(rewinding, 80))(
+          ExecutionContext.global), Duration.Inf)
+      }
+    }
   }
 
   test("FFD packing invariants: capped bins, never below the splitting lower bound") {
