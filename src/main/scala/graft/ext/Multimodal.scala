@@ -601,7 +601,9 @@ object Multimodal {
     * 'RIFF'/'WAVE' magic, refuses a negative or overrunning chunk size
     * (a payload-supplied negative size would move the walk BACKWARDS —
     * an infinite loop), requires a PCM, mono, 16-bit `fmt ` chunk before
-    * the data, and hands every data-chunk sample, in order, to `sample`.
+    * the data, refuses a data chunk with no samples in it (no audio has
+    * no RMS, tone or voicing to report), and hands every data-chunk
+    * sample, in order, to `sample`.
     * RIFF chunks are word-aligned: an odd-sized chunk is followed by one
     * pad byte that is NOT counted in its size, and skipping it is what
     * keeps an odd-sized LIST/INFO chunk before `data` from
@@ -637,6 +639,7 @@ object Multimodal {
             s"scan expects mono PCM16, got $channels ch, $bits bit, $rate Hz")
         case "data" =>
           require(rate > 0, "data chunk before fmt chunk")
+          require(sz >= 2, s"data chunk holds no samples ($sz bytes)")
           while (buf.position() + 2 <= end) sample(buf.getShort.toLong)
           sawData = true
         case _ =>

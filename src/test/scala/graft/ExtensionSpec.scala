@@ -534,6 +534,9 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
           |                    CAST(array(1.0, 1.0) AS ARRAY<FLOAT>)) AS c""".stripMargin)
         .head().getDouble(0)
       assert(math.abs(got - 1.0 / math.sqrt(2.0)) < 1e-15)
+      // the as-of merge strategy is injected at build too
+      assert(s2.sessionState.planner.extraPlanningStrategies
+        .contains(graft.plans.AsOfJoinStrategy))
       // and the injection survives newSession() children (temp-function
       // registration would not)
       val child = s2.newSession()
@@ -1031,6 +1034,9 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
     }
     val bad = ext.Multimodal.wavVadBytes(3L).clone(); bad(0) = 'X'.toByte
     intercept[IllegalArgumentException](ext.Multimodal.parseVad(bad, 80))
+    // a data chunk with no samples is refused, not reported as silence
+    intercept[IllegalArgumentException](
+      ext.Multimodal.parseVad(ext.Multimodal.wavBytes(8000, 0, 1000), 80))
     // a chunk spliced in between `fmt ` and `data`, RIFF size fixed up
     def withChunk(tag: String, size: Int, body: Array[Byte]): Array[Byte] = {
       val wav = ext.Multimodal.wavVadBytes(4L)

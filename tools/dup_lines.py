@@ -7,33 +7,30 @@ occurs beyond the first. The scan prints, per file, the excess of lines
 repeated within that file, then the total excess across all files
 together (a line copied between two files counts there too).
 
-    python3 tools/dup_lines.py               # src/main/scala
-    python3 tools/dup_lines.py some/dir 25   # another root or length
+    python3 tools/dup_lines.py   # from the repository root
 """
 import collections
 import pathlib
-import sys
 
 MIN_LEN = 25
 
 
-def lines_of(path, min_len):
+def lines_of(path):
     with open(path, encoding="utf-8") as f:
-        return [s for s in (raw.strip() for raw in f) if len(s) >= min_len]
+        return [s for s in (raw.strip() for raw in f) if len(s) >= MIN_LEN]
 
 
 def excess(lines):
     return sum(n - 1 for n in collections.Counter(lines).values() if n > 1)
 
 
-def main(argv):
-    root = pathlib.Path(argv[1] if len(argv) > 1 else "src/main/scala")
-    min_len = int(argv[2]) if len(argv) > 2 else MIN_LEN
+def main():
+    root = pathlib.Path("src/main/scala")
     files = sorted(root.rglob("*.scala"))
     everything = []
     rows = []
     for path in files:
-        lines = lines_of(path, min_len)
+        lines = lines_of(path)
         everything.extend(lines)
         rows.append((excess(lines), path.relative_to(root)))
     for n, path in sorted(rows, key=lambda r: (-r[0], str(r[1]))):
@@ -43,4 +40,4 @@ def main(argv):
 
 
 if __name__ == "__main__":
-    main(sys.argv)
+    main()
