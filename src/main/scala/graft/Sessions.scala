@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session helpers: the object-store conf passthrough the entry-point
-  * mains build their root session with, and [[child]], the one
+  * mains build their root session with, [[install]], which puts the
+  * engine's planner strategy on a session, and [[child]], the one
   * constructor for the engine's per-call child sessions.
   *
   * Object-store passthrough (SURVEY.md §2.1 / S4): the reference reads and
@@ -30,6 +31,13 @@ object Sessions {
       case (acc, _) => acc
     }
 
+  /** Idempotently adds [[graft.plans.SmallSortStrategy]] to `s`'s planner.
+    * `SparkEntry.queries` calls it before every builder, [[child]] on each
+    * child, and `graft.expr.GraftExtensions` injects the same object.
+    */
+  def install(s: SparkSession): Unit =
+    org.apache.spark.sql.graft.GraftSqlShim.registerStrategy(s, plans.SmallSortStrategy)
+
   /** A `newSession()` child of `s` with artifact isolation off, so it and
     * every session a stream clones from it run their tasks under the one
     * application class loader. Spark 4.1 keys its codegen cache by class
@@ -37,11 +45,13 @@ object Sessions {
     * recompile every generated class on each call. The engine adds no
     * session-scoped artifacts, so this changes which loader runs the code,
     * not what the code can see. The conf is read once, on the child's
-    * first use, so it is set before the child runs anything.
+    * first use, so it is set before the child runs anything. The child
+    * has its own planner, so it gets [[install]] too.
     */
   def child(s: SparkSession): SparkSession = {
     val c = s.newSession()
     c.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    install(c)
     c
   }
 }

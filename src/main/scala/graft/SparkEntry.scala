@@ -14,8 +14,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.CoreOps.flagship(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each builder
+    * first [[Sessions.install]]s the engine's planner strategy on its
+    * session.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
+    builders.map { case (name, build) =>
+      name -> { (s: SparkSession, d: String) => Sessions.install(s); build(s, d) }
+    }
+
+  private def builders: Map[String, (SparkSession, String) => DataFrame] =
     ops.CoreOps.queries ++ ops.ScalarOps.queries ++ ops.AggJoinOps.queries ++
       ops.PipelineOps.queries ++ ops.ExtraOps.queries ++ ops.TpchOps.queries ++
       ops.QcOps.queries ++ ops.StatOps.queries ++ ops.FeatureOps.queries ++

@@ -170,34 +170,77 @@ object Tables {
 /** Determinism helpers for the DuckDB-oracle differential harness
   * (SURVEY.md §5, §7.4). Floating-point SUM/AVG are order-dependent in
   * IEEE double; at 1000 executors the combine order is nondeterministic,
-  * so every verified aggregate goes through exact decimal arithmetic and
-  * only converts to double at the very end. This is both the correctness
-  * fix for the oracle AND the right call at 100 TB — the result no longer
-  * depends on partitioning.
+  * so every verified aggregate goes through exact fixed-point arithmetic
+  * and only converts to double at the very end. This is both the
+  * correctness fix for the oracle AND the right call at 100 TB — the
+  * result no longer depends on partitioning.
+  *
+  * The fixed-point kernel. Each row becomes integer units of 10^-scale
+  * ([[units]]: exactly Spark's `CAST(x AS DECIMAL(prec, scale))`, as its
+  * unscaled long, through [[graft.expr.DecimalUnits]]). A sum splits
+  * each row's units into three limbs — bits 0–23 and 24–47 unsigned, the
+  * rest signed — and sums each limb with Spark's own checked `long` SUM;
+  * [[graft.expr.LimbSum]] recombines the limb totals once per group into
+  * an exact DECIMAL(38, scale), and a Spark `CAST(… AS DOUBLE)` ends it,
+  * so the double is that exact total's `BigDecimal.doubleValue`, as with
+  * a decimal SUM.
+  *
+  * Width policy and headroom: `prec` ≤ 18 (a row's units fit a long;
+  * every measure in the schema is ≤ ~1e7, and 18 is the default). The
+  * unsigned limbs are < 2^24, so a limb total stays exact for at least
+  * 2^39 rows per group, and the recombined total of that many rows of
+  * any 18-digit value fits DECIMAL(38, scale) — wider than the
+  * DECIMAL(prec+10, scale) a decimal SUM would give. Past 2^39 rows a
+  * limb total can overflow, which the ANSI long SUM raises as an error,
+  * never a wrapped value. A double that is not next to a rounding tie
+  * costs long arithmetic only: no BigDecimal per row, no non-compact
+  * decimal aggregation buffer.
   */
 object Det {
   import org.apache.spark.sql.Column
+  import org.apache.spark.sql.graft.GraftSqlShim
+  import graft.expr.{DecimalUnits, LimbSum}
 
-  /** Order-independent sum: per-row cast to decimal (exact), decimal sum
-    * (exact, associative), final cast to double. Oracle twin:
+  /** Exact integer units of `CAST(c AS DECIMAL(prec, scale))` (prec ≤ 18),
+    * as a long: Spark's own cast, with its nulls and ANSI errors.
+    */
+  def units(c: Column, scale: Int, prec: Int = 18): Column =
+    GraftSqlShim.column(DecimalUnits(GraftSqlShim.expression(c.cast(DecimalType(prec, scale)))))
+
+  /** 10^-4 fixed-point units as BIGINT. Oracle twin:
+    * `CAST(CAST(CAST(x AS DECIMAL(18,4)) * 10000 AS DECIMAL(19,0)) AS BIGINT)`.
+    */
+  def micros(c: Column): Column = units(c, 4)
+
+  private val LimbBits = 24
+  private val LimbMask = (1L << LimbBits) - 1
+
+  /** `u` (long units) as its three limbs, each with its bit offset past `at`. */
+  private def limbs(u: Column, at: Int = 0): Seq[(Column, Int)] = Seq(
+    (u.bitwiseAND(LimbMask), at),
+    (shiftright(u, LimbBits).bitwiseAND(LimbMask), at + LimbBits),
+    (shiftright(u, 2 * LimbBits), at + 2 * LimbBits))
+
+  /** Exact DECIMAL(38, scale) total of the limbs: one long SUM per limb,
+    * recombined once per group.
+    */
+  private[graft] def limbSum(parts: Seq[(Column, Int)], scale: Int): Column =
+    GraftSqlShim.column(LimbSum(parts.map(p => GraftSqlShim.expression(sum(p._1))),
+      parts.map(_._2), scale))
+
+  /** Order-independent sum: exact fixed-point units per row, exact limb
+    * sums, final cast to double. Oracle twin:
     * `CAST(SUM(CAST(x AS DECIMAL(30,scale))) AS DOUBLE)` — values are
     * identical at any precision wide enough for the row values.
-    *
-    * Width policy: the per-row cast only needs to hold ONE row's value
-    * (≤ ~1e7 for every measure in the schema), so precision 18 (the
-    * widest long-compact decimal) is the default; Spark's SUM adds 10
-    * digits of headroom on top (→ 28,4), which holds ~10^24 — at 100 TB
-    * a measure summing to 1e18 still has 6 orders of margin. Precision 30
-    * forced every row through the BigDecimal slow path for nothing.
     */
   def dsum(c: Column, scale: Int = 4, prec: Int = 18): Column =
-    sum(c.cast(DecimalType(prec, scale))).cast(DoubleType)
+    limbSum(limbs(units(c, scale, prec)), scale).cast(DoubleType)
 
   /** Order-independent average (sum/count in double at the end).
     * Oracle twin: `CAST(SUM(CAST(x AS DECIMAL(30,scale))) AS DOUBLE) / COUNT(x)`.
     */
   def davg(c: Column, scale: Int = 4, prec: Int = 18): Column =
-    sum(c.cast(DecimalType(prec, scale))).cast(DoubleType) / count(c)
+    dsum(c, scale, prec) / count(c)
 
   /** Rewrite-proof exact COUNT DISTINCT, for exactness-critical columns
     * (sketch-verification baselines like `true_distinct`/`exact7`, QC dup
@@ -241,11 +284,31 @@ object Det {
   def onePlus(c: Column): Column =
     lit(1).cast(DecimalType(3, 2)) + rate(c)
 
-  /** The ubiquitous discounted-price revenue measure, exact in decimal,
-    * cast to double at the very end. SQL twin: [[sqlRevenue]].
+  /** Units of `money(price) * oneMinus(discount)` (scale 4), exact:
+    * |price units| < 10^12 and |1 − rate| < 10^3, so the product fits a long.
+    */
+  private def discPriceUnits(price: Column, discount: Column): Column =
+    units(price, 2, 12) * (lit(100L) - units(discount, 2, 4))
+
+  /** The ubiquitous discounted-price revenue measure, exact in fixed
+    * point, cast to double at the very end. SQL twin: [[sqlRevenue]].
     */
   def revenue(price: Column, discount: Column): Column =
-    sum(money(price) * oneMinus(discount)).cast(DoubleType)
+    limbSum(limbs(discPriceUnits(price, discount)), 4).cast(DoubleType)
+
+  /** TPC-H Q1's charge, `SUM(money(price) * oneMinus(discount) *
+    * onePlus(tax))` (scale 6) as a double. The per-row product can pass a
+    * long, so the discounted price is split at bit 24 first: each part
+    * times the tax factor fits a long, and both parts feed the limb sums.
+    * SQL twin: `CAST(SUM(<discounted price> * (1 + CAST(tax AS
+    * DECIMAL(4,2)))) AS DOUBLE)`.
+    */
+  def charge(price: Column, discount: Column, tax: Column): Column = {
+    val dp = discPriceUnits(price, discount)
+    val t = lit(100L) + units(tax, 2, 4)
+    limbSum(limbs(dp.bitwiseAND(LimbMask) * t) ++
+      limbs(shiftright(dp, LimbBits) * t, LimbBits), 6).cast(DoubleType)
+  }
 
   def sqlRevenue(price: String = "l_extendedprice",
       discount: String = "l_discount"): String =

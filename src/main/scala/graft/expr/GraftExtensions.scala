@@ -32,6 +32,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the as-of merge join operator, planned 1:1 (the Scala API
     // self-registers the same object on first use too)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    // one sort task for a small ORDER BY over finished AQE stages (the
+    // object graft.Sessions.install adds)
+    ext.injectPlannerStrategy(_ => graft.plans.SmallSortStrategy)
     VectorExprs.functions.foreach(f =>
       ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder)))
   }

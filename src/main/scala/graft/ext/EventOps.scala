@@ -1359,8 +1359,7 @@ object EventOps {
     * the decomposition's cost is independent of raw event volume.
     */
   def seasonalDecompose(s: SparkSession, d: String): DataFrame = {
-    val vfix = expr(
-      "CAST(CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS DECIMAL(19,0)) AS BIGINT)")
+    val vfix = Det.micros(col("value"))
     val daily = Tables.events(s, d)
       .filter(col("event_type") === "purchase")
       .groupBy(to_date(col("ts")).as("day"))

@@ -39,8 +39,11 @@ object Multimodal {
     spread(Tables.documents(s, d).select(col("doc_id")).as[Long])
   }
 
-  private def spread(ids: Dataset[Long]): Dataset[Long] =
-    ids.repartition(ids.sparkSession.sparkContext.defaultParallelism)
+  /** Round-robin `ds` over one partition per core (the container legs
+    * spread their build and parse sides the same way).
+    */
+  private def spread[T](ds: Dataset[T]): Dataset[T] =
+    ds.repartition(ds.sparkSession.sparkContext.defaultParallelism)
 
   /** Binary payload + metadata extraction, all builtins (oracle-verified):
     * byte length, sha2-256 digest, base64 prefix. The payload here is the
@@ -1802,7 +1805,7 @@ object Multimodal {
         concat(lit("doc"), col("doc_id").cast("string"), lit(".txt")).as("name"))
       // spread BEFORE the heavy hex build — the scan is one row group
       // at test scale (the [[docIds]] parallelism rescue)
-      .repartition(s.sparkContext.defaultParallelism)
+      .transform(spread)
       .withColumn("sizeb", expr("CAST(octet_length(payload) AS BIGINT)"))
       .withColumn("h0", expr(
         """concat(
@@ -1844,7 +1847,7 @@ object Multimodal {
       // shards once instead of synthesizing them twice. Spread FIRST:
       // AQE coalesces the tiny groupBy output to 1-2 partitions, which
       // would run the whole interpreted offset-walk single-threaded.
-      .repartition(s.sparkContext.defaultParallelism)
+      .transform(spread)
       .localCheckpoint()
     // --- parse side: everything below reads only `tar` -----------------
     // Octal-field parse as ONE codegen-friendly expression instead of a
@@ -1957,7 +1960,7 @@ object Multimodal {
         expr("substr(text, 1, CAST(40 + doc_id % 60 AS INT))").as("payload"),
         concat(lit("doc"), col("doc_id").cast("string"), lit(".txt")).as("name"))
       // spread BEFORE the heavy hex build (the [[docIds]] rescue)
-      .repartition(s.sparkContext.defaultParallelism)
+      .transform(spread)
       .withColumn("usize", expr("CAST(octet_length(payload) AS BIGINT)"))
       .withColumn("namelen", expr("CAST(octet_length(name) AS BIGINT)"))
       .withColumn("block_len", expr("30 + namelen + usize"))
@@ -1991,7 +1994,7 @@ object Multimodal {
       // build once: the parse side fans out (EOCD, directory walk,
       // local-header cross-check) over this frame. Spread first — AQE
       // coalesces the tiny groupBy output and would serialize the walk.
-      .repartition(s.sparkContext.defaultParallelism)
+      .transform(spread)
       .localCheckpoint()
     // --- parse side: everything below reads only `zip` ----------------
     val eocd = zips
@@ -2082,7 +2085,7 @@ object Multimodal {
     // --- build side ----------------------------------------------------
     val tensors = Tables.embeddings(s, d)
       // spread BEFORE the heavy hex build (the [[docIds]] rescue)
-      .repartition(s.sparkContext.defaultParallelism)
+      .transform(spread)
       .select(col("vec_id"), expr("vec_id DIV 8").as("st_id"),
         expr(s"""transform(
            |  slice(embedding, 1, CAST(32 + (vec_id % 3) * 16 AS INT)),
@@ -2115,7 +2118,7 @@ object Multimodal {
       .select(col("st_id"), col("st"))
       // build once; the parse fan-out below reads only `st`. Spread
       // first — AQE coalesces the tiny groupBy output.
-      .repartition(s.sparkContext.defaultParallelism)
+      .transform(spread)
       .localCheckpoint()
     safetensorsParse(s, d, files)
   }
@@ -2154,7 +2157,7 @@ object Multimodal {
     // --- build side ----------------------------------------------------
     val files = Tables.embeddings(s, d)
       // spread BEFORE the heavy hex build (the [[docIds]] rescue)
-      .repartition(s.sparkContext.defaultParallelism)
+      .transform(spread)
       .select(col("vec_id"), expr(s"""transform(
            |  slice(embedding, 1, CAST(32 + (vec_id % 5) * 8 AS INT)),
            |  x -> CAST(floor(CAST(x AS DOUBLE) * 16384) AS BIGINT) + $BIAS)"""

@@ -510,9 +510,7 @@ object CoreOps {
       .filter(col("event_type") === "purchase") // static partition pruning
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_purch"),
-        sum(expr(
-          "CAST(CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS DECIMAL(19,0)) AS BIGINT)"))
-          .as("rev_micro"))
+        sum(Det.micros(col("value"))).as("rev_micro"))
       .orderBy(col("user_id"))
   }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Det, Tables}
 import graft.ext.ModeAgg
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -275,8 +275,7 @@ object PipelineOps {
     * — which is the entire point of IMV at 100 TB.
     */
   def imvMaintain(s: SparkSession, d: String): DataFrame = {
-    val vm = expr(
-      "CAST(CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS DECIMAL(19,0)) AS BIGINT)")
+    val vm = Det.micros(col("value"))
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("event_type"),
         to_date(col("ts")).as("day"), vm.as("vm"))

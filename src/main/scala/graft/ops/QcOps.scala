@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Det, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -654,22 +654,17 @@ object QcOps {
     // product is ≤ ~1.4e17 — 60× under BIGINT overflow — while a
     // DECIMAL(38,0) chain forces the BigDecimal slow path on every row
     // (the Det width-policy lesson). Same exact integers, same DIV.
-    val lineMicro = expr(
-      """CAST(
-        |  (CAST(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * 10000
-        |        AS DECIMAL(19,0)) AS BIGINT)
-        |   * (10000L - CAST(CAST(CAST(l_discount AS DECIMAL(8,4)) * 10000
-        |               AS DECIMAL(9,0)) AS BIGINT))
-        |   * (10000L + CAST(CAST(CAST(l_tax AS DECIMAL(8,4)) * 10000
-        |               AS DECIMAL(9,0)) AS BIGINT)))
-        |  DIV 100000000 AS BIGINT)""".stripMargin)
+    val lineMicro = call_function("div",
+      Det.micros(col("l_extendedprice"))
+        * (lit(10000L) - Det.units(col("l_discount"), 4, 8))
+        * (lit(10000L) + Det.units(col("l_tax"), 4, 8)),
+      lit(100000000))
     val child = graft.Tables.lineitem(s, d)
       .groupBy(col("l_orderkey").as("o_orderkey"))
       .agg(sum(lineMicro).as("child_micro"), count(lit(1)).as("n_lines"))
     val rec = graft.Tables.orders(s, d)
       .select(col("o_orderkey"),
-        expr("CAST(CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 10000 AS DECIMAL(19,0)) AS BIGINT)")
-          .as("header_micro"))
+        Det.micros(col("o_totalprice")).as("header_micro"))
       .join(child, Seq("o_orderkey"), "left")
       .withColumn("status",
         when(col("child_micro").isNull, "childless")
@@ -697,14 +692,12 @@ object QcOps {
     */
   def numericProfile(s: SparkSession, d: String): DataFrame = {
     val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-    def micro(c: String) =
-      s"CAST(CAST(CAST($c AS DECIMAL(18,4)) * 10000 AS DECIMAL(19,0)) AS BIGINT)"
     val aggs = cols.flatMap { c =>
       Seq(count(lit(1)).as(s"${c}_n"),
         count(col(c)).as(s"${c}_nn"),
-        min(expr(micro(c))).as(s"${c}_min"),
-        max(expr(micro(c))).as(s"${c}_max"),
-        sum(expr(micro(c))).as(s"${c}_sum"))
+        min(Det.micros(col(c))).as(s"${c}_min"),
+        max(Det.micros(col(c))).as(s"${c}_max"),
+        sum(Det.micros(col(c))).as(s"${c}_sum"))
     }
     val one = Tables.lineitem(s, d).agg(aggs.head, aggs.tail: _*)
     val stacked = cols.map(c =>

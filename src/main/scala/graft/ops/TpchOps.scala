@@ -27,8 +27,8 @@ object TpchOps {
         Det.dsum(col("l_quantity")).as("sum_qty"),
         Det.dsum(col("l_extendedprice")).as("sum_base_price"),
         Det.revenue(col("l_extendedprice"), col("l_discount")).as("sum_disc_price"),
-        sum(Det.money(col("l_extendedprice")) * Det.oneMinus(col("l_discount"))
-          * Det.onePlus(col("l_tax"))).cast("double").as("sum_charge"),
+        Det.charge(col("l_extendedprice"), col("l_discount"), col("l_tax"))
+          .as("sum_charge"),
         Det.davg(col("l_quantity")).as("avg_qty"),
         Det.davg(col("l_extendedprice")).as("avg_price"),
         Det.davg(col("l_discount")).as("avg_disc"),

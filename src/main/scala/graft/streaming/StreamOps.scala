@@ -1016,8 +1016,7 @@ object StreamOps {
     val src = eventsStream(ss, d)
       .withColumn("sign", when(col("event_id") % 5 =!= 0, 1L)
         .when(col("event_id") % 3 === 0, -1L).otherwise(1L))
-      .withColumn("vm", expr(
-        "CAST(CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS DECIMAL(19,0)) AS BIGINT)"))
+      .withColumn("vm", Det.micros(col("value")))
       .withColumn("day", to_date(col("ts")))
     drain(src.groupBy(col("event_type"), col("day"))
       .agg(sum(col("sign")).as("n_events"),

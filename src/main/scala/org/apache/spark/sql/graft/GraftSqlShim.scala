@@ -1,9 +1,10 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.SparkStrategy
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Minimal bridge into the `private[sql]` surface the whole-operator
   * extension path needs (SURVEY.md §7 preference (c): custom LogicalPlan +
@@ -13,11 +14,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * capability used here is the stable internal API that Spark's own
   * built-in operators go through, nothing reflective or version-fragile.
   *
-  * Kept intentionally tiny: ONLY plan→DataFrame, DataFrame→plan, and
-  * per-session strategy registration. All operator logic stays in
-  * `graft.plans`.
+  * Kept intentionally tiny: ONLY plan→DataFrame, DataFrame→plan,
+  * expression↔Column, and per-session strategy registration. All operator
+  * logic stays in `graft.plans` and `graft.expr`.
   */
 object GraftSqlShim {
+
+  /** A Column over a native expression (no function-registry entry). */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** `c` as an expression child, resolved with the enclosing plan. */
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** Wrap an (already resolved) logical plan as a DataFrame on `spark`. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
