@@ -1,11 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.graft.GraftSqlShim
 
 /** Session helpers: the object-store conf passthrough the entry-point
   * mains build their root session with, [[install]], which puts the
-  * engine's planner strategy on a session, and [[child]], the one
-  * constructor for the engine's per-call child sessions.
+  * whole engine (planner strategies and native functions) on a session,
+  * and [[child]], the one constructor for the engine's per-call child
+  * sessions.
   *
   * Object-store passthrough (SURVEY.md §2.1 / S4): the reference reads and
   * writes s3a:// URIs (reference etl.py:15-18,30-39 with credentials from
@@ -31,12 +35,34 @@ object Sessions {
       case (acc, _) => acc
     }
 
-  /** Idempotently adds [[graft.plans.SmallSortStrategy]] to `s`'s planner.
-    * `SparkEntry.queries` calls it before every builder, [[child]] on each
-    * child, and `graft.expr.GraftExtensions` injects the same object.
+  /** The planner strategies the engine adds to a session. [[install]]
+    * and `graft.expr.GraftExtensions` both read this list.
     */
-  def install(s: SparkSession): Unit =
-    org.apache.spark.sql.graft.GraftSqlShim.registerStrategy(s, plans.SmallSortStrategy)
+  private[graft] val strategies: Seq[SparkStrategy] = Seq(
+    plans.TopKPerKeyStrategy, plans.AsOfJoinStrategy, plans.SmallSortStrategy)
+
+  /** Idempotently installs the engine on `s`: [[strategies]] on its
+    * planner and `graft.expr.VectorExprs.functions` in its function
+    * registry. `SparkEntry.queries` calls it before every builder,
+    * [[child]] on each child, and the `topK`/`asOf` operator APIs on their
+    * input's session; `GraftExtensions` injects the same objects at
+    * session build.
+    */
+  def install(s: SparkSession): Unit = {
+    strategies.foreach(GraftSqlShim.registerStrategy(s, _))
+    // Idempotent AND self-owned: skipping on mere name presence would let
+    // a foreign same-named function (registered by the user or another
+    // library) silently serve graft's own queries. So each function is
+    // tagged with its implementing class in ExpressionInfo: skip only when
+    // the existing entry is provably ours, otherwise (re)register and own
+    // the name for graft's frames (documented override).
+    val reg = s.sessionState.functionRegistry
+    expr.VectorExprs.functions.foreach { f =>
+      val id = FunctionIdentifier(f.name)
+      if (!reg.lookupFunction(id).exists(_.getClassName == f.cls.getName))
+        reg.registerFunction(id, f.info, f.builder)
+    }
+  }
 
   /** A `newSession()` child of `s` with artifact isolation off, so it and
     * every session a stream clones from it run their tasks under the one

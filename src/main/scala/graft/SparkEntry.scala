@@ -15,8 +15,8 @@ object SparkEntry {
     ops.CoreOps.flagship(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. Each builder
-    * first [[Sessions.install]]s the engine's planner strategy on its
-    * session.
+    * first [[Sessions.install]]s the engine (planner strategies and native
+    * functions) on its session.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     builders.map { case (name, build) =>

@@ -1,7 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -171,7 +169,7 @@ final case class NativeFunction(name: String, cls: Class[_ <: Expression],
 
 object VectorExprs {
   /** The one function table both registration paths read:
-    * [[GraftExtensions]] injects it at session build, [[register]]
+    * [[GraftExtensions]] injects it at session build, `graft.Sessions.install`
     * installs it per session.
     */
   val functions: Seq[NativeFunction] = Seq(
@@ -181,25 +179,4 @@ object VectorExprs {
       e => IntL2(e(0), e(1))),
     NativeFunction("graft_minhash", classOf[MinHashSig], 1,
       e => MinHashSig(e.head, MinHashSig.K, MinHashSig.M)))
-
-  /** Registers [[functions]] in the session's function registry so they
-    * are usable from SQL text and expr(...) — the Spark-4-clean way to
-    * expose a custom Expression without internal Column constructors.
-    */
-  def register(s: SparkSession): Unit = {
-    // Idempotent AND self-owned: frame builders call this on every
-    // invocation. Skipping on mere name presence would let a foreign
-    // same-named function (registered by the user or another library)
-    // silently serve graft's own queries; blind re-registration would
-    // clobber it on every call. So each function is tagged with its
-    // implementing class in ExpressionInfo — skip only when the existing
-    // entry is provably ours, otherwise (re)register and own the name for
-    // graft's frames (documented override).
-    val reg = s.sessionState.functionRegistry
-    functions.foreach { f =>
-      val id = FunctionIdentifier(f.name)
-      if (!reg.lookupFunction(id).exists(_.getClassName == f.cls.getName))
-        reg.registerFunction(id, f.info, f.builder)
-    }
-  }
 }

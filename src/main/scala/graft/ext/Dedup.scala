@@ -314,11 +314,10 @@ object Dedup {
     * expression (codegen, one long[K] per doc) rather than the HOF fold
     * below — identical Long arithmetic, so bit-for-bit the same signature
     * (ExtensionSpec pins the equality; the DuckDB oracles are untouched).
+    * The function comes from [[graft.Sessions.install]] on the session.
     */
-  def signaturesOf(shingles: DataFrame): DataFrame = {
-    graft.expr.VectorExprs.register(shingles.sparkSession)
+  def signaturesOf(shingles: DataFrame): DataFrame =
     shingles.withColumn("sig", expr("graft_minhash(shashes)"))
-  }
 
   /** The declarative HOF formulation [[signaturesOf]] replaced — kept as
     * the executable spec of the signature arithmetic (interpreted

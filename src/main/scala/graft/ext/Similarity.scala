@@ -28,13 +28,11 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Similarity {
 
-  /** cosine via the codegen'd [[graft.expr.CosineSim]] expression —
-    * registered per session; bit-identical to the HOF fold and DuckDB.
+  /** cosine via the codegen'd [[graft.expr.CosineSim]] expression, which
+    * [[graft.Sessions.install]] puts on the session; bit-identical to the
+    * HOF fold and DuckDB.
     */
-  private def cos(s: SparkSession, a: String, b: String): String = {
-    graft.expr.VectorExprs.register(s)
-    s"graft_cosine($a, $b)"
-  }
+  private def cos(a: String, b: String): String = s"graft_cosine($a, $b)"
 
   /** cosine(a, b) as a pure higher-order-function SQL fragment (sequential
     * folds) — the buildins-only form, kept for the equivalence test.
@@ -60,7 +58,7 @@ object Similarity {
       .filter(col("qid") < 5)
     // broadcast the SMALL query side; the corpus streams partitioned
     val scored = q.hint("broadcast").join(e.filter(col("vec_id") >= 5))
-      .withColumn("cosine", expr(cos(s, "qv", "embedding")))
+      .withColumn("cosine", expr(cos("qv", "embedding")))
     val w = Window.partitionBy(col("qid")).orderBy(desc("cosine"), col("vec_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 10)
@@ -88,7 +86,7 @@ object Similarity {
       .join(e.select(col("vec_id").as("ib"), col("label"),
         col("embedding").as("vb")), Seq("label"))
       .filter(col("ia") =!= col("ib"))
-      .withColumn("cosine", expr(cos(s, "va", "vb")))
+      .withColumn("cosine", expr(cos("va", "vb")))
     val w = Window.partitionBy(col("ia")).orderBy(desc("cosine"), col("ib"))
     val best = pairs.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
@@ -130,8 +128,8 @@ object Similarity {
       .select(col("vec_id").as("cand_id"), col("embedding"),
         slice(col("embedding"), 1, 32).as("eh"))
     val scored = q.hint("broadcast").join(corpus)
-      .withColumn("cos_full", expr(cos(s, "qv", "embedding")))
-      .withColumn("cos_half", expr(cos(s, "qh", "eh")))
+      .withColumn("cos_full", expr(cos("qv", "embedding")))
+      .withColumn("cos_half", expr(cos("qh", "eh")))
     val wF = Window.partitionBy(col("qid"))
       .orderBy(desc("cos_full"), col("cand_id"))
     val wH = Window.partitionBy(col("qid"))
@@ -186,7 +184,7 @@ object Similarity {
     val wRank = Window.partitionBy(col("qid"))
       .orderBy(desc("cosine"), col("cand_id"))
     val ranked = q.hint("broadcast").join(corpus)
-      .withColumn("cosine", expr(cos(s, "qv", "embedding")))
+      .withColumn("cosine", expr(cos("qv", "embedding")))
       .withColumn("rank", row_number().over(wRank))
       .filter(col("rank") <= 10)
       .withColumn("contrib",
@@ -233,7 +231,7 @@ object Similarity {
     val wRank = Window.partitionBy(col("qid"))
       .orderBy(desc("cosine"), col("cand_id"))
     q.hint("broadcast").join(corpus)
-      .withColumn("cosine", expr(cos(s, "qv", "embedding")))
+      .withColumn("cosine", expr(cos("qv", "embedding")))
       .withColumn("rank", row_number().over(wRank).cast("long"))
       .filter(col("label") === col("qlabel"))
       .groupBy(col("qid"), col("qlabel"))
@@ -265,7 +263,7 @@ object Similarity {
     val corpus = e.filter(col("vec_id") >= 10)
       .select(col("vec_id").as("cand_id"), col("embedding"), col("label"))
     val scored = q.hint("broadcast").join(corpus)
-      .withColumn("cosine", expr(cos(s, "qv", "embedding")))
+      .withColumn("cosine", expr(cos("qv", "embedding")))
       .localCheckpoint() // feeds the positive argmax AND the negative side
     val wPos = Window.partitionBy(col("anchor_id"))
       .orderBy(desc("cosine"), col("cand_id"))
@@ -462,7 +460,7 @@ object Similarity {
     val q = e.select(col("vec_id").as("qid"), col("embedding").as("qv"))
       .filter(col("qid") < 5)
     q.hint("broadcast").join(e.filter(col("vec_id") >= 5))
-      .withColumn("cosine", expr(cos(s, "qv", "embedding")))
+      .withColumn("cosine", expr(cos("qv", "embedding")))
       .filter(col("cosine") >= 0.25)
       .select(col("qid"), col("vec_id"), col("cosine"))
       .orderBy(col("qid"), col("vec_id"))
@@ -486,7 +484,7 @@ object Similarity {
     val corpus = e.filter(col("vec_id") >= 20)
       .select(col("vec_id").as("cand_id"), col("embedding"), col("label"))
     val scored = q.hint("broadcast").join(corpus)
-      .withColumn("cosine", expr(cos(s, "qv", "embedding")))
+      .withColumn("cosine", expr(cos("qv", "embedding")))
     val wNN = Window.partitionBy(col("qid"))
       .orderBy(desc("cosine"), col("cand_id"))
     val votes = scored.withColumn("rank", row_number().over(wNN))
@@ -513,7 +511,7 @@ object Similarity {
     val wAssign = Window.partitionBy(col("vec_id"))
       .orderBy(desc("ccos"), col("cid"))
     val assigned = e.join(broadcast(cent))
-      .withColumn("ccos", expr(cos(s, "embedding", "cv")))
+      .withColumn("ccos", expr(cos("embedding", "cv")))
       .withColumn("arn", row_number().over(wAssign))
       .filter(col("arn") === 1)
       .select(col("vec_id"), col("embedding"), col("cid").as("bucket"))
@@ -521,7 +519,7 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("bucket"))
     val scored = q.join(assigned.withColumnRenamed("vec_id", "cand_id"), Seq("bucket"))
       .filter(col("cand_id") =!= col("qid"))
-      .withColumn("cosine", expr(cos(s, "qv", "embedding")))
+      .withColumn("cosine", expr(cos("qv", "embedding")))
     val w = Window.partitionBy(col("qid")).orderBy(desc("cosine"), col("cand_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 10)
@@ -755,7 +753,7 @@ object Similarity {
     val scored = cand
       .join(e.select(col("vec_id").as("qid"), col("embedding").as("qv_f")), Seq("qid"))
       .join(e.select(col("vec_id").as("cand_id"), col("embedding").as("cv_f")), Seq("cand_id"))
-      .withColumn("cosine", expr(cos(s, "qv_f", "cv_f")))
+      .withColumn("cosine", expr(cos("qv_f", "cv_f")))
     val w = Window.partitionBy(col("qid")).orderBy(desc("cosine"), col("cand_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 10)
@@ -869,7 +867,7 @@ object Similarity {
     cand
       .join(e.select(col("vec_id").as("ia"), col("embedding").as("va")), Seq("ia"))
       .join(e.select(col("vec_id").as("ib"), col("embedding").as("vb")), Seq("ib"))
-      .withColumn("cosine", expr(cos(s, "va", "vb")))
+      .withColumn("cosine", expr(cos("va", "vb")))
       .filter(col("cosine") >= 0.3)
       .select(col("ia"), col("ib"), col("cosine"))
       .orderBy(col("ia"), col("ib"))
@@ -884,7 +882,7 @@ object Similarity {
     val b = e.select(col("label"), col("vec_id").as("ib"), col("embedding").as("vb"))
     a.join(b, Seq("label"))
       .filter(col("ia") < col("ib"))
-      .withColumn("cosine", expr(cos(s, "va", "vb")))
+      .withColumn("cosine", expr(cos("va", "vb")))
       .filter(col("cosine") >= 0.3)
       .select(col("label"), col("ia"), col("ib"), col("cosine"))
       .orderBy(col("ia"), col("ib"))
@@ -915,7 +913,7 @@ object Similarity {
       col("embedding").as("vb"))
     val dups = a.join(b, Seq("bucket"))
       .filter(col("ia") < col("ib"))
-      .withColumn("cosine", expr(cos(s, "va", "vb")))
+      .withColumn("cosine", expr(cos("va", "vb")))
       .filter(col("cosine") >= 0.3)
       .select(col("ib").as("vec_id")).distinct()
       .withColumn("is_dup", lit(true))
@@ -937,7 +935,7 @@ object Similarity {
     val q = e.select(col("vec_id").as("qid"), col("embedding").as("qv"))
       .filter(col("qid") < 5)
     val scored = q.hint("broadcast").join(e.filter(col("vec_id") >= 5))
-      .withColumn("cosine", expr(cos(s, "qv", "embedding")))
+      .withColumn("cosine", expr(cos("qv", "embedding")))
     val w = Window.partitionBy(col("qid")).orderBy(desc("cosine"), col("vec_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 3)
@@ -1141,7 +1139,7 @@ object Similarity {
     a.join(b, Seq("label"))
       .filter(col("ia") < col("ib"))
       .withColumn("bucket",
-        floor(expr(cos(s, "va", "vb")) * 10).cast("long"))
+        floor(expr(cos("va", "vb")) * 10).cast("long"))
       .groupBy(col("label"), col("bucket"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy(col("label"), col("bucket"))
@@ -1188,7 +1186,7 @@ object Similarity {
     val corpus = e.filter(col("vec_id") >= 5)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
     val scored = q.hint("broadcast").join(corpus)
-      .withColumn("cosine", expr(cos(s, "qv", "cv")))
+      .withColumn("cosine", expr(cos("qv", "cv")))
       .withColumn("l2", expr(
         """aggregate(zip_with(qv, cv, (x, y) ->
           |  (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) *
@@ -1223,7 +1221,7 @@ object Similarity {
     val corpus = e.filter(col("vec_id") >= 3)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
     val cand = q.hint("broadcast").join(corpus)
-      .withColumn("rel", expr(cos(s, "qv", "cv")))
+      .withColumn("rel", expr(cos("qv", "cv")))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("qid")).orderBy(desc("rel"), col("cid"))))
       .filter(col("rk") <= 20)
@@ -1232,7 +1230,7 @@ object Similarity {
     val a = cand.select(col("qid"), col("cid").as("ca"), col("cv").as("va"))
     val b = cand.select(col("qid"), col("cid").as("cb"), col("cv").as("vb"))
     val pairsim = a.join(b, Seq("qid")).filter(col("ca") =!= col("cb"))
-      .withColumn("sim", expr(cos(s, "va", "vb")))
+      .withColumn("sim", expr(cos("va", "vb")))
       .select(col("qid"), col("ca"), col("cb"), col("sim"))
       .localCheckpoint()
     val rels = cand.select(col("qid"), col("cid"), col("rel"))
@@ -1468,7 +1466,6 @@ object Similarity {
     */
   private[graft] def pqServeWith(s: SparkSession, d: String,
       enc: DataFrame, sub: (Int, Int) => String): DataFrame = {
-    graft.expr.VectorExprs.register(s)
     val qv = quantized(s, d)
     def l2 = pqL2 _
     // distance table: every (query, subspace, code) exact L2
@@ -1574,7 +1571,6 @@ object Similarity {
     * the re-rank touches only Q×C original vectors.
     */
   def rqTopK(s: SparkSession, d: String): DataFrame = {
-    graft.expr.VectorExprs.register(s)
     val qv = quantized(s, d)
     // both codebooks derive from the first 32 quantized vectors —
     // collected ONCE (bounded, the k-means/PQ inlining pattern)
@@ -1675,7 +1671,6 @@ object Similarity {
   private def ivfpqServe(s: SparkSession, d: String, cent: DataFrame,
       assigned: DataFrame, enc: DataFrame,
       sub: (Int, Int) => String): DataFrame = {
-    graft.expr.VectorExprs.register(s)
     val qv = quantizedOf(Tables.embeddings(s, d).filter(col("vec_id") < 5))
       .localCheckpoint() // reused by dtable and re-rank
     val probes = probeBuckets(s,
@@ -1753,7 +1748,6 @@ object Similarity {
     * checkpointed per hop so the unrolled plan stays flat.
     */
   def graphAnn(s: SparkSession, d: String): DataFrame = {
-    graft.expr.VectorExprs.register(s)
     // codegen'd native expression — exact BIGINT fold, bit-identical to
     // the interpreted HOF form and DuckDB's list_reduce (integers only)
     def l2(a: String, b: String): String = s"graft_int_l2($a, $b)"
@@ -2102,7 +2096,6 @@ object Similarity {
     * mismatch (ExtensionSpec recall pin; not registered as a query).
     */
   private[graft] def pqExactL2TopK(s: SparkSession, d: String): DataFrame = {
-    graft.expr.VectorExprs.register(s)
     val qv = quantized(s, d)
     val q = qv.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("iv").as("qiv"))
@@ -2142,7 +2135,7 @@ object Similarity {
     val q = e.select(col("vec_id").as("qid"), col("embedding").as("qv"))
       .filter(col("qid") < 5)
     val dense = q.hint("broadcast").join(e.filter(col("vec_id") >= 5))
-      .withColumn("cosine", expr(cos(s, "qv", "embedding")))
+      .withColumn("cosine", expr(cos("qv", "embedding")))
       .select(col("qid"), col("vec_id").as("doc_id"), col("cosine"))
     val wd = Window.partitionBy(col("qid"))
       .orderBy(desc("cosine"), col("doc_id"))
@@ -2199,7 +2192,7 @@ object Similarity {
     val wAssign = Window.partitionBy(col("vec_id"))
       .orderBy(desc("ccos"), col("cid"))
     val assigned = e.join(broadcast(cent))
-      .withColumn("ccos", expr(cos(s, "embedding", "cv")))
+      .withColumn("ccos", expr(cos("embedding", "cv")))
       .withColumn("arn", row_number().over(wAssign))
       .filter(col("arn") === 1)
       .select(col("vec_id").as("cand_id"), col("embedding"),
@@ -2212,14 +2205,14 @@ object Similarity {
     val brute = q.hint("broadcast")
       .join(assigned.select(col("cand_id"), col("embedding")))
       .filter(col("cand_id") =!= col("qid"))
-      .withColumn("cosine", expr(cos(s, "qv", "embedding")))
+      .withColumn("cosine", expr(cos("qv", "embedding")))
       .withColumn("rank", row_number().over(wTop))
       .filter(col("rank") <= 10)
       .select(col("qid"), col("cand_id"))
     val wProbe = Window.partitionBy(col("qid"))
       .orderBy(desc("ccos"), col("cid"))
     val probes = q.join(broadcast(cent))
-      .withColumn("ccos", expr(cos(s, "qv", "cv")))
+      .withColumn("ccos", expr(cos("qv", "cv")))
       .withColumn("crk", row_number().over(wProbe))
       .filter(col("crk") <= 4)
       .select(col("qid"), col("qv"), col("cid").as("bucket"), col("crk"))
@@ -2233,7 +2226,7 @@ object Similarity {
     val scanned = cands.groupBy(col("nprobe"))
       .agg(count(lit(1)).as("n_cand_scanned"))
     val hits = cands
-      .withColumn("cosine", expr(cos(s, "qv", "embedding")))
+      .withColumn("cosine", expr(cos("qv", "embedding")))
       .withColumn("rank", row_number().over(wIvf))
       .filter(col("rank") <= 10)
       .join(brute, Seq("qid", "cand_id"))
@@ -2272,7 +2265,7 @@ object Similarity {
     a.join(b, Seq("source"))
       .filter(col("ia") < col("ib"))
       .withColumn("cmilli",
-        floor(expr(cos(s, "va", "vb")) * 1000).cast("long"))
+        floor(expr(cos("va", "vb")) * 1000).cast("long"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_pairs"), sum(col("cmilli")).as("sum_milli"))
       .withColumn("mean_cos_milli",

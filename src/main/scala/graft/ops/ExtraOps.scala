@@ -824,6 +824,35 @@ object ExtraOps {
         col("n_cust"))
       .orderBy(col("c_mktsegment"))
 
+  /** The co-purchase graph of the EVEN-part segment, which
+    * [[triangleCount]], [[pagerank]] and [[ppr]] run on.
+    */
+  private def evenEdges(s: SparkSession, d: String): DataFrame =
+    coPurchase(Tables.lineitem(s, d).filter(col("l_partkey") % 2 === 0))
+
+  /** The co-purchase graph of the SPARSE segment (every 4th part, every
+    * 2nd order), which the other eight graph queries run on.
+    */
+  private def sparseEdges(s: SparkSession, d: String): DataFrame =
+    coPurchase(Tables.lineitem(s, d)
+      .filter(col("l_partkey") % 4 === 0 && col("l_orderkey") % 2 === 0))
+
+  /** Distinct undirected edges `(u, v)`, `u < v`, between the parts of
+    * `lines` that share an order. Not materialized: each caller
+    * checkpoints what it reuses.
+    */
+  private def coPurchase(lines: DataFrame): DataFrame = {
+    val li = lines.select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+    li.select(col("ok"), col("pk").as("u"))
+      .join(li.select(col("ok"), col("pk").as("v")), Seq("ok"))
+      .filter(col("u") < col("v"))
+      .select(col("u"), col("v")).distinct()
+  }
+
+  /** Both directions of every edge as `(node, nbr)` rows. */
+  private def adjacency(edges: DataFrame): DataFrame =
+    edges.union(edges.select(col("v"), col("u"))).toDF("node", "nbr")
+
   /** Degree-oriented distributed triangle counting (Suri–Vassilvitskii's
     * MapReduce orientation trick) over the co-purchase graph (parts
     * sharing an order). The naive wedge join explodes on hub nodes
@@ -843,13 +872,7 @@ object ExtraOps {
     // wedge work through the (correct) plan — the segment keeps the
     // benchmark honest about the ALGORITHM's cost, not the demo graph's
     // density. The orientation bound is what survives 100 TB either way.
-    val li = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .filter(col("pk") % 2 === 0)
-    val edges = li.select(col("ok"), col("pk").as("u"))
-      .join(li.select(col("ok"), col("pk").as("v")), Seq("ok"))
-      .filter(col("u") < col("v"))
-      .select(col("u"), col("v")).distinct()
+    val edges = evenEdges(s, d)
       .localCheckpoint() // reused 3×: degrees, orientation, closure
     val deg = edges.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))
@@ -894,23 +917,44 @@ object ExtraOps {
     * edges and the join never reshuffles the big side.
     */
   def pagerank(s: SparkSession, d: String): DataFrame = {
-    val SCALE = 1000000000000L
-    val li = Tables.lineitem(s, d).filter(col("l_partkey") % 2 === 0)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val edges = li.select(col("ok"), col("pk").as("u"))
-      .join(li.select(col("ok"), col("pk").as("v")), Seq("ok"))
-      .filter(col("u") < col("v"))
-      .select(col("u"), col("v")).distinct()
+    val edges = evenEdges(s, d)
       .localCheckpoint() // reused by all 3 iterations
+    val (nodes, withOutdeg) = rankNodes(edges)
+    val nd = withOutdeg
+      .crossJoin(broadcast(nodes.agg(count(lit(1)).as("n"))))
+      .localCheckpoint() // (node, outdeg, n) — the loop-invariant frame
+    rankRounds(edges, nd, s"CAST($RANK_SCALE AS BIGINT) DIV n",
+        s"(3 * (CAST($RANK_SCALE AS BIGINT) DIV n)) DIV 20" +
+          " + (17 * (inflow + dang DIV n)) DIV 20")
+      .select(col("node").as("part_id"), col("r").as("rank_scaled"))
+      .orderBy(desc("rank_scaled"), col("part_id"))
+  }
+
+  /** Fixed-point unit of [[pagerank]]/[[ppr]] ranks. */
+  private val RANK_SCALE = 1000000000000L
+
+  /** The node set of the directed `u → v` edges, and every node with
+    * its out-degree (0 for a node with none).
+    */
+  private def rankNodes(edges: DataFrame): (DataFrame, DataFrame) = {
     val nodes = edges.select(col("u").as("node"))
       .union(edges.select(col("v").as("node"))).distinct()
     val outdeg = edges.groupBy(col("u").as("node"))
       .agg(count(lit(1)).as("outdeg"))
-    val nd = nodes.join(outdeg, Seq("node"), "left")
-      .na.fill(0L, Seq("outdeg"))
-      .crossJoin(broadcast(nodes.agg(count(lit(1)).as("n"))))
-      .localCheckpoint() // (node, outdeg, n) — the loop-invariant frame
-    var ranks = nd.withColumn("r", expr(s"CAST($SCALE AS BIGINT) DIV n"))
+    (nodes, nodes.join(outdeg, Seq("node"), "left").na.fill(0L, Seq("outdeg")))
+  }
+
+  /** The rank loop [[pagerank]] and [[ppr]] share: three unrolled rounds
+    * over the directed `u → v` edges from `nd`, the loop-invariant
+    * (node, outdeg, …) frame. Each round is one keyed join of the ranks
+    * against the edges plus a partial-aggregated `inflow`, and the
+    * dangling mass `dang` as a 1-row broadcast. The queries differ only
+    * in the teleport terms: `r0` seeds each node's rank, and `round`
+    * folds `inflow` and `dang` into the next rank.
+    */
+  private def rankRounds(edges: DataFrame, nd: DataFrame,
+      r0: String, round: String): DataFrame = {
+    var ranks = nd.withColumn("r", expr(r0))
     for (_ <- 1 to 3) {
       val inflow = ranks.join(edges, ranks("node") === edges("u"))
         .select(col("v").as("node"), expr("r DIV outdeg").as("c"))
@@ -920,13 +964,10 @@ object ExtraOps {
       ranks = nd
         .join(inflow, Seq("node"), "left").na.fill(0L, Seq("inflow"))
         .crossJoin(broadcast(dang))
-        .withColumn("r", expr(
-          s"(3 * (CAST($SCALE AS BIGINT) DIV n)) DIV 20" +
-            " + (17 * (inflow + dang DIV n)) DIV 20"))
-        .select(col("node"), col("outdeg"), col("n"), col("r"))
+        .withColumn("r", expr(round))
+        .drop("inflow", "dang")
     }
-    ranks.select(col("node").as("part_id"), col("r").as("rank_scaled"))
-      .orderBy(desc("rank_scaled"), col("part_id"))
+    ranks
   }
 
   /** Personalized PageRank over the co-purchase graph — [[pagerank]]'s
@@ -945,43 +986,20 @@ object ExtraOps {
     * mutating side.
     */
   def ppr(s: SparkSession, d: String): DataFrame = {
-    val SCALE = 1000000000000L
-    val li = Tables.lineitem(s, d).filter(col("l_partkey") % 2 === 0)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val edges = li.select(col("ok"), col("pk").as("u"))
-      .join(li.select(col("ok"), col("pk").as("v")), Seq("ok"))
-      .filter(col("u") < col("v"))
-      .select(col("u"), col("v")).distinct()
+    val edges = evenEdges(s, d)
       .localCheckpoint() // reused by all 3 iterations
-    val nodes = edges.select(col("u").as("node"))
-      .union(edges.select(col("v").as("node"))).distinct()
-    val outdeg = edges.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
+    val (nodes, withOutdeg) = rankNodes(edges)
     val seedCount = nodes.filter(col("node") % 10 === 0)
       .agg(count(lit(1)).as("ns"))
-    val nd = nodes.join(outdeg, Seq("node"), "left")
-      .na.fill(0L, Seq("outdeg"))
+    val nd = withOutdeg
       .withColumn("is_seed", (col("node") % 10 === 0).cast("long"))
       .crossJoin(broadcast(seedCount))
       .localCheckpoint() // loop-invariant (node, outdeg, seed, ns) frame
-    var ranks = nd.withColumn("r",
-      expr(s"is_seed * (CAST($SCALE AS BIGINT) DIV ns)"))
-    for (_ <- 1 to 3) {
-      val inflow = ranks.join(edges, ranks("node") === edges("u"))
-        .select(col("v").as("node"), expr("r DIV outdeg").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("inflow"))
-      val dang = ranks.filter(col("outdeg") === 0)
-        .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
-      ranks = nd
-        .join(inflow, Seq("node"), "left").na.fill(0L, Seq("inflow"))
-        .crossJoin(broadcast(dang))
-        .withColumn("r", expr(
-          s"is_seed * ((3 * (CAST($SCALE AS BIGINT) DIV ns)) DIV 20)" +
-            " + (17 * (inflow + is_seed * (dang DIV ns))) DIV 20"))
-        .select(col("node"), col("outdeg"), col("ns"), col("is_seed"), col("r"))
-    }
-    ranks.select(col("node").as("part_id"), col("is_seed"),
-      col("r").as("rank_scaled"))
+    rankRounds(edges, nd, s"is_seed * (CAST($RANK_SCALE AS BIGINT) DIV ns)",
+        s"is_seed * ((3 * (CAST($RANK_SCALE AS BIGINT) DIV ns)) DIV 20)" +
+          " + (17 * (inflow + is_seed * (dang DIV ns))) DIV 20")
+      .select(col("node").as("part_id"), col("is_seed"),
+        col("r").as("rank_scaled"))
       .orderBy(desc("rank_scaled"), col("part_id"))
   }
 
@@ -1023,16 +1041,9 @@ object ExtraOps {
     * about the SAME partition of the graph.
     */
   private def lpaGraph(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val li = Tables.lineitem(s, d)
-      .filter(col("l_partkey") % 4 === 0 && col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val edges = li.select(col("ok"), col("pk").as("u"))
-      .join(li.select(col("ok"), col("pk").as("v")), Seq("ok"))
-      .filter(col("u") < col("v"))
-      .select(col("u"), col("v")).distinct()
+    val edges = sparseEdges(s, d)
       .localCheckpoint() // reused by the adjacency AND the modularity rollups
-    val adj = edges.union(edges.select(col("v"), col("u")))
-      .toDF("node", "nbr")
+    val adj = adjacency(edges)
       .localCheckpoint() // loop-invariant; reused by all 3 rounds
     var labels = adj.select(col("node")).distinct()
       .withColumn("lbl", col("node"))
@@ -1150,30 +1161,31 @@ object ExtraOps {
     * is the delta-frame BFS shape Pregel/GraphX use, expressed as plain
     * joins so AQE can size each round's exchange.
     */
-  def bfsHops(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .filter(col("l_partkey") % 4 === 0 && col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val edges = li.select(col("ok"), col("pk").as("u"))
-      .join(li.select(col("ok"), col("pk").as("v")), Seq("ok"))
-      .filter(col("u") < col("v"))
-      .select(col("u"), col("v")).distinct()
-    val adj = edges.union(edges.select(col("v"), col("u")))
-      .toDF("node", "nbr")
-      .localCheckpoint() // loop-invariant; reused by all 3 rounds
+  def bfsHops(s: SparkSession, d: String): DataFrame =
+    relaxRounds(adjacency(sparseEdges(s, d))
+      .localCheckpoint(), // loop-invariant; reused by all 3 rounds
+      lit(1), "hops")
+
+  /** The relaxation loop [[bfsHops]] and [[dijkstraHops]] share: three
+    * unrolled synchronous rounds from the minimum-id node over `adj`
+    * (node, nbr, …), each relaxing `dist(nbr) ≤ dist(node) + step` by one
+    * keyed join plus a min-aggregate per node. Every node of `adj` is
+    * reported with its distance in column `out`, -1 when unreached.
+    */
+  private def relaxRounds(adj: DataFrame, step: Column, out: String): DataFrame = {
     val nodes = adj.select(col("node")).distinct()
     var dist = nodes.agg(min(col("node")).as("node"))
       .withColumn("dist", lit(0L))
     for (_ <- 1 to 3) {
       val relax = dist.join(adj, Seq("node"))
-        .select(col("nbr").as("node"), (col("dist") + 1).as("dist"))
+        .select(col("nbr").as("node"), (col("dist") + step).as("dist"))
       dist = dist.unionByName(relax)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
     }
     nodes.join(dist, Seq("node"), "left")
       .select(col("node").as("part_id"),
-        coalesce(col("dist"), lit(-1L)).as("hops"))
-      .orderBy(col("hops"), col("part_id"))
+        coalesce(col("dist"), lit(-1L)).as(out))
+      .orderBy(col(out), col("part_id"))
   }
 
   /** Weighted bounded-hop shortest path — the Dijkstra-flavored analog of
@@ -1196,32 +1208,11 @@ object ExtraOps {
     * mutating side is one skinny (node, dist) row per reached node, and
     * rounds are plan-unrolled — no data-dependent driver loop.
     */
-  def dijkstraHops(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .filter(col("l_partkey") % 4 === 0 && col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val edges = li.select(col("ok"), col("pk").as("u"))
-      .join(li.select(col("ok"), col("pk").as("v")), Seq("ok"))
-      .filter(col("u") < col("v"))
-      .select(col("u"), col("v")).distinct()
-    val adj = edges.union(edges.select(col("v"), col("u")))
-      .toDF("node", "nbr")
+  def dijkstraHops(s: SparkSession, d: String): DataFrame =
+    relaxRounds(adjacency(sparseEdges(s, d))
       .withColumn("w", lit(1L) + (col("node") + col("nbr")) % 7)
-      .localCheckpoint() // loop-invariant; reused by all 3 rounds
-    val nodes = adj.select(col("node")).distinct()
-    var dist = nodes.agg(min(col("node")).as("node"))
-      .withColumn("dist", lit(0L))
-    for (_ <- 1 to 3) {
-      val relax = dist.join(adj, Seq("node"))
-        .select(col("nbr").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionByName(relax)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-    }
-    nodes.join(dist, Seq("node"), "left")
-      .select(col("node").as("part_id"),
-        coalesce(col("dist"), lit(-1L)).as("dist_w"))
-      .orderBy(col("dist_w"), col("part_id"))
-  }
+      .localCheckpoint(), // loop-invariant; reused by all 3 rounds
+      col("w"), "dist_w")
 
   /** Spark 4's `approx_top_k` (DataSketches frequent-items) — the
     * builtin heavy-hitters aggregate: one constant-size mergeable sketch
@@ -1417,15 +1408,7 @@ object ExtraOps {
     * shape) so AQE sizes each round's exchange as the frontier shrinks.
     */
   def kcore(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .filter(col("l_partkey") % 4 === 0 && col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val edges = li.select(col("ok"), col("pk").as("u"))
-      .join(li.select(col("ok"), col("pk").as("v")), Seq("ok"))
-      .filter(col("u") < col("v"))
-      .select(col("u"), col("v")).distinct()
-    val adj = edges.union(edges.select(col("v"), col("u")))
-      .toDF("node", "nbr")
+    val adj = adjacency(sparseEdges(s, d))
       .localCheckpoint() // loop-invariant; reused by all 4 peel rounds
     val nodes = adj.select(col("node")).distinct()
     def coreDegrees(alive: DataFrame): DataFrame = adj
@@ -1674,15 +1657,8 @@ object ExtraOps {
     * TakeOrderedAndProject.
     */
   def linkPredict(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-      .filter(col("l_partkey") % 4 === 0 && col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val edges = li.select(col("ok"), col("pk").as("u"))
-      .join(li.select(col("ok"), col("pk").as("v")), Seq("ok"))
-      .filter(col("u") < col("v"))
-      .select(col("u"), col("v")).distinct()
-    val adj = edges.union(edges.select(col("v"), col("u")))
-      .toDF("node", "nbr")
+    val edges = sparseEdges(s, d)
+    val adj = adjacency(edges)
       .localCheckpoint() // reused: wedges, degrees, adjacency anti-join
     val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("deg"))
     val wedges = adj.select(col("node").as("u"), col("nbr"))
@@ -1968,15 +1944,7 @@ object ExtraOps {
     */
   def randomWalk(s: SparkSession, d: String): DataFrame = {
     import graft.ext.Hashing.sparkHash
-    val li = Tables.lineitem(s, d)
-      .filter(col("l_partkey") % 4 === 0 && col("l_orderkey") % 2 === 0)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val edges = li.select(col("ok"), col("pk").as("u"))
-      .join(li.select(col("ok"), col("pk").as("v")), Seq("ok"))
-      .filter(col("u") < col("v"))
-      .select(col("u"), col("v")).distinct()
-    val adj = edges.union(edges.select(col("v"), col("u")))
-      .toDF("node", "nbr")
+    val adj = adjacency(sparseEdges(s, d))
       .groupBy(col("node"))
       .agg(sort_array(collect_list(col("nbr"))).as("nbrs"))
       .localCheckpoint() // loop-invariant adjacency, reused by all steps
@@ -2925,6 +2893,101 @@ object ExtraOps {
        |        FROM w${n - 1} w JOIN adj a ON w.cur = a.node))""".stripMargin
   }
 
+  /** The DuckDB twins of [[evenEdges]] and [[sparseEdges]]: a WITH
+    * clause opening on the segment's `li` line frame and its `e` edges,
+    * then the twin of [[adjacency]] and the sparse segment with it.
+    */
+  private val edgeCte =
+    """e AS (SELECT DISTINCT a.pk AS u, b.pk AS v
+      |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk)""".stripMargin
+  private val evenEdgeCtes =
+    s"""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk
+       |            FROM lineitem WHERE l_partkey % 2 = 0),
+       |$edgeCte""".stripMargin
+  private val sparseEdgeCtes =
+    s"""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk
+       |            FROM lineitem
+       |            WHERE l_partkey % 4 = 0 AND l_orderkey % 2 = 0),
+       |$edgeCte""".stripMargin
+  private val adjCte =
+    """adj AS (SELECT u AS node, v AS nbr FROM e
+      |        UNION ALL SELECT v, u FROM e)""".stripMargin
+  private val sparseAdjCtes = s"$sparseEdgeCtes,\n$adjCte"
+
+  /** CTEs `names(1)` … `names.last`, each one `round` over the one before. */
+  private def rounds(round: (String, String) => String, names: String*): String =
+    names.zip(names.tail).map { case (prev, out) => round(prev, out) }.mkString(",\n")
+
+  /** The twin of [[lpaGraph]]: the sparse graph and the label CTEs
+    * `l0` … `l3`, each one synchronous LPA round.
+    */
+  private val lpaCtes = {
+    def round(prev: String, out: String): String =
+      s"""$out AS (SELECT node, lbl FROM (
+         |  SELECT a.node, p.lbl, COUNT(*) AS cnt,
+         |         ROW_NUMBER() OVER (PARTITION BY a.node
+         |           ORDER BY COUNT(*) DESC, p.lbl) AS rn
+         |  FROM adj a JOIN $prev p ON a.nbr = p.node
+         |  GROUP BY a.node, p.lbl) WHERE rn = 1)""".stripMargin
+    s"""$sparseAdjCtes,
+       |l0 AS (SELECT DISTINCT node, node AS lbl FROM adj),
+       |${rounds(round, "l0", "l1", "l2", "l3")}""".stripMargin
+  }
+
+  /** One [[rankRounds]] round in DuckDB: `cols` carries the
+    * loop-invariant frame, `teleport` is the restart term and `dangling`
+    * spreads the previous round's dangling mass.
+    */
+  private def rankRoundCte(cols: String, teleport: String,
+      dangling: String => String)(prev: String, out: String): String =
+    s"""$out AS (SELECT $cols,
+       |  $teleport
+       |  + (17 * (COALESCE(f.inflow, 0)
+       |           + ${dangling(s"(SELECT COALESCE(SUM(r), 0) FROM $prev WHERE outdeg = 0)")})) // 20 AS r
+       |FROM $prev p LEFT JOIN (
+       |  SELECT e.v AS node, SUM(r.r // r.outdeg) AS inflow
+       |  FROM e JOIN $prev r ON e.u = r.node GROUP BY e.v) f USING (node))""".stripMargin
+
+  /** A rank query over the even segment: `nd` adds the teleport columns
+    * to each (node, outdeg), `r0` lists them with the seed rank, and
+    * `out` the reported columns after `part_id`.
+    */
+  private def rankSql(nd: String, r0: String,
+      round: (String, String) => String, out: String): String =
+    s"""$evenEdgeCtes,
+       |nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
+       |od AS (SELECT u AS node, COUNT(*) AS outdeg FROM e GROUP BY u),
+       |nd AS (SELECT nx.node, COALESCE(od.outdeg, 0) AS outdeg,
+       |              $nd
+       |       FROM nodes nx LEFT JOIN od USING (node)),
+       |r0 AS (SELECT $r0 AS r FROM nd),
+       |${rounds(round, "r0", "i1", "i2", "i3")}
+       |SELECT node AS part_id, $out
+       |FROM i3 ORDER BY rank_scaled DESC, part_id""".stripMargin
+
+  /** A [[relaxRounds]] query over the sparse segment: `adj` is the
+    * adjacency CTE, `step` the length of one hop and `out` the distance
+    * column.
+    */
+  private def relaxSql(adj: String, step: String, out: String): String = {
+    def round(prev: String, next: String): String =
+      s"""$next AS (SELECT node, MIN(dist) AS dist FROM (
+         |  SELECT node, dist FROM $prev
+         |  UNION ALL
+         |  SELECT adj.nbr AS node, $prev.dist + $step AS dist
+         |  FROM $prev JOIN adj USING (node)) GROUP BY node)""".stripMargin
+    s"""$sparseEdgeCtes,
+       |$adj,
+       |nodes AS (SELECT DISTINCT node FROM adj),
+       |d0 AS (SELECT MIN(node) AS node, CAST(0 AS BIGINT) AS dist
+       |       FROM nodes),
+       |${rounds(round, "d0", "d1", "d2", "d3")}
+       |SELECT n.node AS part_id,
+       |       COALESCE(d3.dist, CAST(-1 AS BIGINT)) AS $out
+       |FROM nodes n LEFT JOIN d3 USING (node)
+       |ORDER BY $out, part_id""".stripMargin
+  }
+
   val oracle: Map[String, String] = Map(
     "x_alias_table" -> {
       def first(cond: String) =
@@ -3148,25 +3211,8 @@ object ExtraOps {
     },
     // literally the same SQL text Spark executes — see recursiveCteSql
     "x_recursive_cte_sql" -> recursiveCteSql,
-    "x_graph_modularity" -> {
-      def it(prev: String, out: String): String =
-        s"""$out AS (SELECT node, lbl FROM (
-           |  SELECT a.node, p.lbl, COUNT(*) AS cnt,
-           |         ROW_NUMBER() OVER (PARTITION BY a.node
-           |           ORDER BY COUNT(*) DESC, p.lbl) AS rn
-           |  FROM adj a JOIN $prev p ON a.nbr = p.node
-           |  GROUP BY a.node, p.lbl) WHERE rn = 1)""".stripMargin
-      s"""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk
-         |            FROM lineitem
-         |            WHERE l_partkey % 4 = 0 AND l_orderkey % 2 = 0),
-         |e AS (SELECT DISTINCT a.pk AS u, b.pk AS v
-         |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-         |adj AS (SELECT u AS node, v AS nbr FROM e
-         |        UNION ALL SELECT v, u FROM e),
-         |l0 AS (SELECT DISTINCT node, node AS lbl FROM adj),
-         |${it("l0", "l1")},
-         |${it("l1", "l2")},
-         |${it("l2", "l3")},
+    "x_graph_modularity" ->
+      s"""$lpaCtes,
          |m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m_edges FROM e),
          |deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS deg
          |        FROM adj GROUP BY 1),
@@ -3190,27 +3236,9 @@ object ExtraOps {
          |       CAST(4 * m_edges * sum_intra - sum_d2 AS DOUBLE)
          |         / CAST(4 * m_edges * m_edges AS DOUBLE) AS modularity
          |FROM per CROSS JOIN m CROSS JOIN tot
-         |ORDER BY n_members DESC, community LIMIT 15""".stripMargin
-    },
-    "x_graph_conductance" -> {
-      def it(prev: String, out: String): String =
-        s"""$out AS (SELECT node, lbl FROM (
-           |  SELECT a.node, p.lbl, COUNT(*) AS cnt,
-           |         ROW_NUMBER() OVER (PARTITION BY a.node
-           |           ORDER BY COUNT(*) DESC, p.lbl) AS rn
-           |  FROM adj a JOIN $prev p ON a.nbr = p.node
-           |  GROUP BY a.node, p.lbl) WHERE rn = 1)""".stripMargin
-      s"""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk
-         |            FROM lineitem
-         |            WHERE l_partkey % 4 = 0 AND l_orderkey % 2 = 0),
-         |e AS (SELECT DISTINCT a.pk AS u, b.pk AS v
-         |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-         |adj AS (SELECT u AS node, v AS nbr FROM e
-         |        UNION ALL SELECT v, u FROM e),
-         |l0 AS (SELECT DISTINCT node, node AS lbl FROM adj),
-         |${it("l0", "l1")},
-         |${it("l1", "l2")},
-         |${it("l2", "l3")},
+         |ORDER BY n_members DESC, community LIMIT 15""".stripMargin,
+    "x_graph_conductance" ->
+      s"""$lpaCtes,
          |m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m_edges FROM e),
          |lab AS (SELECT lu.lbl AS lu, lv.lbl AS lv
          |        FROM e JOIN l3 lu ON e.u = lu.node
@@ -3236,8 +3264,7 @@ object ExtraOps {
          |                    least(volume, 2 * m_edges - volume))
          |         AS conductance_ppm
          |FROM per CROSS JOIN m
-         |ORDER BY n_members DESC, community LIMIT 15""".stripMargin
-    },
+         |ORDER BY n_members DESC, community LIMIT 15""".stripMargin,
     "x_random_walk" ->
       s"""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk FROM lineitem
          |            WHERE l_partkey % 4 = 0 AND l_orderkey % 2 = 0),
@@ -3438,13 +3465,7 @@ object ExtraOps {
         |         / (CAST(n_customers AS DOUBLE) * CAST(sx AS DOUBLE)) AS gini
         |FROM g ORDER BY c_mktsegment""".stripMargin,
     "x_link_predict" ->
-      """WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk
-        |            FROM lineitem
-        |            WHERE l_partkey % 4 = 0 AND l_orderkey % 2 = 0),
-        |e AS (SELECT DISTINCT a.pk AS u, b.pk AS v
-        |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-        |adj AS (SELECT u AS node, v AS nbr FROM e
-        |        UNION ALL SELECT v, u FROM e),
+      s"""$sparseAdjCtes,
         |deg AS (SELECT node, COUNT(*) AS deg FROM adj GROUP BY 1),
         |w AS (SELECT a.node AS u, b.node AS v, COUNT(*) AS cn
         |      FROM adj a JOIN adj b ON a.nbr = b.nbr AND a.node < b.node
@@ -3464,18 +3485,9 @@ object ExtraOps {
            |  JOIN $prev p ON a.node = p.node
            |  JOIN $prev q ON a.nbr = q.node
            |  GROUP BY a.node HAVING COUNT(*) >= 10)""".stripMargin
-      s"""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk
-         |            FROM lineitem
-         |            WHERE l_partkey % 4 = 0 AND l_orderkey % 2 = 0),
-         |e AS (SELECT DISTINCT a.pk AS u, b.pk AS v
-         |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-         |adj AS (SELECT u AS node, v AS nbr FROM e
-         |        UNION ALL SELECT v, u FROM e),
+      s"""$sparseAdjCtes,
          |v0 AS (SELECT DISTINCT node FROM adj),
-         |${peel("v0", "v1")},
-         |${peel("v1", "v2")},
-         |${peel("v2", "v3")},
-         |${peel("v3", "v4")},
+         |${rounds(peel, "v0", "v1", "v2", "v3", "v4")},
          |deg AS (SELECT a.node, COUNT(*) AS core_deg FROM adj a
          |        JOIN v4 p ON a.node = p.node
          |        JOIN v4 q ON a.nbr = q.node
@@ -3635,133 +3647,35 @@ object ExtraOps {
         |FROM events GROUP BY event_type
         |ORDER BY n DESC, event_type LIMIT 5""".stripMargin,
     "x_pagerank" -> {
-      val S = "1000000000000"
-      def it(prev: String, out: String): String =
-        s"""$out AS (SELECT p.node, p.outdeg, p.n,
-           |  (3 * ($S // p.n)) // 20
-           |  + (17 * (COALESCE(f.inflow, 0)
-           |           + (SELECT COALESCE(SUM(r), 0) FROM $prev WHERE outdeg = 0) // p.n)) // 20 AS r
-           |FROM $prev p LEFT JOIN (
-           |  SELECT e.v AS node, SUM(r.r // r.outdeg) AS inflow
-           |  FROM e JOIN $prev r ON e.u = r.node GROUP BY e.v) f USING (node))""".stripMargin
-      s"""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk
-         |            FROM lineitem WHERE l_partkey % 2 = 0),
-         |e AS (SELECT DISTINCT a.pk AS u, b.pk AS v
-         |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-         |nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
-         |od AS (SELECT u AS node, COUNT(*) AS outdeg FROM e GROUP BY u),
-         |nd AS (SELECT nx.node, COALESCE(od.outdeg, 0) AS outdeg,
-         |              (SELECT COUNT(*) FROM nodes) AS n
-         |       FROM nodes nx LEFT JOIN od USING (node)),
-         |r0 AS (SELECT node, outdeg, n, $S // n AS r FROM nd),
-         |${it("r0", "i1")},
-         |${it("i1", "i2")},
-         |${it("i2", "i3")}
-         |SELECT node AS part_id, CAST(r AS BIGINT) AS rank_scaled
-         |FROM i3 ORDER BY rank_scaled DESC, part_id""".stripMargin
+      val S = RANK_SCALE
+      rankSql("(SELECT COUNT(*) FROM nodes) AS n",
+        s"node, outdeg, n, $S // n",
+        rankRoundCte("p.node, p.outdeg, p.n", s"(3 * ($S // p.n)) // 20",
+          dang => s"$dang // p.n"),
+        "CAST(r AS BIGINT) AS rank_scaled")
     },
     "x_ppr" -> {
-      val S = "1000000000000"
-      def it(prev: String, out: String): String =
-        s"""$out AS (SELECT p.node, p.outdeg, p.ns, p.is_seed,
-           |  p.is_seed * ((3 * ($S // p.ns)) // 20)
-           |  + (17 * (COALESCE(f.inflow, 0)
-           |           + p.is_seed * ((SELECT COALESCE(SUM(r), 0) FROM $prev WHERE outdeg = 0) // p.ns))) // 20 AS r
-           |FROM $prev p LEFT JOIN (
-           |  SELECT e.v AS node, SUM(r.r // r.outdeg) AS inflow
-           |  FROM e JOIN $prev r ON e.u = r.node GROUP BY e.v) f USING (node))""".stripMargin
-      s"""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk
-         |            FROM lineitem WHERE l_partkey % 2 = 0),
-         |e AS (SELECT DISTINCT a.pk AS u, b.pk AS v
-         |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-         |nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
-         |od AS (SELECT u AS node, COUNT(*) AS outdeg FROM e GROUP BY u),
-         |nd AS (SELECT nx.node, COALESCE(od.outdeg, 0) AS outdeg,
-         |              (SELECT COUNT(*) FROM nodes WHERE node % 10 = 0) AS ns,
-         |              CASE WHEN nx.node % 10 = 0 THEN 1 ELSE 0 END AS is_seed
-         |       FROM nodes nx LEFT JOIN od USING (node)),
-         |r0 AS (SELECT node, outdeg, ns, is_seed, is_seed * ($S // ns) AS r FROM nd),
-         |${it("r0", "i1")},
-         |${it("i1", "i2")},
-         |${it("i2", "i3")}
-         |SELECT node AS part_id, CAST(is_seed AS BIGINT) AS is_seed,
-         |       CAST(r AS BIGINT) AS rank_scaled
-         |FROM i3 ORDER BY rank_scaled DESC, part_id""".stripMargin
+      val S = RANK_SCALE
+      rankSql("""(SELECT COUNT(*) FROM nodes WHERE node % 10 = 0) AS ns,
+          |              CASE WHEN nx.node % 10 = 0 THEN 1 ELSE 0 END AS is_seed""".stripMargin,
+        s"node, outdeg, ns, is_seed, is_seed * ($S // ns)",
+        rankRoundCte("p.node, p.outdeg, p.ns, p.is_seed",
+          s"p.is_seed * ((3 * ($S // p.ns)) // 20)",
+          dang => s"p.is_seed * ($dang // p.ns)"),
+        """CAST(is_seed AS BIGINT) AS is_seed,
+          |       CAST(r AS BIGINT) AS rank_scaled""".stripMargin)
     },
-    "x_label_prop" -> {
-      def it(prev: String, out: String): String =
-        s"""$out AS (SELECT node, lbl FROM (
-           |  SELECT a.node, p.lbl, COUNT(*) AS cnt,
-           |         ROW_NUMBER() OVER (PARTITION BY a.node
-           |           ORDER BY COUNT(*) DESC, p.lbl) AS rn
-           |  FROM adj a JOIN $prev p ON a.nbr = p.node
-           |  GROUP BY a.node, p.lbl) WHERE rn = 1)""".stripMargin
-      s"""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk
-         |            FROM lineitem
-         |            WHERE l_partkey % 4 = 0 AND l_orderkey % 2 = 0),
-         |e AS (SELECT DISTINCT a.pk AS u, b.pk AS v
-         |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-         |adj AS (SELECT u AS node, v AS nbr FROM e
-         |        UNION ALL SELECT v, u FROM e),
-         |l0 AS (SELECT DISTINCT node, node AS lbl FROM adj),
-         |${it("l0", "l1")},
-         |${it("l1", "l2")},
-         |${it("l2", "l3")}
+    "x_label_prop" ->
+      s"""$lpaCtes
          |SELECT lbl AS community, COUNT(*) AS n_members
          |FROM l3 GROUP BY lbl
-         |ORDER BY n_members DESC, community""".stripMargin
-    },
-    "x_bfs_hops" -> {
-      def round(prev: String, out: String): String =
-        s"""$out AS (SELECT node, MIN(dist) AS dist FROM (
-           |  SELECT node, dist FROM $prev
-           |  UNION ALL
-           |  SELECT adj.nbr AS node, $prev.dist + 1 AS dist
-           |  FROM $prev JOIN adj USING (node)) GROUP BY node)""".stripMargin
-      s"""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk
-         |            FROM lineitem
-         |            WHERE l_partkey % 4 = 0 AND l_orderkey % 2 = 0),
-         |e AS (SELECT DISTINCT a.pk AS u, b.pk AS v
-         |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-         |adj AS (SELECT u AS node, v AS nbr FROM e
-         |        UNION ALL SELECT v, u FROM e),
-         |nodes AS (SELECT DISTINCT node FROM adj),
-         |d0 AS (SELECT MIN(node) AS node, CAST(0 AS BIGINT) AS dist
-         |       FROM nodes),
-         |${round("d0", "d1")},
-         |${round("d1", "d2")},
-         |${round("d2", "d3")}
-         |SELECT n.node AS part_id,
-         |       COALESCE(d3.dist, CAST(-1 AS BIGINT)) AS hops
-         |FROM nodes n LEFT JOIN d3 USING (node)
-         |ORDER BY hops, part_id""".stripMargin
-    },
-    "x_dijkstra_hops" -> {
-      def round(prev: String, out: String): String =
-        s"""$out AS (SELECT node, MIN(dist) AS dist FROM (
-           |  SELECT node, dist FROM $prev
-           |  UNION ALL
-           |  SELECT adj.nbr AS node, $prev.dist + adj.w AS dist
-           |  FROM $prev JOIN adj USING (node)) GROUP BY node)""".stripMargin
-      s"""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk
-         |            FROM lineitem
-         |            WHERE l_partkey % 4 = 0 AND l_orderkey % 2 = 0),
-         |e AS (SELECT DISTINCT a.pk AS u, b.pk AS v
-         |      FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-         |adj AS (SELECT node, nbr, 1 + (node + nbr) % 7 AS w FROM (
-         |          SELECT u AS node, v AS nbr FROM e
-         |          UNION ALL SELECT v, u FROM e)),
-         |nodes AS (SELECT DISTINCT node FROM adj),
-         |d0 AS (SELECT MIN(node) AS node, CAST(0 AS BIGINT) AS dist
-         |       FROM nodes),
-         |${round("d0", "d1")},
-         |${round("d1", "d2")},
-         |${round("d2", "d3")}
-         |SELECT n.node AS part_id,
-         |       COALESCE(d3.dist, CAST(-1 AS BIGINT)) AS dist_w
-         |FROM nodes n LEFT JOIN d3 USING (node)
-         |ORDER BY dist_w, part_id""".stripMargin
-    },
+         |ORDER BY n_members DESC, community""".stripMargin,
+    "x_bfs_hops" -> relaxSql(adjCte, "1", "hops"),
+    "x_dijkstra_hops" -> relaxSql(
+      """adj AS (SELECT node, nbr, 1 + (node + nbr) % 7 AS w FROM (
+        |          SELECT u AS node, v AS nbr FROM e
+        |          UNION ALL SELECT v, u FROM e))""".stripMargin,
+      "adj.w", "dist_w"),
     "x_triangle_count" ->
       """WITH e AS (
         |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v

@@ -42,7 +42,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * duplicates are possible — same caveat the window form carries.
   *
   * Implemented per SURVEY.md §7 preference (c): logical node + strategy
-  * (self-registered via [[GraftSqlShim]], or config-time through
+  * (installed by [[graft.Sessions.install]], or config-time through
   * `graft.expr.GraftExtensions`) + physical [[AsOfJoinExec]].
   */
 case class AsOfJoinNode(
@@ -158,14 +158,14 @@ object AsOfJoin {
     * TOLERANCE (the pandas `merge_asof` knob): a candidate older than
     * `toleranceUs` microseconds is rejected and the row emits nulls —
     * the conversion-window semantics attribution uses. −1 = unbounded.
-    * Self-registers the planner strategy on first use.
+    * Installs the engine on the inputs' session (idempotent).
     */
   def asOf(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String,
       toleranceUs: Long = -1L): DataFrame = {
     val spark = left.sparkSession
-    GraftSqlShim.registerStrategy(spark, AsOfJoinStrategy)
+    graft.Sessions.install(spark)
     val lp = GraftSqlShim.analyzed(left)
     val rp = GraftSqlShim.analyzed(right)
     def attr(p: LogicalPlan, name: String): Attribute =

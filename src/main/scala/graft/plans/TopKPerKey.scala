@@ -141,14 +141,15 @@ object TopKPerKey {
 
   /** Public operator API: top `k` rows per `keyCols` group under
     * `sortCols` ((column, ascending) — make it a total order for
-    * deterministic survivors). Self-registers the planner strategy on
-    * first use; `spark.sql.extensions=graft.expr.GraftExtensions` is the
-    * config-time alternative.
+    * deterministic survivors). Installs the engine on the input's session
+    * ([[graft.Sessions.install]], idempotent);
+    * `spark.sql.extensions=graft.expr.GraftExtensions` is the config-time
+    * alternative.
     */
   def topK(df: DataFrame, keyCols: Seq[String], sortCols: Seq[(String, Boolean)],
            k: Int): DataFrame = {
     val spark = df.sparkSession
-    GraftSqlShim.registerStrategy(spark, TopKPerKeyStrategy)
+    graft.Sessions.install(spark)
     val plan = GraftSqlShim.analyzed(df)
     def attr(name: String): Attribute =
       plan.output.find(_.name == name).getOrElse(
@@ -182,8 +183,7 @@ object TopKPerKey {
     * etl.py:181-207) — rn = 1 is the k = 1 case of the rewrite.
     */
   def topkRuleRewrite(s: SparkSession, d: String): DataFrame = {
-    val scoped = GraftSqlShim.scopedSession(s)
-    GraftSqlShim.registerStrategy(scoped, TopKPerKeyStrategy)
+    val scoped = graft.Sessions.child(s) // installs the engine, strategy included
     GraftSqlShim.registerOptimizerRule(scoped, RewriteRankFilterToTopK)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("o_custkey"))

@@ -42,7 +42,7 @@ object GraftSqlShim {
   /** Idempotently add `strategy` to the session's planner (the public
     * `ExperimentalMethods` hook — same registration point
     * `SparkSessionExtensions.injectPlannerStrategy` feeds; the direct form
-    * lets the operator library self-register on first use instead of
+    * lets `graft.Sessions.install` add it to a live session instead of
     * requiring a session-build-time config).
     */
   def registerStrategy(spark: SparkSession, strategy: SparkStrategy): Unit = {
@@ -64,15 +64,4 @@ object GraftSqlShim {
         exp.extraOptimizations = exp.extraOptimizations :+ rule
     }
   }
-
-  /** A sibling session sharing the SparkContext/catalog but with its OWN
-    * planner/optimizer registrations — the scoped home for engine
-    * extensions a caller doesn't want visible session-wide (models a
-    * deployment that opts in via `spark.sql.extensions` on one session).
-    * Built by [[_root_.graft.Sessions.child]], with artifact isolation off:
-    * Spark 4.1 keys its codegen cache by class loader, so an isolated
-    * sibling would recompile its generated classes on every call.
-    */
-  def scopedSession(spark: SparkSession): SparkSession =
-    _root_.graft.Sessions.child(spark)
 }

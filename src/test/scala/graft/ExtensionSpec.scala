@@ -116,7 +116,7 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
     // full brute-force ≥0.3 ground truth (125k codegen'd cosines — cheap)
     val e = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
-    graft.expr.VectorExprs.register(spark)
+    Sessions.install(spark)
     val brute = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .withColumn("cosine", expr("graft_cosine(a.embedding, b.embedding)"))
       .filter(col("cosine") >= 0.3)
@@ -433,7 +433,7 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("codegen CosineSim is bit-identical to the HOF fold") {
-    graft.expr.VectorExprs.register(spark)
+    Sessions.install(spark)
     val e = Tables.embeddings(spark, sf)
     val pairs = e.select(col("vec_id").as("ia"), col("embedding").as("va"))
       .crossJoin(e.select(col("vec_id").as("ib"), col("embedding").as("vb")))
@@ -456,7 +456,7 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
     val diff = joined.filter(col("sig") =!= col("sig_hof")).count()
     assert(diff == 0, s"$diff docs differ — arithmetic must match exactly")
     // empty shingle set → the fold's init vector (K × MaxLong)
-    graft.expr.VectorExprs.register(spark)
+    Sessions.install(spark)
     val empty = Seq(Seq.empty[Long]).toDF("shashes")
       .selectExpr("graft_minhash(shashes) AS sig").collect().head.getSeq[Long](0)
     assert(empty.length == graft.expr.MinHashSig.K
@@ -472,7 +472,7 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
     val prev = spark.conf.getOption("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
-      graft.expr.VectorExprs.register(spark)
+      Sessions.install(spark)
       val sig = Seq((1L, Seq(7L, 99L, 12345L))).toDF("doc_id", "shashes")
         .selectExpr("graft_minhash(shashes) AS sig",
           "graft_cosine(CAST(array(1.0, 2.0) AS ARRAY<FLOAT>), " +
@@ -487,7 +487,7 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
 
   test("CosineSim: ragged vectors yield null; wrong types fail analysis") {
     import spark.implicits._
-    graft.expr.VectorExprs.register(spark)
+    Sessions.install(spark)
     val ragged = Seq((Array(1.0f, 2.0f), Array(1.0f, 2.0f, 3.0f)))
       .toDF("a", "b")
       .selectExpr("graft_cosine(a, b) AS c").collect()
@@ -502,7 +502,7 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
 
   test("native functions fail analysis on a wrong argument count (per-session path)") {
     import spark.implicits._
-    graft.expr.VectorExprs.register(spark)
+    Sessions.install(spark)
     val df = Seq((Array(1.0f), Array(1.0f), Array(1.0f))).toDF("a", "b", "c")
     // selectExpr analyzes eagerly: the builder's refusal surfaces there,
     // before any job
@@ -510,6 +510,21 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
       val e = intercept[IllegalArgumentException](df.selectExpr(call))
       assert(e.getMessage.contains("requires exactly 2 arguments"), call)
     }
+  }
+
+  test("Sessions.install takes back a graft function name a foreign function holds") {
+    val c = Sessions.child(spark)
+    c.udf.register("graft_cosine", (_: Seq[Float], _: Seq[Float]) => -1.0)
+    def cosine: Double = c.sql(
+      """SELECT graft_cosine(CAST(array(1.0, 0.0) AS ARRAY<FLOAT>),
+        |                    CAST(array(1.0, 1.0) AS ARRAY<FLOAT>))""".stripMargin)
+      .head().getDouble(0)
+    assert(cosine == -1.0, "the foreign function should serve until install")
+    Sessions.install(c)
+    assert(math.abs(cosine - 1.0 / math.sqrt(2.0)) < 1e-15)
+    assert(c.sessionState.functionRegistry
+      .lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cosine"))
+      .map(_.getClassName).contains(classOf[graft.expr.CosineSim].getName))
   }
 
   test("GraftExtensions injects graft_cosine at session build (spark.sql.extensions path)") {

@@ -4,17 +4,24 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one per JVM — suites reuse it). */
+/** Shared local session for all suites (one per JVM — suites reuse it),
+  * with the engine installed as `SparkEntry.queries` would install it, so
+  * suites may call library frames directly in any order.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    Sessions.install(s)
+    s
+  }
   val sf = "/root/testdata/sf0.001"
 }
 

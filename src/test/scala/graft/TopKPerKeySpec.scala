@@ -98,8 +98,7 @@ class TopKPerKeySpec extends AnyFunSuite {
   }
 
   test("rewrite rule declines rank-kept, rank()-based, and unpartitioned shapes") {
-    val scoped = org.apache.spark.sql.graft.GraftSqlShim.scopedSession(spark)
-    org.apache.spark.sql.graft.GraftSqlShim.registerStrategy(scoped, graft.plans.TopKPerKeyStrategy)
+    val scoped = Sessions.child(spark) // installs the engine, strategy included
     org.apache.spark.sql.graft.GraftSqlShim.registerOptimizerRule(scoped, graft.plans.RewriteRankFilterToTopK)
     val base = Tables.orders(scoped, sf)
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
