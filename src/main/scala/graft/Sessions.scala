@@ -7,7 +7,8 @@ import org.apache.spark.sql.graft.GraftSqlShim
 
 /** Session helpers: the object-store conf passthrough the entry-point
   * mains build their root session with, [[install]], which puts the
-  * whole engine (planner strategies and native functions) on a session,
+  * whole engine (planner strategies, native functions and the local
+  * filesystem) on a session,
   * and [[child]], the one constructor for the engine's per-call child
   * sessions.
   *
@@ -41,15 +42,39 @@ object Sessions {
   private[graft] val strategies: Seq[SparkStrategy] = Seq(
     plans.TopKPerKeyStrategy, plans.AsOfJoinStrategy, plans.SmallSortStrategy)
 
+  /** The session Hadoop keys that put [[LocalFs]] on `file:` paths.
+    *  - `fs.file.impl`: the `FileSystem` API (file sinks' committer).
+    *  - `fs.AbstractFileSystem.file.impl`: the `FileContext` API, which
+    *    Spark's streaming checkpoints (offset and commit logs, state store
+    *    files) use.
+    *  - `fs.file.impl.disable.cache`: Hadoop caches `FileSystem`
+    *    instances by scheme, authority and user, not by conf, so a cached
+    *    `file:` instance made before would be served in place of
+    *    [[LocalFs]]. An uncached lookup costs ~4-15 µs (4-vCPU box).
+    * They are session keys, not SparkContext ones, because a session's
+    * `newHadoopConf()` (its file sources and sinks, the sessions a stream
+    * clones and their state-store tasks) reads them, and the engine does
+    * not own the builders of the root sessions it is handed.
+    */
+  private val localFsConf: Seq[(String, String)] = Seq(
+    "fs.file.impl" -> classOf[LocalFs].getName,
+    "fs.file.impl.disable.cache" -> "true",
+    "fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Context].getName)
+
   /** Idempotently installs the engine on `s`: [[strategies]] on its
-    * planner and `graft.expr.VectorExprs.functions` in its function
-    * registry. `SparkEntry.queries` calls it before every builder,
-    * [[child]] on each child, and the `topK`/`asOf` operator APIs on their
-    * input's session; `GraftExtensions` injects the same objects at
-    * session build.
+    * planner, `graft.expr.VectorExprs.functions` in its function registry
+    * and [[LocalFs]] for its `file:` paths ([[localFsConf]]).
+    * `SparkEntry.queries` calls it before every builder, [[child]] on each
+    * child (a `newSession()` inherits no runtime conf), and the
+    * `topK`/`asOf` operator APIs on their input's session;
+    * `GraftExtensions` injects the same planner strategies and functions
+    * at session build.
     */
   def install(s: SparkSession): Unit = {
     strategies.foreach(GraftSqlShim.registerStrategy(s, _))
+    localFsConf.foreach { case (k, v) =>
+      if (!s.conf.getOption(k).contains(v)) s.conf.set(k, v)
+    }
     // Idempotent AND self-owned: skipping on mere name presence would let
     // a foreign same-named function (registered by the user or another
     // library) silently serve graft's own queries. So each function is

@@ -732,8 +732,7 @@ object Similarity {
     * keep the NPROBE best. Shared by [[ivfProbeStore]] and [[ivfpqTopK]];
     * package-visible so the spec can assert the pruning invariant.
     */
-  private[graft] def probeBuckets(s: SparkSession, queries: DataFrame,
-      cent: DataFrame): DataFrame = {
+  private[graft] def probeBuckets(queries: DataFrame, cent: DataFrame): DataFrame = {
     val qv = quantizedOf(queries)
     val wProbe = Window.partitionBy(col("vec_id")).orderBy(desc("ccos"), col("cid"))
     qv.join(broadcast(cent))
@@ -746,7 +745,7 @@ object Similarity {
   def ivfProbeStore(s: SparkSession, d: String, cent: DataFrame,
       assigned: DataFrame): DataFrame = {
     val e = Tables.embeddings(s, d)
-    val probes = probeBuckets(s, e.filter(col("vec_id") < 5), cent)
+    val probes = probeBuckets(e.filter(col("vec_id") < 5), cent)
     val cand = probes.join(assigned, Seq("bucket"))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand_id"))
@@ -1673,8 +1672,7 @@ object Similarity {
       sub: (Int, Int) => String): DataFrame = {
     val qv = quantizedOf(Tables.embeddings(s, d).filter(col("vec_id") < 5))
       .localCheckpoint() // reused by dtable and re-rank
-    val probes = probeBuckets(s,
-      Tables.embeddings(s, d).filter(col("vec_id") < 5), cent)
+    val probes = probeBuckets(Tables.embeddings(s, d).filter(col("vec_id") < 5), cent)
     val cand = probes.join(assigned, Seq("bucket"))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand_id"))

@@ -25,7 +25,10 @@ object StreamOps {
     * store instance is created per shuffle partition per stateful
     * operator, and at local[32] the 32-way store setup/commit machinery —
     * not the data — dominated the wall time (r03: the st_* pair was 13.7 s
-    * of a 72.9 s suite). 4 partitions keeps the same keyed-state semantics
+    * of a 72.9 s suite). Each store commit then also spawned `chmod`, `ls`
+    * and `readlink` processes, which [[graft.LocalFs]] now avoids, so how
+    * much of that cost the partition count carries has to be measured
+    * again. 4 partitions keeps the same keyed-state semantics
     * at a fraction of the fixed cost; on a real cluster you would size
     * this to the stream's key cardinality instead. A child session scopes
     * the override (and the memory-sink registration) away from the

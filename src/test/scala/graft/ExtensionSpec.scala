@@ -413,7 +413,7 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
       // recompute probes directly: rank centroids per query like the impl
       import org.apache.spark.sql.functions._
       val e = Tables.embeddings(spark, sf).filter(col("vec_id") < 5)
-      ext.Similarity.probeBuckets(spark, e, cent).collect()
+      ext.Similarity.probeBuckets(e, cent).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     }
@@ -525,6 +525,12 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
     assert(c.sessionState.functionRegistry
       .lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cosine"))
       .map(_.getClassName).contains(classOf[graft.expr.CosineSim].getName))
+    // a second install changes nothing: no conf key, no strategy added
+    val (conf, strategies) = (c.conf.getAll, c.sessionState.planner.extraPlanningStrategies)
+    assert(conf.get("fs.file.impl").contains(classOf[LocalFs].getName))
+    Sessions.install(c)
+    assert(c.conf.getAll == conf)
+    assert(c.sessionState.planner.extraPlanningStrategies == strategies)
   }
 
   test("GraftExtensions injects graft_cosine at session build (spark.sql.extensions path)") {

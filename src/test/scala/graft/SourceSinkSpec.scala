@@ -13,7 +13,14 @@ import org.scalatest.funsuite.AnyFunSuite
 class SourceSinkSpec extends AnyFunSuite {
 
   test("z-order write clusters BOTH dimensions; single-column sort sprays the other") {
-    import TestSpark.{sf, spark}
+    import TestSpark.sf
+    // Range bounds come from a sample seeded by the RDD id, so with the
+    // default 100 rows per partition they (and the z spans, 537-604 over
+    // 12 RDD ids) move with how many RDDs earlier suites made. At this
+    // scale a hint of 1000 samples every row, so the bounds are the exact
+    // quantiles on any run (x span 581.75).
+    val spark = Sessions.child(TestSpark.spark)
+    spark.conf.set("spark.sql.execution.rangeExchange.sampleSizePerPartition", "1000")
     val pts = Tables.lineitem(spark, sf)
       .select((col("l_orderkey") % 1024).cast("int").as("x"),
         ((col("l_partkey") * 7 + col("l_suppkey")) % 1024).cast("int").as("y"))
