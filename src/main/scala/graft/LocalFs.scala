@@ -6,8 +6,8 @@ import java.nio.file.{FileSystemException, Files, NoSuchFileException}
 import java.nio.file.attribute.{BasicFileAttributes, GroupPrincipal, UserPrincipal}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FSLinkResolver,
-  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FSDataInputStream,
+  FSLinkResolver, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -156,6 +156,10 @@ object LocalFs {
 
   /** The `FileContext` twin of [[LocalFs]]: Hadoop's `local.LocalFs`
     * (checksums included) over [[Raw]]. Like it, it ignores `uri`.
+    * Its one-argument `open`, which Spark's checkpoint reads use, checks
+    * sums too (`FilterFs` sends it past `ChecksumFs` to the raw one).
     */
-  class Context(uri: URI, conf: Configuration) extends ChecksumFs(new RawContext(conf))
+  class Context(uri: URI, conf: Configuration) extends ChecksumFs(new RawContext(conf)) {
+    override def open(p: Path): FSDataInputStream = open(p, getServerDefaults(p).getFileBufferSize)
+  }
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1852,12 +1852,7 @@ object Similarity {
     * instead of serving stale codes.
     */
   private[graft] def pqEnsureIndex(s: SparkSession, d: String): (String, String) = {
-    val emb = new java.io.File(s"$d/embeddings.parquet")
-    val fpSrc = s"$d|${emb.length}|${emb.lastModified}|$PQ_M|$PQ_KS|$QSCALE"
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(fpSrc.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_pq_index_$fp")
+    val root = Scratch.store("pq_index", s"${Scratch.fileKey(d, "embeddings")}|$PQ_M|$PQ_KS|$QSCALE")
     val codes = new java.io.File(root, "codes")
     val cb = new java.io.File(root, "codebook")
     def committed(f: java.io.File) = new java.io.File(f, "_SUCCESS").exists
@@ -1890,12 +1885,7 @@ object Similarity {
     * assignment), fingerprinted like [[pqEnsureIndex]].
     */
   private[graft] def ivfEnsureIndex(s: SparkSession, d: String): (String, String) = {
-    val emb = new java.io.File(s"$d/embeddings.parquet")
-    val fpSrc = s"$d|${emb.length}|${emb.lastModified}|ivf|$QSCALE"
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(fpSrc.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_ivf_index_$fp")
+    val root = Scratch.store("ivf_index", s"${Scratch.fileKey(d, "embeddings")}|ivf|$QSCALE")
     val centDir = new java.io.File(root, "centroids")
     val assignDir = new java.io.File(root, "assignment")
     def committed(f: java.io.File) = new java.io.File(f, "_SUCCESS").exists
@@ -1973,14 +1963,8 @@ object Similarity {
       .map(f => java.nio.file.Files.readString(f.toPath)
         .split("\n").toSeq.filter(_.nonEmpty))
 
-  private[graft] def ivfpqIncRoot(s: SparkSession, d: String): java.io.File = {
-    val emb = new java.io.File(s"$d/embeddings.parquet")
-    val fpSrc =
-      s"$d|${emb.length}|${emb.lastModified}|ivfpq_inc|$QSCALE|$PQ_M|$PQ_KS"
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(fpSrc.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    new java.io.File(sys.props("java.io.tmpdir"), s"graft_ivfpq_inc_$fp")
-  }
+  private[graft] def ivfpqIncRoot(d: String): java.io.File =
+    Scratch.store("ivfpq_inc", s"${Scratch.fileKey(d, "embeddings")}|ivfpq_inc|$QSCALE|$PQ_M|$PQ_KS")
 
   /** Build the BASE index if absent: centroids trained (Lloyd) on the
     * base corpus only, codebook from the deterministic first-KS init,
@@ -1989,7 +1973,7 @@ object Similarity {
     */
   private[graft] def ivfpqIncEnsureBase(s: SparkSession,
       d: String): java.io.File = {
-    val root = ivfpqIncRoot(s, d)
+    val root = ivfpqIncRoot(d)
     val man = new java.io.File(root, "manifest")
     if (readManifest(man).isEmpty) {
       val qvb = quantizedOf(

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{Det, Tables}
+import graft.{Det, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -422,17 +422,11 @@ object TextOps {
   }
 
   /** Store root for the persisted publish run, fingerprinted by corpus
-    * identity (the ivfpqIncRoot convention) so reruns resume and a
-    * different corpus gets a fresh store.
+    * identity ([[graft.Scratch.store]]) so reruns resume and a different
+    * corpus gets a fresh store.
     */
-  private[graft] def e2ePublishRoot(s: SparkSession, d: String): java.io.File = {
-    val docs = new java.io.File(s"$d/documents.parquet")
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|${docs.length}|${docs.lastModified}|e2e_publish_v1"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    new java.io.File(sys.props("java.io.tmpdir"), s"graft_e2e_pub_$fp")
-  }
+  private[graft] def e2ePublishRoot(d: String): java.io.File =
+    Scratch.store("e2e_pub", s"${Scratch.fileKey(d, "documents")}|e2e_publish_v1")
 
   /** Run — or RESUME — the persisted publish pipeline: every stage
     * materializes to parquet under `root` and is SKIPPED when its
@@ -510,7 +504,7 @@ object TextOps {
     * is O(manifest) regardless of data volume; re-runs are no-ops.
     */
   def e2ePublish(s: SparkSession, d: String): DataFrame = {
-    val root = e2ePublishRoot(s, d)
+    val root = e2ePublishRoot(d)
     e2ePublishRun(s, d, root)
     def rd(name: String) = s.read.parquet(new java.io.File(root, name).toString)
     val recomputed = manifestSectionsOf(rd("07_shards"))
@@ -554,14 +548,8 @@ object TextOps {
   /** Store root for the incremental-curation state, fingerprinted by
     * corpus identity (the [[e2ePublishRoot]] convention).
     */
-  private[graft] def e2eIncRoot(s: SparkSession, d: String): java.io.File = {
-    val docs = new java.io.File(s"$d/documents.parquet")
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|${docs.length}|${docs.lastModified}|e2e_inc_v1"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    new java.io.File(sys.props("java.io.tmpdir"), s"graft_e2e_inc_$fp")
-  }
+  private[graft] def e2eIncRoot(d: String): java.io.File =
+    Scratch.store("e2e_inc", s"${Scratch.fileKey(d, "documents")}|e2e_inc_v1")
 
   /** The house token count (regex token rule) — the FROZEN tokenizer of
     * the incremental pipeline: token counts must not change when new
@@ -758,7 +746,7 @@ object TextOps {
     * discipline of `pipe_imv`, applied to the whole curation DAG.
     */
   def e2eIncremental(s: SparkSession, d: String): DataFrame = {
-    val root = e2eIncRoot(s, d)
+    val root = e2eIncRoot(d)
     e2eIncBuildState(s, d, root)
     val t = s.read.parquet(new java.io.File(root, "t").toString)
       .head().getLong(0)
@@ -771,14 +759,8 @@ object TextOps {
   }
 
   /** Store root for the incremental-PUBLISH loop. */
-  private[graft] def e2eIncPubRoot(s: SparkSession, d: String): java.io.File = {
-    val docs = new java.io.File(s"$d/documents.parquet")
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|${docs.length}|${docs.lastModified}|e2e_incpub_v1"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    new java.io.File(sys.props("java.io.tmpdir"), s"graft_e2e_incpub_$fp")
-  }
+  private[graft] def e2eIncPubRoot(d: String): java.io.File =
+    Scratch.store("e2e_incpub", s"${Scratch.fileKey(d, "documents")}|e2e_incpub_v1")
 
   /** Final-survivor rows → publishable shard rows (doc-grain metadata,
     * deterministic shard + split assignment).
@@ -848,7 +830,7 @@ object TextOps {
     * + an O(manifest) commit; history stays readable until vacuum.
     */
   def e2eIncPublish(s: SparkSession, d: String): DataFrame = {
-    val root = e2eIncPubRoot(s, d)
+    val root = e2eIncPubRoot(d)
     // share the incremental state store (same fingerprint inputs)
     e2eIncBuildState(s, d, root)
     val t = s.read.parquet(new java.io.File(root, "t").toString)

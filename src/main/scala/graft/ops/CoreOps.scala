@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Det, Tables}
+import graft.{Det, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -163,7 +163,7 @@ object CoreOps {
     * original parquet — pass = the JSON hop lost nothing.
     */
   def jsonRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_json_rt").toString
+    val out = Scratch.dir("json_rt")
     val slice = Tables.orders(s, d)
       .filter(col("o_orderkey") <= 1000)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
@@ -193,7 +193,7 @@ object CoreOps {
     * surface is identical — that interchangeability is the point.
     */
   def orcRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_orc_rt").toString
+    val out = Scratch.dir("orc_rt")
     Tables.lineitem(s, d)
       .filter(col("l_orderkey") <= 1000)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
@@ -257,8 +257,7 @@ object CoreOps {
   }
 
   def dsv2Sink(s: SparkSession, d: String): DataFrame =
-    dsv2SinkTo(s, d,
-      java.nio.file.Files.createTempDirectory("graft_kv_sink").toString)
+    dsv2SinkTo(s, d, Scratch.dir("kv_sink"))
 
   /** S12 — TIME TRAVEL over the V2 sink's snapshot log: three commits
     * (overwrite ≤300, overwrite ≤500, append (500,600]) each land an
@@ -272,7 +271,7 @@ object CoreOps {
     * SourceSinkSpec.
     */
   def timeTravel(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_kv_tt").toString
+    val out = Scratch.dir("kv_tt")
     def slice(lo: Long, hi: Long) = Tables.orders(s, d)
       .filter(col("o_orderkey") > lo && col("o_orderkey") <= hi)
       .select(col("o_orderkey").as("key"), col("o_orderstatus").as("val"))
@@ -308,7 +307,7 @@ object CoreOps {
     * table compacts partition-by-partition with exactly this plan.
     */
   def optimizeCompact(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_kv_opt").toString
+    val out = Scratch.dir("kv_opt")
     def slice(lo: Long, hi: Long) = Tables.orders(s, d)
       .filter(col("o_orderkey") > lo && col("o_orderkey") <= hi)
       .select(col("o_orderkey").as("key"), col("o_orderstatus").as("val"))
@@ -403,7 +402,7 @@ object CoreOps {
     * whatever the batch size.
     */
   def wapBranch(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_kv_wap").toString
+    val out = Scratch.dir("kv_wap")
     def slice(lo: Long, hi: Long) = Tables.orders(s, d)
       .filter(col("o_orderkey") > lo && col("o_orderkey") <= hi)
       .select(col("o_orderkey").as("key"), col("o_orderstatus").as("val"))
@@ -464,7 +463,7 @@ object CoreOps {
     * and the diff is one shuffle on the key.
     */
   def changeFeed(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_kv_cdf").toString
+    val out = Scratch.dir("kv_cdf")
     def slice(lo: Long, hi: Long) = Tables.orders(s, d)
       .filter(col("o_orderkey") > lo && col("o_orderkey") <= hi)
       .select(col("o_orderkey").as("key"), col("o_orderstatus").as("val"))
@@ -499,7 +498,7 @@ object CoreOps {
     * directory and runs no footer-inference job.
     */
   def partitionedSink(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val out = Scratch.dir("part")
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .write.mode("overwrite").partitionBy("event_type").parquet(out)
@@ -546,29 +545,9 @@ object CoreOps {
     * explicitly to the scan; this operator verifies the read-side
     * semantics that make that evolution safe (new columns nullable,
     * subset projections compatible both directions).
-    *
-    * Scratch-dir hygiene: the two generations land in ONE per-JVM temp
-    * directory ([[evoScratchDir]], deleted by a shutdown hook) that is
-    * reused across invocations — a 259-query verify/bench round calls
-    * this repeatedly and must not litter a fresh directory per call.
-    * Driver-local `Files.createTempDirectory` is a LOCAL-MODE
-    * assumption: on a real cluster the path must be on shared storage
-    * (HDFS/S3) or executors can't read what the driver-side path names.
     */
-  private lazy val evoScratchDir: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft_evo")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      try Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      catch { case _: Exception => () }
-    }))
-    p.toString
-  }
-
   def schemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val out = evoScratchDir
+    val out = Scratch.dir("evo")
     val o = Tables.orders(s, d)
     o.filter(col("o_orderkey") % 2 === 0)
       .select(col("o_orderkey"), col("o_totalprice"))
@@ -882,7 +861,7 @@ object CoreOps {
     */
   def csvBadRecords(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val out = java.nio.file.Files.createTempDirectory("graft_csv_bad").toString
+    val out = Scratch.dir("csv_bad")
     Tables.nation(s, d)
       .select(when(col("n_nationkey") % 5 === 0,
           concat(lit("#corrupt#,"), col("n_name")))
@@ -926,7 +905,7 @@ object CoreOps {
     */
   def nestedJson(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val out = java.nio.file.Files.createTempDirectory("graft_nested_json").toString
+    val out = Scratch.dir("nested_json")
     val items = Tables.lineitem(s, d)
       .filter(col("l_orderkey") <= 500)
       .select(col("l_orderkey"),

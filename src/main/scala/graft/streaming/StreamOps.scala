@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Det
+import graft.{Det, Scratch}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -84,8 +84,7 @@ object StreamOps {
     * input in waves while the query runs (see [[withFeed]]).
     */
   private final class Feed(tag: String) {
-    val dir: java.nio.file.Path =
-      java.nio.file.Files.createTempDirectory(s"graft_${tag}feed")
+    val dir: java.nio.file.Path = Scratch.fresh(s"${tag}feed")
 
     /** Writes `df` as ONE parquet file into a private stage and moves it
       * into the feed as `name`, so the source never lists a half-written
@@ -93,7 +92,7 @@ object StreamOps {
       * right after. Returns the shipped file.
       */
     def ship(df: DataFrame, name: String): java.nio.file.Path = {
-      val stage = java.nio.file.Files.createTempDirectory(s"graft_${tag}stage")
+      val stage = Scratch.fresh(s"${tag}stage")
       try {
         df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
         val part = java.nio.file.Files.list(stage)
@@ -1986,9 +1985,7 @@ object StreamOps {
   def wapStream(s: SparkSession, d: String): DataFrame = {
     import graft.sources.KvSink
     val ss = tuned(s)
-    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stwap_${Integer.toHexString(d.hashCode)}").toString
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val root = Scratch.dir("stwap")
     val tbl = s"$root/table"
     def readPaths(paths: Seq[String]) =
       if (paths.isEmpty) ss.emptyDataFrame.select(
@@ -2039,26 +2036,15 @@ object StreamOps {
     * landed on disk (latest batch wins; complete mode rewrites the full
     * aggregate each batch), so the DuckDB oracle verifies the actual
     * file contents, not an in-memory stream. StreamingSpec replays the
-    * query over the same checkpoint to prove no duplicate rows land.
+    * same sink pattern over a `MemoryStream` and one checkpoint to prove
+    * that a replayed batch lands no duplicate rows.
     */
   def foreachBatchSink(s: SparkSession, d: String): DataFrame = {
     val ss = tuned(s)
-    // one REUSED sink root per dataset (keyed by source path) instead of a
-    // fresh temp dir per call — repeated bench/verify invocations rewrite
-    // the same directories rather than leaking one per run. The
-    // checkpoint is cleared so each call is a fresh bounded drain (a
-    // retained checkpoint would no-op the replay; correct, but then this
-    // query would measure nothing).
-    val out = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_febatch_${Integer.toHexString(d.hashCode)}").toString
-    // Clear BOTH the checkpoint and the data dir: a stale data dir from
-    // an earlier run (same tmpdir, regenerated dataset, or a hashCode
-    // collision between two dataset paths) could win the max(batch_id)
-    // pick below and silently return foreign rows.
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"$out/_checkpoint"))
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"$out/data"))
+    // emptied on every build, checkpoint included, so each build is a
+    // fresh bounded drain (a retained checkpoint would no-op the replay)
+    // and no earlier run's batch can win the max(batch_id) pick below
+    val out = Scratch.dir("febatch")
     val writer = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
         batchId: Long) =>
       batch.write.mode("overwrite").parquet(s"$out/data/batch_id=$batchId")

@@ -199,7 +199,7 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
   test("PQ index round-trips through parquet: serving from stored codes ≡ end-to-end") {
     // the production contract: encode once, persist the 4-byte codes,
     // answer every later query batch from the store without re-encoding
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_store").toString
+    val dir = Scratch.fresh("pq_store").toString
     ext.Similarity.pqEncode(spark, sf).write.mode("overwrite").parquet(dir)
     val fromStore = ext.Similarity.pqServe(spark, sf, spark.read.parquet(dir))
       .collect().map(_.toSeq).toSeq
@@ -307,7 +307,7 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
   test("incremental IVF+PQ append: old batch files untouched, probe ≡ frozen-training rebuild") {
     // Fresh store: the root is fingerprinted by corpus identity, so a
     // prior run's store would skip the build — delete it first.
-    val root = ext.Similarity.ivfpqIncRoot(spark, sf)
+    val root = ext.Similarity.ivfpqIncRoot(sf)
     def rmrf(f: java.io.File): Unit = {
       Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rmrf)
       f.delete()
@@ -784,7 +784,7 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
     // vowel groups: the=1 quick=2(ui? u-i adjacent => 'ui' one group) ...
     // compute independently rather than hand-count
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_read").toString
+    val tmp = Scratch.fresh("read").toString
     Seq((1L, "The quick brown fox. It jumps!", "srcX", "en", 0.5))
       .toDF("doc_id", "text", "source", "lang", "quality")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -848,7 +848,7 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
     }
     // doctor a corpus where srcB is an exact copy of srcA at higher ids:
     // srcB must keep ZERO rows and still appear with dedup_rate 1.0
-    val dir = java.nio.file.Files.createTempDirectory("graft_di").toString
+    val dir = Scratch.fresh("di").toString
     val a = Tables.documents(spark, sf).limit(20)
       .select(col("doc_id"), col("text"), lit("srcA").as("source"))
     val b = a.select((col("doc_id") + 100000L).as("doc_id"), col("text"),
@@ -1002,7 +1002,7 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
 
   test("PERMISSIVE vs DROPMALFORMED: quarantine count reconciles exactly") {
     import org.apache.spark.sql.types._
-    val out = java.nio.file.Files.createTempDirectory("graft_csv_spec").toString
+    val out = Scratch.fresh("csv_spec").toString
     Tables.nation(spark, sf)
       .select(when(col("n_nationkey") % 5 === 0,
           concat(lit("#corrupt#,"), col("n_name")))
@@ -1420,7 +1420,7 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("persisted IVF index answers queries identically to inline training") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val tmp = Scratch.fresh("ivf").toString
     val (cent, assigned) = ext.Similarity.buildIvfIndex(spark, sf)
     cent.write.parquet(s"$tmp/ivf_cent")
     assigned.write.parquet(s"$tmp/ivf_assign")
@@ -1475,7 +1475,7 @@ class ExtensionSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("incremental probe reads the sketch store, never the seen corpus") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_inc").toString
+    val tmp = Scratch.fresh("inc").toString
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
     // persist the seen corpus under a recognizable path, then derive and
     // persist its sketch store exactly once

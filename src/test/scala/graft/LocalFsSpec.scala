@@ -44,7 +44,7 @@ class LocalFsSpec extends AnyFunSuite {
     * one link to a file and one dangling link.
     */
   private def tree(): JPath = {
-    val d = Files.createTempDirectory("graft_localfs")
+    val d = Scratch.fresh("localfs")
     for ((n, m) <- Seq("f600" -> 0x180, "f644" -> 0x1a4)) {
       Files.write(d.resolve(n), n.getBytes); chmod(d.resolve(n), m)
     }
@@ -109,7 +109,7 @@ class LocalFsSpec extends AnyFunSuite {
 
   test("the .crc layer guards both APIs; rename without OVERWRITE refuses") {
     val conf = spark.sessionState.newHadoopConf()
-    val d = Files.createTempDirectory("graft_localfs_crc")
+    val d = Scratch.fresh("localfs_crc")
     val bytes = Array.tabulate[Byte](2000)(i => (i * 7).toByte)
 
     val fs = FileSystem.get(root, conf)
@@ -132,9 +132,28 @@ class LocalFsSpec extends AnyFunSuite {
     assert(!Files.exists(d.resolve("b")) && !Files.exists(d.resolve(".b.crc")))
     assert(fc.open(c, 4096).readAllBytes().sameElements(bytes))
     flip(d.resolve("c"))
-    // only the sized open checks sums: Hadoop's FilterFs sends the one-arg
-    // FileContext.open straight to the raw filesystem, stock or not
     intercept[ChecksumException](fc.open(c, 4096).readAllBytes())
+    // the one-argument open, which Spark's checkpoint reads use, checks
+    // sums too (stock ChecksumFs hands it to the raw filesystem)
+    intercept[ChecksumException](fc.open(c).readAllBytes())
+  }
+
+  /** Drains a stateful stream on `s` from `d/src` (a small parquet
+    * table, written on the first call) into the checkpoint `d/cp`, which
+    * it returns; a second call restarts the query over that checkpoint.
+    */
+  private def drain(s: org.apache.spark.sql.SparkSession, d: JPath): JPath = {
+    val src = d.resolve("src").toString
+    if (!Files.exists(d.resolve("src")))
+      s.range(0, 100).withColumn("k", col("id") % 7).write.parquet(src)
+    val cp = d.resolve("cp")
+    val q = s.readStream.schema(s.read.parquet(src).schema).parquet(src)
+      .groupBy("k").count()
+      .writeStream.outputMode(OutputMode.Complete()).format("noop")
+      .option("checkpointLocation", cp.toString)
+      .trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+    cp
   }
 
   test("installed sessions resolve file: to LocalFs; a stream checkpoint keeps its .crc") {
@@ -144,19 +163,25 @@ class LocalFsSpec extends AnyFunSuite {
       assert(FileSystem.get(root, conf).getClass == classOf[LocalFs])
       assert(AbstractFileSystem.get(root, conf).getClass == classOf[LocalFs.Context])
     }
-    val d = Files.createTempDirectory("graft_localfs_stream")
-    val src = d.resolve("src").toString
-    child.range(0, 100).withColumn("k", col("id") % 7).write.parquet(src)
-    val cp = d.resolve("cp")
-    val q = child.readStream.schema(child.read.parquet(src).schema).parquet(src)
-      .groupBy("k").count()
-      .writeStream.outputMode(OutputMode.Complete()).format("noop")
-      .option("checkpointLocation", cp.toString)
-      .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
+    val cp = drain(child, Scratch.fresh("localfs_stream"))
     for (log <- Seq("offsets", "commits"))
       assert(Files.exists(cp.resolve(s"$log/0")) && Files.exists(cp.resolve(s"$log/.0.crc")), log)
     val deltas = Files.walk(cp.resolve("state")).toArray.map(_.toString)
     assert(deltas.exists(_.endsWith("/1.delta")) && deltas.exists(_.endsWith("/.1.delta.crc")))
+  }
+
+  test("a stream restarted over a corrupted offset log fails on its checksum") {
+    val child = Sessions.child(spark)
+    val d = Scratch.fresh("localfs_restart")
+    val cp = drain(child, d)
+    // one digit of the batch timestamp, so the log still parses and only
+    // its .crc can tell
+    val off = cp.resolve("offsets/0")
+    val text = Files.readString(off)
+    val at = "\"batchTimestampMs\":(\\d+)".r.findFirstMatchIn(text).get.end(1) - 1
+    Files.writeString(off, text.updated(at, ((text(at) - '0' + 1) % 10 + '0').toChar))
+    val e = intercept[Exception](drain(child, d))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(_.isInstanceOf[ChecksumException]), chain.mkString("\n"))
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,11 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class MapOpsSpec extends AnyFunSuite {
   import TestSpark.{sf, spark}
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   test("nested struct parquet read prunes to the selected subfield") {
-    val dir = tmp("graft_nested")
+    val dir = Scratch.fresh("nested").toString
     Tables.orders(spark, sf)
       .select(col("o_orderkey"),
         struct(col("o_orderstatus").as("status"),
@@ -35,7 +32,7 @@ class MapOpsSpec extends AnyFunSuite {
   }
 
   test("map column round-trips through parquet") {
-    val dir = tmp("graft_map_pq")
+    val dir = Scratch.fresh("map_pq").toString
     val m = Tables.nation(spark, sf)
       .select(col("n_nationkey"),
         map(lit("nk"), col("n_nationkey").cast("long"),

@@ -16,7 +16,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+        Scratch.fresh("wh").toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     Sessions.install(s)
@@ -398,7 +398,7 @@ class OperatorSpec extends AnyFunSuite {
       java.time.Instant.parse("2024-01-01T00:00:00Z")
         .plusSeconds(day.toLong * 86400 + i * 60),
       1L, "shift", 1.0, "{}")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cp").toString
+    val tmp = Scratch.fresh("cp").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .withColumn("ts", col("ts").cast("timestamp"))
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")

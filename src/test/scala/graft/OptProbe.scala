@@ -243,7 +243,7 @@ object OptProbe {
             val mm = m2.find(_.getName == n).get; mm.setAccessible(true)
             mm.invoke(TextOps, as: _*)
           }
-          val root = TextOps.e2eIncPubRoot(spark, d)
+          val root = TextOps.e2eIncPubRoot(d)
           TextOps.e2eIncBuildState(spark, d, root)
           val t = spark.read.parquet(new java.io.File(root, "t").toString)
             .head().getLong(0)

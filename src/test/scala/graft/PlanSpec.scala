@@ -479,7 +479,7 @@ class PlanSpec extends AnyFunSuite {
     // must land in PartitionFilters (directory pruning — zero data files
     // of other partitions opened), NOT in PushedFilters/post-scan Filter
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_statpart").toString
+    val dir = Scratch.fresh("statpart").toString
     Tables.events(spark, sf)
       .select(col("event_id"), col("event_type"), col("value"))
       .write.mode("overwrite").partitionBy("event_type").parquet(dir)
@@ -504,7 +504,7 @@ class PlanSpec extends AnyFunSuite {
     // injects the runtime partition filter (dim broadcast reused as the
     // pruning subquery) into the partitioned scan.
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = Scratch.fresh("dpp").toString
     Tables.events(spark, sf)
       .write.mode("overwrite").partitionBy("event_type")
       .parquet(s"$dir/events_by_type")

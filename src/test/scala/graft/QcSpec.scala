@@ -14,7 +14,7 @@ class QcSpec extends AnyFunSuite {
     // the raw synthetic lineitem legitimately violates the pk-uniqueness
     // constraint (the suite REPORTS that, hash-verified vs DuckDB) — so
     // the passing-gate case runs on a pk-deduplicated copy
-    val dir = java.nio.file.Files.createTempDirectory("graft_qc_clean").toString
+    val dir = Scratch.fresh("qc_clean").toString
     Tables.lineitem(spark, sf)
       .dropDuplicates("l_orderkey", "l_linenumber")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -60,7 +60,7 @@ class QcSpec extends AnyFunSuite {
   test("constraint gate raises on injected violations, naming every failed check") {
     // doctor a copy of the tables: truncate lineitem below the size gate
     // and poison one price negative; orders stays intact so RI still holds
-    val dir = java.nio.file.Files.createTempDirectory("graft_qc").toString
+    val dir = Scratch.fresh("qc").toString
     Tables.lineitem(spark, sf)
       .limit(500)
       .withColumn("l_extendedprice",
@@ -124,7 +124,7 @@ class QcSpec extends AnyFunSuite {
     }
     // doctor a copy: drop the top 10% of orders keys → lineitem rows
     // referencing them become orphans, with exactly predictable counts
-    val dir = java.nio.file.Files.createTempDirectory("graft_ri").toString
+    val dir = Scratch.fresh("ri").toString
     val cut = (Tables.orders(spark, sf).agg(max(col("o_orderkey")))
       .collect().head.getLong(0) * 9) / 10
     Seq("region", "nation", "customer", "supplier", "part", "lineitem")

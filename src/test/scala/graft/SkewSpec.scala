@@ -70,7 +70,7 @@ class SkewSpec extends AnyFunSuite {
       conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle join
       conf.set("spark.sql.adaptive.enabled", "true")
-      val dir = java.nio.file.Files.createTempDirectory("graft_bloom").toString
+      val dir = Scratch.fresh("bloom").toString
       // runtime filters require file-scan relations (size estimation +
       // pushable scan), not LocalRelations — write real parquet
       (0L until 50000L).map(i => (i, s"payload_$i")).toDF("k", "payload")

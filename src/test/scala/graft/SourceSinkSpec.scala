@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.{Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -34,8 +34,8 @@ class SourceSinkSpec extends AnyFunSuite {
         .agg(avg(col("sx")), avg(col("sy"))).head()
       (spans.getDouble(0), spans.getDouble(1))
     }
-    val zDir = tmp("graft_zorder")
-    val xDir = tmp("graft_xsort")
+    val zDir = Scratch.fresh("zorder").toString
+    val xDir = Scratch.fresh("xsort").toString
     pts.repartitionByRange(8, col("zval")).write.mode("overwrite").parquet(zDir)
     pts.repartitionByRange(8, col("x")).write.mode("overwrite").parquet(xDir)
     val (zx, zy) = avgSpans(zDir)
@@ -51,11 +51,9 @@ class SourceSinkSpec extends AnyFunSuite {
   }
   import TestSpark.{sf, spark}
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   test("csv sink + scan with header and explicit schema (S2)") {
-    val dir = tmp("graft_csv")
+    val dir = Scratch.fresh("csv").toString
     val nation = Tables.nation(spark, sf)
     nation.write.mode(SaveMode.Overwrite).option("header", true).csv(dir)
     // header=true without schema → all strings (the reference's behavior)
@@ -74,7 +72,7 @@ class SourceSinkSpec extends AnyFunSuite {
   }
 
   test("parquet sink save modes: overwrite resets, append accumulates (S3)") {
-    val dir = tmp("graft_pq")
+    val dir = Scratch.fresh("pq").toString
     val region = Tables.region(spark, sf)
     region.write.format("parquet").mode(SaveMode.Overwrite).save(dir)
     assert(spark.read.parquet(dir).count() == 5)
@@ -90,7 +88,7 @@ class SourceSinkSpec extends AnyFunSuite {
   }
 
   test("csv malformed-record modes: PERMISSIVE nulls, DROPMALFORMED drops") {
-    val dir = tmp("graft_bad_csv")
+    val dir = Scratch.fresh("bad_csv").toString
     java.nio.file.Files.writeString(
       java.nio.file.Path.of(dir, "data.csv"),
       "id,qty\n1,10\n2,notanumber\n3,30\n")
@@ -108,7 +106,7 @@ class SourceSinkSpec extends AnyFunSuite {
   }
 
   test("json lines round-trip with explicit schema") {
-    val dir = tmp("graft_json")
+    val dir = Scratch.fresh("json").toString
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("event_type"), col("value"))
     ev.write.mode(SaveMode.Overwrite).json(dir)
@@ -123,7 +121,7 @@ class SourceSinkSpec extends AnyFunSuite {
   }
 
   test("orc round-trip preserves schema and values") {
-    val dir = tmp("graft_orc")
+    val dir = Scratch.fresh("orc").toString
     val li = Tables.lineitem(spark, sf).limit(100)
     li.write.mode(SaveMode.Overwrite).orc(dir)
     val back = spark.read.orc(dir)
@@ -132,7 +130,7 @@ class SourceSinkSpec extends AnyFunSuite {
   }
 
   test("partitioned parquet write prunes partitions on read") {
-    val dir = tmp("graft_part")
+    val dir = Scratch.fresh("part").toString
     Tables.orders(spark, sf)
       .withColumn("o_year", year(col("o_orderdate")))
       .write.mode(SaveMode.Overwrite).partitionBy("o_year").parquet(dir)
@@ -148,7 +146,7 @@ class SourceSinkSpec extends AnyFunSuite {
   test("dynamic partition overwrite replaces only the written partitions") {
     // production nightly-reload shape: rewriting one day/year must not
     // clobber sibling partitions (static overwrite mode drops them all)
-    val dir = tmp("graft_dynpart")
+    val dir = Scratch.fresh("dynpart").toString
     val base = Tables.orders(spark, sf)
       .withColumn("o_year", year(col("o_orderdate")))
     base.write.mode(SaveMode.Overwrite).partitionBy("o_year").parquet(dir)
@@ -172,7 +170,7 @@ class SourceSinkSpec extends AnyFunSuite {
   }
 
   test("parquet mergeSchema unifies evolved schemas; old rows null-backfill") {
-    val dir = tmp("graft_evolve")
+    val dir = Scratch.fresh("evolve").toString
     val docs = Tables.documents(spark, sf)
     // v1 batch: two columns; later batches add a score column
     docs.filter(col("doc_id") < 100).select(col("doc_id"), col("text"))
@@ -190,7 +188,7 @@ class SourceSinkSpec extends AnyFunSuite {
   }
 
   test("shard writer: deterministic membership, balance, pruning, rerun-stable") {
-    val dir = tmp("graft_shards")
+    val dir = Scratch.fresh("shards").toString
     val docs = Tables.documents(spark, sf)
     ext.ShardWriter.writeShards(docs, s"$dir/a", 8)
     val back = spark.read.parquet(s"$dir/a")
@@ -219,7 +217,7 @@ class SourceSinkSpec extends AnyFunSuite {
     // at 100 TB a handful of corrupt objects is a WHEN, not an IF — the
     // job must degrade to "skip and report", never die. Write good parts,
     // drop a garbage .parquet among them, read with the toggle both ways.
-    val dir = tmp("graft_corrupt")
+    val dir = Scratch.fresh("corrupt").toString
     val good = Tables.orders(spark, sf).filter(col("o_orderkey") < 1000)
     good.write.mode(SaveMode.Overwrite).parquet(dir)
     Files.write(java.nio.file.Paths.get(dir, "part-junk.parquet"),
@@ -239,8 +237,8 @@ class SourceSinkSpec extends AnyFunSuite {
     // streaming ingest leaves thousands of small parts; the nightly
     // compactor rewrites them into few files so scans stop paying
     // per-file open/footer cost. Content must survive byte-exactly.
-    val src = tmp("graft_smallfiles")
-    val out = tmp("graft_compacted")
+    val src = Scratch.fresh("smallfiles").toString
+    val out = Scratch.fresh("compacted").toString
     val orders = Tables.orders(spark, sf).filter(col("o_orderkey") < 2000)
     orders.repartition(64).write.mode(SaveMode.Overwrite).parquet(src)
     def parts(p: String) = new java.io.File(p).listFiles
@@ -255,7 +253,7 @@ class SourceSinkSpec extends AnyFunSuite {
   }
 
   test("binaryFile source ingests payload files and joins doc metadata") {
-    val dir = tmp("graft_bin")
+    val dir = Scratch.fresh("bin").toString
     // fixture: one <doc_id>.bin file per document, payload = utf-8 text
     val fixture = Tables.documents(spark, sf)
       .filter(col("doc_id") < 20)
@@ -282,7 +280,7 @@ class SourceSinkSpec extends AnyFunSuite {
   }
 
   test("V2 sink: _SUCCESS manifest accounts for every committed row; overwrite truncates") {
-    val out = Files.createTempDirectory("graft_kv_commit").toString
+    val out = Scratch.fresh("kv_commit").toString
     val first = ops.CoreOps.dsv2SinkTo(spark, sf, out)
     val n = first.count()
     assert(n == 501L)
@@ -303,7 +301,7 @@ class SourceSinkSpec extends AnyFunSuite {
   }
 
   test("V2 sink: failed overwrite leaves the previous committed snapshot intact") {
-    val out = java.nio.file.Files.createTempDirectory("graft_kv_atomic").toString
+    val out = Scratch.fresh("kv_atomic").toString
     val first = ops.CoreOps.dsv2SinkTo(spark, sf, out).collect().toSeq
     assert(first.nonEmpty)
     // an overwrite whose TASKS fail mid-write: nothing may reach the
@@ -329,7 +327,7 @@ class SourceSinkSpec extends AnyFunSuite {
   }
 
   test("V2 sink time travel: version log reconstructs past snapshots; vacuum reclaims") {
-    val out = tmp("graft_kv_tt_spec")
+    val out = Scratch.fresh("kv_tt_spec").toString
     def write(maxKey: Long, mode: String): Unit =
       Tables.orders(spark, sf).filter(col("o_orderkey") <= maxKey)
         .select(col("o_orderkey").as("key"), col("o_orderstatus").as("val"))
@@ -367,7 +365,7 @@ class SourceSinkSpec extends AnyFunSuite {
   }
 
   test("V2 sink: orphan version manifest (crash between log write and pointer swap) never affects readers") {
-    val out = tmp("graft_kv_orphanv")
+    val out = Scratch.fresh("kv_orphanv").toString
     def write(maxKey: Long): Unit =
       Tables.orders(spark, sf).filter(col("o_orderkey") <= maxKey)
         .select(col("o_orderkey").as("key"), col("o_orderstatus").as("val"))
@@ -397,7 +395,7 @@ class SourceSinkSpec extends AnyFunSuite {
 
   test("V2 sink OCC: interleaved appends rebase-and-retry; conflicting overwrite aborts; log linearizable") {
     import graft.sources.KvSink
-    val out = tmp("graft_kv_occ")
+    val out = Scratch.fresh("kv_occ").toString
     def write(lo: Long, hi: Long, mode: String): Unit =
       Tables.orders(spark, sf)
         .filter(col("o_orderkey").between(lo, hi))
@@ -494,7 +492,7 @@ class SourceSinkSpec extends AnyFunSuite {
   }
 
   test("V2 sink: orphan files are invisible to the manifest-gated read") {
-    val out = java.nio.file.Files.createTempDirectory("graft_kv_orphan").toString
+    val out = Scratch.fresh("kv_orphan").toString
     val n = ops.CoreOps.dsv2SinkTo(spark, sf, out).count()
     // simulate a crashed writer's leftover: a plausible-looking part file
     // that never made the manifest
@@ -601,7 +599,7 @@ class SourceSinkSpec extends AnyFunSuite {
 
   test("OPTIMIZE: file count drops, snapshots hash-identical, clustered ranges disjoint") {
     import TestSpark.{sf, spark}
-    val out = java.nio.file.Files.createTempDirectory("graft_kv_optspec").toString
+    val out = Scratch.fresh("kv_optspec").toString
     def slice(lo: Long, hi: Long) = Tables.orders(spark, sf)
       .filter(col("o_orderkey") > lo && col("o_orderkey") <= hi)
       .select(col("o_orderkey").as("key"), col("o_orderstatus").as("val"))
@@ -702,7 +700,7 @@ class SourceSinkSpec extends AnyFunSuite {
 
   test("WAP branches: staged commits invisible to main; publish is a metadata fast-forward; drop reclaims") {
     import graft.sources.KvSink
-    val dir = tmp("graft_kv_wapspec")
+    val dir = Scratch.fresh("kv_wapspec").toString
     def write(lo: Long, hi: Long, mode: String, branch: Option[String] = None): Unit = {
       val w = spark.range(lo, hi)
         .select(col("id").as("key"), concat(lit("v"), col("id")).as("val"))
@@ -806,7 +804,7 @@ class SourceSinkSpec extends AnyFunSuite {
       Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rmrf)
       f.delete()
     }
-    val root = ext.TextOps.e2ePublishRoot(spark, sf)
+    val root = ext.TextOps.e2ePublishRoot(sf)
     rmrf(root)
     // run 1: crashes right after the mixed stage persists — shards and
     // manifest never written
@@ -849,7 +847,7 @@ class SourceSinkSpec extends AnyFunSuite {
       Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rmrf)
       f.delete()
     }
-    val root = ext.TextOps.e2eIncRoot(spark, sf)
+    val root = ext.TextOps.e2eIncRoot(sf)
     rmrf(root)
     ext.TextOps.e2eIncBuildState(spark, sf, root)
     // the state stores carry signatures and manifest metadata, NEVER text
@@ -864,7 +862,7 @@ class SourceSinkSpec extends AnyFunSuite {
       .head().getLong(0)
     val raw = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
-    val side = tmp("graft_inc_inputs")
+    val side = Scratch.fresh("inc_inputs").toString
     raw.filter(col("doc_id") > t).write.parquet(s"$side/batch")
     raw.filter(col("doc_id") % 11 === 0).select(col("doc_id"), col("text"))
       .write.parquet(s"$side/eval")
@@ -890,8 +888,7 @@ class SourceSinkSpec extends AnyFunSuite {
     }
     // private root so this run's 60/20/20 split can't collide with the
     // declared query's 80/20 store
-    val root = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft_inc2").toFile, "store")
+    val root = new java.io.File(Scratch.fresh("inc2").toFile, "store")
     ext.TextOps.e2eIncBuildState(spark, sf, root, tenths = 6)
     val t1 = spark.read.parquet(new java.io.File(root, "t").toString)
       .head().getLong(0)
@@ -918,5 +915,27 @@ class SourceSinkSpec extends AnyFunSuite {
       s"two-batch incremental diverged from the full recompute:\n" +
         s"got  $manifest2\nwant $manifestFull")
     rmrf(root.getParentFile)
+  }
+
+  test("scratch queries rebuild into one directory each and leave no new tmpdir entry") {
+    // a scratch query's frame reads its directory lazily, so each build is
+    // collected before the next one empties that directory
+    val qs = Seq("s13_partitioned_sink", "s12_time_travel", "s19_wap_branch",
+      "s8_schema_evolution")
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    // by prefix: other processes on the box may write to the tmpdir too
+    def entries(): Set[String] = tmp.list().toSet.filter(_.startsWith("graft_"))
+    def build(): Map[String, Seq[Row]] =
+      qs.map(q => q -> SparkEntry.queries(q)(spark, sf).collect().toSeq).toMap
+    val first = build()
+    val after1 = entries()
+    val second = build()
+    assert(entries() == after1, s"left by a rebuild: ${entries() -- after1}")
+    for (q <- qs) assert(second(q) == first(q), q)
+    // a directory not emptied would carry the first build's three
+    // versions into the second's log: 1-6
+    assert(second("s12_time_travel").map(_.getAs[Long]("version")) == Seq(1L, 2L, 3L))
+    assert(Scratch.store("e2e_pub", "/data/sf0.01|1234|5678|e2e_publish_v1") ==
+      new java.io.File(tmp, "graft_e2e_pub_0995435f0df7c170"))
   }
 }

@@ -77,8 +77,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("checkpointed query restarts without reprocessing (exactly-once sink)") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val ckpt = Scratch.fresh("ckpt").toString
+    val out = Scratch.fresh("sink").toString
     def runOnce(): Unit = {
       val q = graft.streaming.StreamOps.eventsStream(spark, TestSpark.sf)
         .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
@@ -268,8 +268,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-stream interval join restarts from checkpoint without duplicates") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ssj_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_ssj_out").toString
+    val ckpt = Scratch.fresh("ssj_ckpt").toString
+    val out = Scratch.fresh("ssj_out").toString
     def runOnce(): Unit = {
       val df = graft.streaming.StreamOps.intervalJoinPlan(spark, TestSpark.sf)
       val q = df.writeStream
@@ -480,7 +480,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("foreachBatch batch-id-keyed overwrite sink is idempotent under replay") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_feb_spec").toString
+    val root = Scratch.fresh("feb_spec").toString
     def run(): Unit = {
       val input = MemoryStream[Ev](spark)
       input.addData(ev(1, "2024-01-01 10:00:00"), ev(2, "2024-01-01 10:05:00"))
@@ -608,7 +608,7 @@ class StreamingSpec extends AnyFunSuite {
     * complete-mode aggregation (window count + sum state).
     */
   test("stateful windowed agg killed mid-drain resumes from checkpoint byte-identically") {
-    val root = java.nio.file.Files.createTempDirectory("graft_restart_win").toString
+    val root = Scratch.fresh("restart_win").toString
     def run(ckpt: String, out: String, crash: Boolean): Unit = {
       val q = seqAsEvents(1000).toDF()
         .groupBy(window(col("ts"), "1 hour"), col("user_id"))
@@ -643,7 +643,7 @@ class StreamingSpec extends AnyFunSuite {
     * exactly (same offsets → same batch ids → identical files).
     */
   test("flatMapGroupsWithState sessionizer killed mid-drain resumes byte-identically") {
-    val root = java.nio.file.Files.createTempDirectory("graft_restart_sess").toString
+    val root = Scratch.fresh("restart_sess").toString
     def run(ckpt: String, out: String, crash: Boolean): Unit = {
       val q = graft.streaming.StreamOps.sessionize(seqAsEvents(1000))
         .writeStream.outputMode(OutputMode.Append())
@@ -843,8 +843,8 @@ class StreamingSpec extends AnyFunSuite {
     // equals the batch oracle over all data.
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    val ckpt1 = java.nio.file.Files.createTempDirectory("graft_repart1").toString
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_repart2").toString
+    val ckpt1 = Scratch.fresh("repart1").toString
+    val ckpt2 = Scratch.fresh("repart2").toString
     def countFn(k: Long, it: Iterator[Ev],
         st: org.apache.spark.sql.streaming.GroupState[RepartState]): (Long, Long) = {
       val n = st.getOption.map(_.n).getOrElse(0L) + it.size
@@ -859,8 +859,8 @@ class StreamingSpec extends AnyFunSuite {
       ev(10, "2024-01-01 11:00:00", user = 4))
     // a restartable FILE source (MemoryStream checkpoints cannot
     // recover): each "ship" lands one parquet file in the ingest dir
-    val dir1 = java.nio.file.Files.createTempDirectory("graft_repart_in1").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_repart_in2").toString
+    val dir1 = Scratch.fresh("repart_in1").toString
+    val dir2 = Scratch.fresh("repart_in2").toString
     def ship(dir: String, evs: Seq[Ev]): Unit =
       spark.createDataset(evs).write.mode("append").parquet(dir)
     val evSchema = org.apache.spark.sql.Encoders.product[Ev].schema
@@ -959,15 +959,16 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("file-fed streams delete their feed and stage directories") {
-    // by name prefix, so temp dirs other suites create cannot disturb it
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    def feedDirs(): Set[String] = tmp.list().toSet
-      .filter(n => n.startsWith("graft_updfeed") || n.startsWith("graft_updstage"))
+    // Feed makes its directories under the scratch root; by name prefix,
+    // so directories other suites make there cannot disturb it
+    val root = Scratch.root.toFile
+    def feedDirs(): Set[String] = root.list().toSet
+      .filter(n => n.startsWith("updfeed") || n.startsWith("updstage"))
     val before = feedDirs()
     val rows = graft.streaming.StreamOps.updateModeStream(spark, sf).collect()
     assert(rows.nonEmpty, "the drained result must outlive its feed")
     val leaked = feedDirs() -- before
-    assert(leaked.isEmpty, s"left in ${tmp}: $leaked")
+    assert(leaked.isEmpty, s"left in ${root}: $leaked")
   }
 }
 

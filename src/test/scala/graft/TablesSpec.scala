@@ -39,7 +39,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   private def withTempDir[T](tag: String)(body: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory(tag).toFile
+    val dir = Scratch.fresh(tag).toFile
     try body(dir.toString)
     finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
