@@ -1,8 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
+import org.apache.spark.sql.execution.streaming.sources.MemoryPlan
 import org.apache.spark.sql.internal.SQLConf
 
 /** Plans a global ORDER BY over a small, already-computed input as one
@@ -16,13 +17,23 @@ import org.apache.spark.sql.internal.SQLConf
   * would pack that range shuffle into one partition anyway, both jobs buy
   * nothing: a single task sorts the same rows into the same order.
   *
-  * It fires only when every leaf below the sort is a materialized AQE
-  * query stage and the input's size (the stages' runtime statistics) is
-  * within the bound at which coalescing yields one partition, read from
-  * the session's `spark.sql.adaptive.coalescePartitions.*` and
-  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` confs. With AQE or
-  * coalescing off, in initial planning and in streaming there are no such
-  * stages, and the sort plans as before. Installed by
+  * It fires only when the sort's input has a known size within the bound
+  * at which coalescing yields one partition, read from the session's
+  * `spark.sql.adaptive.coalescePartitions.*` and
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` confs. The size is
+  * known in two cases:
+  *  - every leaf below the sort is a materialized AQE query stage (its
+  *    runtime statistics);
+  *  - the sort reads rows already in driver memory, through projections
+  *    and filters only: a non-streaming `LocalRelation` (a
+  *    `createDataFrame` over a local collection) or a `MemoryPlan` (what
+  *    `table(<memory sink>)` reads after a drained stream). Their row
+  *    counts are exact, and neither a projection nor a filter adds rows;
+  *    an operator that can (a generator, a join) is not trusted to the
+  *    estimate, since no exchange below it lets AQE correct the plan.
+  * With AQE or coalescing off, over any other input and in streaming (a
+  * `MemoryStream` batch is a `LocalRelation` marked streaming) the sort
+  * plans as before. Installed by
   * [[graft.Sessions.install]] and injected by `graft.expr.GraftExtensions`.
   */
 object SmallSortStrategy extends SparkStrategy {
@@ -36,11 +47,20 @@ object SmallSortStrategy extends SparkStrategy {
   private def oneTask(child: LogicalPlan): Boolean = {
     val leaves = child.collectLeaves()
     val conf = SQLConf.get
-    leaves.nonEmpty && leaves.forall {
+    (leaves.nonEmpty && leaves.forall {
       case q: LogicalQueryStage => q.isMaterialized
       case _ => false
-    } && conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled &&
-      child.stats.sizeInBytes <= oneTaskBytes(conf)
+    } || inMemory(child)) && conf.adaptiveExecutionEnabled &&
+      conf.coalesceShufflePartitionsEnabled && child.stats.sizeInBytes <= oneTaskBytes(conf)
+  }
+
+  /** Rows in driver memory under projections and filters only. */
+  private def inMemory(p: LogicalPlan): Boolean = p match {
+    case l: LocalRelation => !l.isStreaming
+    case _: MemoryPlan => true
+    case Project(_, c) => inMemory(c)
+    case Filter(_, c) => inMemory(c)
+    case _ => false
   }
 
   /** The largest shuffle AQE's coalescing always packs into one partition.

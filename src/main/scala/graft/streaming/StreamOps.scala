@@ -3,6 +3,7 @@ package graft.streaming
 import graft.{Det, Scratch}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -21,25 +22,44 @@ import org.apache.spark.sql.types._
   */
 object StreamOps {
 
-  /** Child session tuned for the drained-batch benchmark queries: a state
-    * store instance is created per shuffle partition per stateful
-    * operator, and at local[32] the 32-way store setup/commit machinery —
-    * not the data — dominated the wall time (r03: the st_* pair was 13.7 s
-    * of a 72.9 s suite). Each store commit then also spawned `chmod`, `ls`
-    * and `readlink` processes, which [[graft.LocalFs]] now avoids, so how
-    * much of that cost the partition count carries has to be measured
-    * again. 4 partitions keeps the same keyed-state semantics
-    * at a fraction of the fixed cost; on a real cluster you would size
-    * this to the stream's key cardinality instead. A child session scopes
-    * the override (and the memory-sink registration) away from the
-    * caller's session. It comes from [[graft.Sessions.child]], with
-    * artifact isolation off: Spark 4.1 keys its codegen cache by class
-    * loader, so an isolated child would recompile the stream's code on
-    * every run.
+  /** Child session for a stream, with its `spark.sql.shuffle.partitions`
+    * (the stream's state-store partitions) set once, at stream start:
+    * AQE's coalescing does not run inside a stream.
+    *  - A `perKey` stream (a session window, `flatMapGroupsWithState` or
+    *    `transformWithState`) folds every row through per-key code, so its
+    *    cost is CPU per row: it runs at the caller's
+    *    `spark.sql.shuffle.partitions`, capped at the cores the JVM runs
+    *    on, which spreads its keys over them. (Local mode can offer more
+    *    task slots than cores, as `graft.Bench`'s `local[32]` does on a
+    *    4-vCPU box; partitions past the cores add state stores, no
+    *    parallelism.)
+    *  - Every other stateful stream (aggregates, joins, dedup) runs one
+    *    partition. Each stateful operator opens and commits one state
+    *    store per partition per micro-batch, and at the repo's scales that
+    *    machinery, not the data, is the cost: against the former pin of
+    *    4 (4-vCPU box), a traced stream_sink run commits its state in
+    *    0.0015 s instead of 0.0125 s, and `graft.Bench` drains
+    *    st_tumbling_stream at sf0.1 in 0.14 s instead of 0.26 s. The
+    *    per-key streams were slower at one partition (st_sessionize_state
+    *    0.42 → 0.64 s), hence their rule above.
+    *  - With AQE's partition coalescing off, every stream runs at the
+    *    caller's count, as a batch shuffle would.
+    * The caller's settings are read from `s` before
+    * [[graft.Sessions.child]], since a `newSession()` inherits no runtime
+    * conf; the child scopes the override (and the memory-sink
+    * registration) away from the caller's session. [[graft.Sessions.child]]
+    * turns artifact isolation off, so the stream's generated code is
+    * compiled once per JVM, not per run.
     */
-  private def tuned(s: SparkSession): SparkSession = {
+  private def tuned(s: SparkSession, perKey: Boolean = false): SparkSession = {
+    val conf = s.sessionState.conf
+    val caller = conf.getConf(SQLConf.SHUFFLE_PARTITIONS)
+    val n =
+      if (!(conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled)) caller
+      else if (perKey) math.min(caller, Runtime.getRuntime.availableProcessors)
+      else 1
     val ss = graft.Sessions.child(s)
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
+    ss.conf.set(SQLConf.SHUFFLE_PARTITIONS.key, n.toString)
     ss
   }
 
@@ -439,7 +459,7 @@ object StreamOps {
 
   def asofStreamTol(s: SparkSession, d: String, tolUs: Long, sink: String)
       : (DataFrame, org.apache.spark.util.LongAccumulator) = {
-    val ss = tuned(s)
+    val ss = tuned(s, perKey = true)
     import ss.implicits._
     val evicted = ss.sparkContext.longAccumulator("graft_asof_evicted")
     val ev = graft.Tables.events(ss, d)
@@ -606,7 +626,7 @@ object StreamOps {
     */
   def asofTwsTelemetry(s: SparkSession, d: String)
       : (DataFrame, org.apache.spark.util.LongAccumulator) = {
-    val ss = tuned(s)
+    val ss = tuned(s, perKey = true)
     withRocksDb(ss)(asofTwsRun(ss, d))
   }
 
@@ -687,7 +707,7 @@ object StreamOps {
     * note documents.
     */
   def politenessStream(s: SparkSession, d: String): DataFrame = {
-    val ss = tuned(s)
+    val ss = tuned(s, perKey = true)
     import ss.implicits._
     val ev = graft.Tables.events(ss, d)
       .select(expr(
@@ -894,6 +914,11 @@ object StreamOps {
     * afterwards — without the restore, every streaming query that runs
     * LATER in the same session would silently switch provider
     * (order-dependent behavior + bench drift for the other st_* queries).
+    * Only the three transformWithState streams use it: at one state
+    * partition, RocksDB made st_tumbling_stream's `triggerExecution`
+    * slower than the HDFS-backed default (median of 20 warm runs at
+    * sf0.01, two rounds: 131/123 ms → 157/158 ms, 4-vCPU box), so the
+    * default stays for every other stream.
     */
   private def withRocksDb[T](ss: SparkSession)(body: => T): T = {
     val key = "spark.sql.streaming.stateStore.providerClass"
@@ -915,7 +940,7 @@ object StreamOps {
     * cleaned up — the spec's pin).
     */
   def politenessTwsTelemetry(s: SparkSession, d: String): (DataFrame, Long) = {
-    val ss = tuned(s)
+    val ss = tuned(s, perKey = true)
     withRocksDb(ss)(politenessTwsRun(ss, d))
   }
 
@@ -1330,7 +1355,7 @@ object StreamOps {
     * merge path is cross-validated against the window-function form.
     */
   def sessionBuiltinStream(s: SparkSession, d: String): DataFrame = {
-    val ss = tuned(s)
+    val ss = tuned(s, perKey = true)
     drain(eventsStream(ss, d)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
@@ -1380,7 +1405,7 @@ object StreamOps {
     * algebra (batch native / relational oracle / streaming state).
     */
   def sessionDynamicStream(s: SparkSession, d: String): DataFrame = {
-    val ss = tuned(s)
+    val ss = tuned(s, perKey = true)
     drain(eventsStream(ss, d)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"),
@@ -1656,7 +1681,7 @@ object StreamOps {
     * sessions, same batch oracle.
     */
   def sessionizeTws(s: SparkSession, d: String): DataFrame = {
-    val ss = tuned(s)
+    val ss = tuned(s, perKey = true)
     withRocksDb(ss)(sessionizeTwsRun(ss, d))
   }
 
@@ -1777,7 +1802,7 @@ object StreamOps {
     * counts. Oracle: the batch `ev_gap_regularity` SQL verbatim.
     */
   def regularityStream(s: SparkSession, d: String): DataFrame = {
-    val ss = tuned(s)
+    val ss = tuned(s, perKey = true)
     import ss.implicits._
     val evs = eventsStream(ss, d)
       .select(col("event_id"), col("ts"), col("user_id"),
@@ -1813,7 +1838,7 @@ object StreamOps {
     * counts. Oracle: the batch `ev_path_transitions` SQL verbatim.
     */
   def transitionsStream(s: SparkSession, d: String): DataFrame = {
-    val ss = tuned(s)
+    val ss = tuned(s, perKey = true)
     import ss.implicits._
     val evs = eventsStream(ss, d)
       .select(col("event_id"), col("ts"), col("user_id"),
@@ -1899,7 +1924,7 @@ object StreamOps {
     * session_window needs the whole session in flight.
     */
   def sessionizeStream(s: SparkSession, d: String): DataFrame = {
-    val ss = tuned(s)
+    val ss = tuned(s, perKey = true)
     import ss.implicits._
     val evs = eventsStream(ss, d)
       .select(col("event_id"), col("ts"), col("user_id"),

@@ -29,25 +29,48 @@ class GraphFamilySpec extends AnyFunSuite {
     "x_random_walk" -> (4, 2L))
 
   test("graph queries fire the pinned construction jobs and lineitem scans") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    // Each build runs under its own job group, and only jobs in that group
+    // count: the listener sees every job of the shared SparkContext,
+    // including ones other threads start meanwhile, which are kept apart
+    // as strays. On a mismatch the off queries' own jobs (each job's
+    // stages, with their task counts) and the strays are printed.
+    val group = "graft.GraphFamilySpec/"
+    val own = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.ConcurrentLinkedQueue[String]]()
+    val strays = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val prop = (k: String) => Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        val stages = e.stageInfos.map(i => s"${i.name} [${i.numTasks} tasks]").mkString(" + ")
+        prop("spark.jobGroup.id").filter(_.startsWith(group)) match {
+          case Some(g) => own.computeIfAbsent(g.stripPrefix(group),
+            _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
+            .add(s"job ${e.jobId}: $stages")
+          case None => strays.add(s"job ${e.jobId} (group " +
+            s"${prop("spark.jobGroup.id").getOrElse("none")}): " +
+            prop("spark.job.description").getOrElse(stages))
+        }
+      }
     }
+    import scala.jdk.CollectionConverters._
+    def jobsOf(q: String): Seq[String] = Option(own.get(q)).fold(Seq.empty[String])(_.asScala.toSeq)
     ScanCount.drainListenerBus(spark)
     spark.sparkContext.addSparkListener(listener)
     val got = try pinned.keys.toSeq.sorted.map { q =>
-      val before = jobs.get
+      spark.sparkContext.setJobGroup(group + q, q)
       // `during` drains the listener bus before it returns, so the job
       // count is complete too
-      val scans = ScanCount.during(spark, "lineitem") {
+      val scans = try ScanCount.during(spark, "lineitem") {
         SparkEntry.queries(q)(spark, sf)
-      }
-      q -> (jobs.get - before, scans)
+      } finally spark.sparkContext.clearJobGroup()
+      q -> (jobsOf(q).size, scans)
     }.toMap finally spark.sparkContext.removeSparkListener(listener)
     got.toSeq.sortBy(_._1).foreach { case (q, (j, n)) =>
       info(s"$q: $j jobs, $n lineitem scans") }
     val off = pinned.filter { case (q, v) => got(q) != v }
     assert(off.isEmpty, off.map { case (q, v) =>
-      s"$q: got ${got(q)}, pinned $v" }.mkString("; "))
+      s"$q: got ${got(q)}, pinned $v" + jobsOf(q).mkString("\n  ", "\n  ", "")
+    }.mkString("\n") + (if (strays.isEmpty) "" else
+      strays.asScala.mkString("\nstray jobs:\n  ", "\n  ", "")))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, InputAdapter, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -9,9 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.plans.SmallSortStrategy]]: once AQE has run a star query's
   * stages, its small final ORDER BY sorts in one task instead of a range
-  * shuffle; a session whose coalescing bound is below the input gets the
-  * range shuffle back; and the results of the fixed-point queries do not
-  * depend on the shuffle partition count.
+  * shuffle, and so does a sort over rows already in driver memory (a
+  * drained memory sink, a local `createDataFrame`); a session whose
+  * coalescing bound is below the input gets the range shuffle back; a
+  * streaming sort plans as before; and the results of the fixed-point
+  * queries do not depend on the shuffle partition count.
   */
 class SmallSortSpec extends AnyFunSuite {
   import TestSpark.spark
@@ -43,10 +45,16 @@ class SmallSortSpec extends AnyFunSuite {
     case _ => false
   }
 
-  private def withConf[T](k: String, v: String)(body: => T): T = {
-    val old = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  private def withConf[T](k: String, v: String)(body: => T): T =
+    SmallSortSpec.withConf(spark, k, v)(body)
+
+  /** Whether `nodes` hold a global sort whose child is a `CoalesceExec`. */
+  private def oneTaskSort(nodes: Seq[SparkPlan]): Boolean = nodes.exists {
+    case SortExec(_, true, c, _) => (c match {
+      case i: InputAdapter => i.child
+      case other => other
+    }).isInstanceOf[CoalesceExec]
+    case _ => false
   }
 
   private def run(name: String): DataFrame = {
@@ -60,14 +68,60 @@ class SmallSortSpec extends AnyFunSuite {
       val nodes = finalNodes(run(q))
       assert(rangeExchanges(nodes) == 0, s"$q still range-shuffles:\n" +
         nodes.head.treeString)
-      assert(nodes.exists {
-        case SortExec(_, true, c, _) => (c match {
-          case i: InputAdapter => i.child
-          case other => other
-        }).isInstanceOf[CoalesceExec]
-        case _ => false
-      }, s"$q: no single-task sort in\n${nodes.head.treeString}")
+      assert(oneTaskSort(nodes), s"$q: no single-task sort in\n${nodes.head.treeString}")
     }
+  }
+
+  test("a drained stream's final ORDER BY over its memory sink sorts in one task") {
+    val nodes = finalNodes(run("st_tumbling_stream"))
+    assert(rangeExchanges(nodes) == 0 && oneTaskSort(nodes),
+      s"st_tumbling_stream:\n${nodes.head.treeString}")
+  }
+
+  test("a sorted local createDataFrame frame sorts in one task, under the coalescing bound only") {
+    import spark.implicits._
+    def sorted() = {
+      val df = Seq((3L, "c"), (1L, "a"), (2L, "b")).toDF("k", "v").orderBy("k")
+      assert(df.collect().map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
+      finalNodes(df)
+    }
+    val nodes = sorted()
+    assert(rangeExchanges(nodes) == 0 && oneTaskSort(nodes), nodes.head.treeString)
+    withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1") {
+      assert(rangeExchanges(sorted()) == 1, "expected the range sort")
+    }
+  }
+
+  test("a sort over a generator on a local relation keeps its range exchange") {
+    import spark.implicits._
+    // the estimate of an explode is not a row count: the rule trusts only
+    // projections and filters over rows in driver memory
+    val df = Seq(Tuple1(Seq(3L, 1L, 2L))).toDF("xs")
+      .select(org.apache.spark.sql.functions.explode($"xs").as("x")).orderBy("x")
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
+    val nodes = finalNodes(df)
+    assert(rangeExchanges(nodes) == 1, nodes.head.treeString)
+  }
+
+  test("a MemoryStream complete-mode sort plans its range exchange as before") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    val input = MemoryStream[Long](spark)
+    val q = input.toDS().groupBy($"value" % 3 as "k").count().orderBy("k")
+      .writeStream.outputMode("complete").format("memory")
+      .queryName("graft_small_sort_stream").start()
+    try {
+      input.addData(5L, 1L, 3L, 4L)
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan
+      val ranges = plan.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }
+      assert(ranges.size == 1 && !oneTaskSort(plan.collect { case p => p }), plan.treeString)
+      assert(spark.table("graft_small_sort_stream").collect().map(_.getLong(0)).toSeq ==
+        Seq(0L, 1L, 2L))
+    } finally q.stop()
   }
 
   test("a coalescing bound below the input brings the range exchange back") {
@@ -86,17 +140,14 @@ class SmallSortSpec extends AnyFunSuite {
     }
   }
 
-  /** Rows with doubles compared by their bits. */
-  private def canonical(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq.map {
-    case d: Double => java.lang.Double.doubleToRawLongBits(d)
-    case other => other
-  })
+  import SmallSortSpec.canonical
 
   test("fixed-point query results are identical at 1, 4 and 7 shuffle partitions") {
     // every TpchOps query built on Det.dsum / davg / revenue / charge, the
     // star queries above and the stream whose aggregate uses Det.dsum
-    // (st_tumbling_stream runs in its own child session, which pins its
-    // shuffle partitions; for it this checks run-to-run identity)
+    // (with coalescing on, st_tumbling_stream runs one state partition
+    // whatever the caller's count, so for it this checks run-to-run
+    // identity; StreamPartitionSpec runs it at each count)
     val names = starQueries ++ Seq("tpch_q3", "tpch_q7", "tpch_q10", "tpch_q14",
       "tpch_q15", "tpch_q17", "tpch_q18", "tpch_q19", "tpch_q22",
       "st_tumbling_stream")
@@ -109,5 +160,20 @@ class SmallSortSpec extends AnyFunSuite {
       assert(rows(q) == at.head._2(q), s"$q differs at $n shuffle partitions vs 1")
     assert(names.forall(q => at.head._2(q).nonEmpty),
       s"every query must return rows: ${names.filter(q => at.head._2(q).isEmpty)}")
+  }
+}
+
+object SmallSortSpec {
+  /** Rows with doubles compared by their bits. */
+  def canonical(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq.map {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case other => other
+  })
+
+  /** Runs `body` with `k` set to `v` on `spark`, then restores it. */
+  def withConf[T](spark: SparkSession, k: String, v: String)(body: => T): T = {
+    val old = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
   }
 }

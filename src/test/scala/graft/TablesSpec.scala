@@ -70,8 +70,8 @@ class TablesSpec extends AnyFunSuite {
         ScanCount.drainListenerBus(spark)
         jobs.get - before
       }
-      loaders.map { case (t, load) => t -> jobsOf(load(spark, sf).schema) } :+
-        ("eventsTsType" -> jobsOf(Tables.eventsTsType(spark, sf)))
+      loaders.map { case (t, load) => t -> jobsOf(load(spark, sf).schema) } ++
+        scaleDirs.map(d => s"eventsTsType $d" -> jobsOf(Tables.eventsTsType(spark, d)))
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(perLoader.forall(_._2 == 0),
       perLoader.filter(_._2 != 0).map { case (t, n) => s"$t: $n jobs" }.mkString(", "))
